@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 
 /** Audit escape hatch for the house checkpoint-tail pattern
   * (persist → build output → localCheckpoint(true) → unpersist).
@@ -48,6 +48,13 @@ object PlanMode {
     * release() also ran non-blocking at query end. Multi-consumer
     * funnels and tails that must materialize before scratch-dir cleanup
     * (q_pipeline_checkpointed) keep checkpointTail.
+    *
+    * Contract: the caller must CONSUME the returned frame before any
+    * sweep (Bench.sweep's blocking unpersist, a test's cleanup, a
+    * caller's own release). The sweep frees the localCheckpoint blocks
+    * this lazy plan still reads, and those blocks have no lineage to
+    * recompute from, so an action after the sweep fails on missing
+    * blocks — consume first, sweep after.
     */
   def lazyTail(df: DataFrame): DataFrame = df
 
@@ -64,6 +71,36 @@ object PlanMode {
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
         df.checkpoint(eager = true)
       case None => df.localCheckpoint(true)
+    }
+
+  private val observeSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** checkpointTail that also OBSERVES `metric` (one aggregate column)
+    * on the same pass: `Dataset.observe` rides on the materialization
+    * checkpointTail runs anyway, so a caller that needs a driver-side
+    * number about the frame (a convergence sum, a row count) gets it
+    * without a second aggregation job over the checkpointed blocks.
+    * Returns the checkpointed frame (its plan holds no observe node) and
+    * the observed row. The value is read back synchronously from the
+    * checkpoint action's executed plan, in both the localCheckpoint and
+    * the reliable `spark.graft.checkpoint.dir` modes.
+    *
+    * Audit mode: checkpointTail is the identity, so nothing would
+    * materialize — the frame comes back unobserved (the audited plan is
+    * unchanged) and the metric is computed by one separate aggregate. A
+    * missing observed row is an error, never a default: a caller looping
+    * to a fixpoint on the value must not spin on a stale one.
+    */
+  def checkpointObserved(df: DataFrame, metric: Column): (DataFrame, Row) =
+    if (auditing) (df, df.agg(metric).head())
+    else {
+      val name = s"graft_observed_${observeSeq.incrementAndGet()}"
+      val observed = df.observe(name, metric)
+      val out = checkpointTail(observed)
+      val row = observed.queryExecution.observedMetrics.getOrElse(name,
+        throw new IllegalStateException(
+          s"observed metric $name missing after checkpoint materialization"))
+      (out, row)
     }
 
   /** Free the block storage behind a checkpointTail'd frame once every

@@ -1,5 +1,5 @@
-// dev probe — not part of the library (the ProfileRec pattern,
-// generalized): per-stage decomposition of any registered query.
+// dev probe — not part of the library: per-stage decomposition of any
+// registered query.
 package graft
 
 import scala.collection.mutable.ArrayBuffer

@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.util.concurrent.atomic.AtomicLong
 
-/** Dev probe (TimeOne's sibling): STAGE-SPLIT timings for the
+/** Dev probe: STAGE-SPLIT timings for the
   * slowest 100×-diverse rows — candidate-generation vs verify for the
   * pair operators, per-expression CPU decomposition for the scan-bound
   * ones — each probe with wall, executor-CPU, and shuffle bytes, so

@@ -25,19 +25,26 @@ object Tables {
     * rewritten directory (overwrite in tests, recompaction in prod)
     * changes the signature and takes the miss path. Keyed on the session
     * object: a new session never sees another session's relations.
+    *
+    * Only FLAT directories are cached. The signature lists one level, so
+    * a partitioned layout (subdirectories) could rewrite a file inside a
+    * partition without moving it; such a listing never enters the cache
+    * and every read takes the miss path, so it is never served stale.
     */
   private final case class Sig(n: Int, bytes: Long, mtime: Long)
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String),
                                                (Sig, DataFrame)]()
+  private val Uncacheable = Sig(-1, -1L, -1L)
   private def sig(s: SparkSession, path: String): Sig =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
       val st = fs.listStatus(p)
-      Sig(st.length, st.map(_.getLen).sum,
-          if (st.isEmpty) -1L else st.map(_.getModificationTime).max)
-    } catch { case _: Throwable => Sig(-1, -1L, -1L) }
+      if (st.exists(_.isDirectory)) Uncacheable
+      else Sig(st.length, st.map(_.getLen).sum,
+               if (st.isEmpty) -1L else st.map(_.getModificationTime).max)
+    } catch { case scala.util.control.NonFatal(_) => Uncacheable }
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
@@ -47,7 +54,7 @@ object Tables {
     if (hit != null && now.n >= 0 && hit._1 == now) hit._2
     else {
       val df = spark.read.parquet(path)
-      if (now.n >= 0) cache.put(key, (now, df))
+      if (now.n >= 0) cache.put(key, (now, df)) else cache.remove(key)
       df
     }
   }

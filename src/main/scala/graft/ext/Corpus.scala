@@ -15,8 +15,10 @@ import org.apache.spark.sql.functions._
   * Scale posture: everything is signature-group-bys, bounded star-edge
   * joins, or windowed cumulative sums — no all-pairs work, no driver
   * collects. The connected-components loop is the one iterative operator;
-  * it converges in O(component diameter) rounds with each round a single
-  * equi-join + partial-aggregating min.
+  * it converges in O(log component diameter) rounds, each round a single
+  * equi-join + partial-aggregating min materialized by ONE checkpoint
+  * that also observes the round's convergence sum — no round fires a
+  * separate aggregation job.
   */
 object Corpus {
   type Q = (SparkSession, String) => DataFrame
@@ -43,16 +45,24 @@ object Corpus {
   /** Min-label propagation to fixpoint over a symmetric edge list:
     * returns (doc_id, label) where label is the component minimum.
     * Deterministic regardless of iteration schedule (the fixpoint is
-    * unique); each round is one equi-join + partial-aggregating min; the
-    * returned frame is localCheckpoint'd so its lineage is one stable
-    * scan, with every per-round cache released.
+    * unique); each round is one equi-join + partial-aggregating min,
+    * materialized by exactly one checkpoint (PlanMode.checkpointTail)
+    * on which the convergence sum Σlabel is OBSERVED — no separate
+    * aggregation job per round. The converged round's checkpoint is the
+    * returned frame, so its lineage is one stable scan, with every other
+    * per-round checkpoint released.
+    *
+    * Edges are expected between members of `vertices` (an edge to a
+    * non-vertex is ignored, as the propagation join ignores it).
     *
     * @param initLabels optional warm-start (doc_id, label) with
-    *   label(v) <= v and label(v) a member of v's component — e.g. the
-    *   star-rep minimum, which equals one full propagation round from
-    *   the identity labeling and so saves that round. Vertices missing
-    *   from the warm start fall back to identity (left join below), so
-    *   a partial warm start can never silently drop vertices.
+    *   label(v) <= v and label(v) a member of v's component. Absent, the
+    *   loop starts from one neighbor-min step over the identity labeling,
+    *   least(v, min(dst)), taken from the checkpointed edges (for the star
+    *   graphs of clusterLabelsOf that is exactly the star-rep minimum).
+    *   Vertices missing from a given warm start fall back to identity
+    *   (left join below), so a partial warm start can never silently
+    *   drop vertices.
     */
   def minLabelPropagate(vertices: DataFrame, edges: DataFrame,
                         initLabels: Option[DataFrame] = None): DataFrame = {
@@ -81,35 +91,49 @@ object Corpus {
     // round three tiny joins. Same rows: eager materialization of the
     // identical frames.
     val e = graft.PlanMode.checkpointTail(edges)
-    var labels = graft.PlanMode.checkpointTail(initLabels
-      .map(init => vertices.alias("v")
-        .join(init.alias("i"), col("v.doc_id") === col("i.doc_id"), "left")
-        .select(col("v.doc_id").as("doc_id"),
-                coalesce(col("i.label"), col("v.doc_id")).as("label")))
-      .getOrElse(vertices.select(col("doc_id"), col("doc_id").as("label"))))
-    // Convergence check without a compare-join: labels are per-vertex
-    // non-increasing, so Σlabel (exact decimal — ids can be huge at
-    // scale) strictly decreases on every round that changed anything.
-    // SUM over zero rows is NULL — map to 0 so an empty vertex set
-    // converges on the first round instead of NPE-ing on compareTo.
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val s = df.agg(sum(col("label").cast("decimal(38,0)")).as("s"))
-        .head().getDecimal(0)
-      if (s == null) java.math.BigDecimal.ZERO else s
-    }
-    var prevSum = labelSum(labels)
-    val spent = scala.collection.mutable.ArrayBuffer(labels)
-    var converged = false
-    var round = 0
-    while (!converged) {
+    // One neighbor-min step: each vertex takes the least of its own
+    // label and its neighbors' labels.
+    def nbrStep(labels: DataFrame): DataFrame = {
       val nbrMin = e
         .join(labels, e("dst") === labels("doc_id"))
         .groupBy(e("src")).agg(min(col("label")).as("nbr_label"))
-      val nbrStep = labels.alias("l")
+      labels.alias("l")
         .join(nbrMin, col("l.doc_id") === nbrMin("src"), "left")
         .select(col("l.doc_id").as("doc_id"),
                 least(col("l.label"),
                       coalesce(col("nbr_label"), col("l.label"))).as("label"))
+    }
+    // Convergence check without a compare-join: labels are per-vertex
+    // non-increasing, so Σlabel (exact decimal — ids can be huge at
+    // scale) strictly decreases on every round that changed anything.
+    // The sum is OBSERVED on the checkpoint that materializes the round
+    // anyway (PlanMode.checkpointObserved), so a round is one
+    // materialization with no separate aggregation job. SUM over zero
+    // rows is NULL — map to 0 so an empty vertex set converges on the
+    // first round instead of NPE-ing on compareTo.
+    def materialize(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val (out, row) = graft.PlanMode.checkpointObserved(df,
+        sum(col("label").cast("decimal(38,0)")).as("s"))
+      (out, Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
+    }
+    // Without a caller warm start, start from one neighbor-min step over
+    // the identity labeling — least(v, min(dst)) from the checkpointed
+    // edges, which is what a star-rep warm start computes, at no extra
+    // materialization. Audit mode starts from the identity itself, the
+    // plan it has always shown: its edges are not checkpointed, so the
+    // step would re-derive the edge pipeline inside the audited plan.
+    val identity = vertices.select(col("doc_id"), col("doc_id").as("label"))
+    var (labels, prevSum) = materialize(initLabels
+      .map(init => vertices.alias("v")
+        .join(init.alias("i"), col("v.doc_id") === col("i.doc_id"), "left")
+        .select(col("v.doc_id").as("doc_id"),
+                coalesce(col("i.label"), col("v.doc_id")).as("label")))
+      .getOrElse(if (graft.PlanMode.auditing) identity else nbrStep(identity)))
+    val spent = scala.collection.mutable.ArrayBuffer(labels)
+    var converged = false
+    var round = 0
+    while (!converged) {
+      val nbrStepped = nbrStep(labels)
       // Pointer-doubling shortcut (round-10): label(v) always names a
       // vertex w of v's own component with w <= v (see @param note), so
       // composing the labeling with itself — label(v) := label(label(v))
@@ -123,39 +147,32 @@ object Corpus {
       // while a real-diameter graph reaches the doubling exactly when
       // plain hash-to-min stops making fast progress.
       val raw =
-        if (round < 2) nbrStep
-        else nbrStep.alias("a")
-          .join(nbrStep.alias("b"), col("a.label") === col("b.doc_id"), "left")
+        if (round < 2) nbrStepped
+        else nbrStepped.alias("a")
+          .join(nbrStepped.alias("b"), col("a.label") === col("b.doc_id"), "left")
           .select(col("a.doc_id").as("doc_id"),
                   coalesce(col("b.label"), col("a.label")).as("label"))
-      // Each round's plan references the previous round's TWICE (join +
-      // neighbor-min), so lineage doubles per round. The star graphs of
-      // the dedup callers converge in ~3 rounds and never notice; a
-      // raw ε-neighbor graph (q_dbscan) has real diameter, and by round
-      // ~15 even stringifying the plan for the cache name OOMs the
-      // driver. Truncate lineage once past the star-graph regime —
-      // after materialization the blocks are the same either way, and
-      // plan audits (tiny fixtures, ≤3 rounds) still see deep plans.
       round += 1
-      // The shortcut references nbrStep twice, so un-truncated lineage
-      // would grow 4× per round (the analyzer's self-join deduplication
-      // clones one side — round ~8 OOMs the driver during planning);
-      // truncate from round 1, not round 4. Audit mode keeps rounds 1-2
+      // Each round's plan references the previous round's TWICE (join +
+      // neighbor-min) and the shortcut references the step twice again,
+      // so un-truncated lineage would grow 4× per round (the analyzer's
+      // self-join deduplication clones one side — round ~8 OOMs the
+      // driver during planning). The round's checkpoint truncates it.
+      // Audit mode (checkpointTail is the identity) keeps rounds 1-2
       // deep — every round has the identical shape, so the audit still
       // sees the full per-round join structure — then truncates too
       // (q_dbscan's real sf0.01 graph used to OOM the un-truncated
       // audit at 4^rounds).
-      val next =
-        if (!graft.PlanMode.auditing || round > 2) raw.localCheckpoint(false)
-        else raw.persist()
-      val s = labelSum(next)
+      val (next, s) = materialize(
+        if (!graft.PlanMode.auditing) raw
+        else if (round > 2) raw.localCheckpoint(false)
+        else raw.persist())
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       spent += next
-      // labelSum just materialized `next`, so the round-before-last
-      // cache is dead — release it now rather than holding O(rounds)
-      // copies of the label table in executor storage on high-diameter
-      // graphs.
+      // `next` is materialized, so the round-before-last labeling is
+      // dead — release it now rather than holding O(rounds) copies of
+      // the label table in executor storage on high-diameter graphs.
       if (spent.length > 2) {
         val dead = spent.remove(0)
         dead.unpersist()
@@ -163,13 +180,16 @@ object Corpus {
       }
       labels = next
     }
-    // Truncate the iterative lineage so the returned plan is one stable
-    // scan of the converged labels, then release the per-round caches
-    // (in audit mode the deep iterative plan is returned as-is).
-    val finalLabels = graft.PlanMode.checkpointTail(labels)
-    spent.foreach { df => df.unpersist(); graft.PlanMode.release(df) }
+    // The converged round's checkpoint IS the result: its lineage is one
+    // stable scan of the converged labels (in audit mode the deep
+    // iterative plan is returned as-is, its round cache dropped).
+    // Release everything else.
+    spent.foreach { df =>
+      df.unpersist()
+      if (!(df eq labels)) graft.PlanMode.release(df)
+    }
     graft.PlanMode.release(e)
-    finalLabels
+    labels
   }
 
   /** Shared blocking-graph component labeling: (doc_id, label) for EVERY
@@ -219,14 +239,18 @@ object Corpus {
       .distinct()
     val edges = e0
       .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-
-    // Warm start = min rep over the doc's groups ≡ the first propagation
-    // round from identity labels (each doc's neighbors are exactly its
-    // groups' reps; a rep's own group contributes itself) — one fewer
-    // join round to the same fixpoint.
-    val init = keyed.join(star, Seq("key"))
-      .groupBy(col("doc_id")).agg(min(col("rep")).as("label"))
-    minLabelPropagate(docsIn.select(col("doc_id")), edges, Some(init))
+    // No explicit warm start: the loop's default least(v, min(dst)) over
+    // these star edges IS the min rep over the doc's groups (each doc's
+    // neighbors are exactly its groups' reps; a rep's neighbors are its
+    // members, all larger), read from the checkpointed edge list instead
+    // of re-deriving keyed ⋈ star from the text. Audit mode (nothing is
+    // checkpointed) passes that star-rep minimum explicitly, so the
+    // audited plan keeps its shape.
+    val auditInit =
+      if (!graft.PlanMode.auditing) None
+      else Some(keyed.join(star, Seq("key"))
+        .groupBy(col("doc_id")).agg(min(col("rep")).as("label")))
+    minLabelPropagate(docsIn.select(col("doc_id")), edges, auditInit)
   }
 
   val qDedupCluster: Q = (s, d) => {

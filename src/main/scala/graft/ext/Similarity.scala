@@ -334,16 +334,21 @@ object Similarity {
   //  - sample membership is an md5-threshold decision, not an RNG;
   //  - seeds are the NumCells smallest sampled vec_ids (bounded collect);
   //  - each Lloyd update sums components in exact integer MICRO-UNITS
-  //    (round(x·1e6) as BIGINT — order-free across partitions, far from
-  //    overflow: |sum| < 2^53 up to ~2^32 sample rows), then takes the
-  //    mean with a single IEEE double division and casts to float —
-  //    bit-identical in both engines, no decimal→double rounding risk;
+  //    (round(x·1e6) HALF_UP as BIGINT — order-free across partitions,
+  //    far from overflow: |sum| < 2^53 up to ~2^32 sample rows), then
+  //    takes the mean with a single IEEE double division and casts to
+  //    float — bit-identical in both engines, no decimal→double rounding
+  //    risk;
   //  - assignment ranks cells by (dot desc, cell asc) with index-order
   //    double folds (FloatMatrixDotRank ≡ the SQL window).
   //
-  // At 100 TB each iteration is one partial-aggregated shuffle of
-  // O(NumCells·Dim) state plus a bounded NumCells·Dim driver collect;
-  // the corpus-side assignment stays a pure map.
+  // Each Lloyd step is ONE Spark job with no shuffle (lloydStep): every
+  // partition folds its rows into one long[] of micro-unit sums and
+  // counts (O(NumCells·Dim) state), and the driver merges those arrays —
+  // the integer sums are order-free, so this is the same codebook a
+  // per-(cell, dim) groupBy produces, float for float. At 100 TB a step
+  // is a map pass plus one small array per task; the corpus-side
+  // assignment stays a pure map.
   // ------------------------------------------------------------------
   val NumCells = 16
   val NProbe = 2
@@ -365,24 +370,60 @@ object Similarity {
       s"corpus sample smaller than $NumCells vectors")
     var mat: Array[Float] = seeds.flatten
     for (_ <- 1 to KmIters) {
-      val sums = sample
-        .select(element_at(
-                  VectorFunctions.matrixDotRank(col("embedding"), mat, Dim), 1)
-                  .as("cell"),
-                posexplode(col("embedding")).as(Seq("dim", "x")))
-        .groupBy(col("cell"), col("dim"))
-        .agg(sum(round(col("x").cast("double") * 1e6).cast("long")).as("s"),
-             count(lit(1)).as("n"))
-        .collect() // bounded: ≤ NumCells·Dim rows
-      val next = mat.clone()
-      sums.foreach { r =>
-        val c = r.getInt(0); val i = r.getInt(1)
-        next(c * Dim + i) =
-          (r.getLong(2).toDouble / (r.getLong(3).toDouble * 1e6)).toFloat
-      }
-      mat = next
+      mat = lloydStep(sample.select(
+        element_at(VectorFunctions.matrixDotRank(col("embedding"), mat, Dim), 1)
+          .as("cell"),
+        col("embedding").as("x")), mat, Dim)
     }
     mat
+  }
+
+  /** One exact Lloyd update as ONE Spark job with no shuffle. `rows` is
+    * (cell int, x array<float>): each row adds its vector to `cell`.
+    * `prev` is the row-major cells×dim codebook; the result replaces
+    * each (cell, dim) that received a value by the micro-unit mean
+    * Σ round(x·1e6, HALF_UP) / (n·1e6) cast to float, and keeps the
+    * previous value elsewhere (empty cells keep their centroid).
+    *
+    * Each partition folds its rows into one long[] of sums and counts
+    * and the driver adds the arrays. Integer addition is order-free, so
+    * the result equals the per-(cell, dim) groupBy-sum form bit for bit
+    * (`round` here is Spark's: java.math.BigDecimal.valueOf(d), HALF_UP,
+    * back to double, then cast to long; null vectors and null components
+    * are skipped as the groupBy form's posexplode and SUM skip them).
+    */
+  private[graft] def lloydStep(rows: DataFrame, prev: Array[Float],
+                               dim: Int): Array[Float] = {
+    val cells = prev.length / dim
+    val width = cells * dim // sums in [0, width), counts in [width, 2·width)
+    val acc = rows.queryExecution.toRdd.mapPartitions { it =>
+      val a = new Array[Long](2 * width)
+      it.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val base = r.getInt(0) * dim
+          val x = r.getArray(1)
+          val n = math.min(x.numElements(), dim)
+          var i = 0
+          while (i < n) {
+            if (!x.isNullAt(i)) {
+              a(base + i) += java.math.BigDecimal.valueOf(x.getFloat(i).toDouble * 1e6)
+                .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue().toLong
+            }
+            a(width + base + i) += 1
+            i += 1
+          }
+        }
+      }
+      Iterator.single(a)
+    }.reduce { (a, b) =>
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    Array.tabulate(width) { j =>
+      val n = acc(width + j)
+      if (n == 0) prev(j) else (acc(j).toDouble / (n.toDouble * 1e6)).toFloat
+    }
   }
 
   val qAnnIvf: Q = (s, d) => {
@@ -715,8 +756,8 @@ object Similarity {
 
   /** Train the PQ codebook: per-subspace seeds from the PqKSub smallest
     * md5-sampled vec_ids, plus one joint Lloyd step (all subspaces in a
-    * single partial-aggregated pass; micro-unit exact sums; empty cells
-    * keep their seed). Returns cents(m)(cell) = PqSubDim floats.
+    * single one-job lloydStep; micro-unit exact sums; empty cells keep
+    * their seed). Returns cents(m)(cell) = PqSubDim floats.
     */
   private[graft] def trainPqCodebook(e0: DataFrame): Array[Array[Array[Float]]] = {
     val sample = e0
@@ -733,33 +774,23 @@ object Similarity {
     // One Lloyd step, all subspaces at once: assign each (vector,
     // subspace) pair to its nearest sub-centroid via the native
     // (dot desc, cell asc) rank, then per-(m, cell, dim) micro-unit
-    // means. The collect is bounded: ≤ PqM·PqKSub·PqSubDim = 512 rows.
-    val coded = sample.select(col("vec_id"), col("embedding"),
-      explode(pqCodeStructs(col("embedding"), cents0)).as("c"))
-      .select(col("embedding"), col("c.m").as("m"), col("c.code").as("code"))
-    val sums = coded
-      .select(col("m"), col("code"),
-              posexplode(slice(col("embedding"), col("m") * PqSubDim + 1,
-                               lit(PqSubDim))).as(Seq("dim", "x")))
-      .groupBy(col("m"), col("code"), col("dim"))
-      .agg(sum(round(col("x").cast("double") * 1e6).cast("long")).as("s"),
-           count(lit(1)).as("n"))
-      .collect()
-    val next = cents0.map(_.map(_.clone()))
-    sums.foreach { r =>
-      val m = r.getInt(0); val c = r.getInt(1); val i = r.getInt(2)
-      next(m)(c)(i) =
-        (r.getLong(3).toDouble / (r.getLong(4).toDouble * 1e6)).toFloat
-    }
-    next
+    // means — the shared one-job lloydStep over PqM·PqKSub flat cells.
+    val pairs = sample
+      .select(col("embedding"),
+              explode(pqCodeStructs(col("embedding"), cents0)).as("c"))
+      .select((col("c.m") * PqKSub + col("c.code")).as("cell"),
+              slice(col("embedding"), col("c.m") * PqSubDim + 1, lit(PqSubDim))
+                .as("x"))
+    lloydStep(pairs, cents0.flatten.flatten, PqSubDim)
+      .grouped(PqSubDim).toArray.grouped(PqKSub).toArray
   }
 
   /** Map-only PQ encoder: array of (m, code) structs, one per subspace,
     * each code from a native matrixDotRank against that subspace's
     * sub-codebook — no join, no shuffle on the corpus side.
     */
-  private def pqCodeStructs(emb: Column,
-                            cents: Array[Array[Array[Float]]]): Column =
+  private[graft] def pqCodeStructs(emb: Column,
+                                   cents: Array[Array[Array[Float]]]): Column =
     array((0 until PqM).map { m =>
       struct(lit(m).as("m"),
              element_at(VectorFunctions.matrixDotRank(

@@ -43,15 +43,22 @@ object CorpusProps extends Properties("graft.Corpus") {
     }.toMap
   }
 
+  private def coldMatches(vs: List[Long], es: List[(Long, Long)]): Boolean = {
+    val vertices = vs.toDF("doc_id")
+    val e0 = es.toDF("src", "dst")
+    val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
+    val got = Corpus.minLabelPropagate(vertices, edges)
+      .as[(Long, Long)].collect().toMap
+    got == unionFind(vs, es)
+  }
+
   property("minLabelPropagate == union-find component minima") =
+    Prop.forAllNoShrink(graphGen) { case (vs, es) => coldMatches(vs, es) }
+
+  // the same, with every round on the reliable Dataset.checkpoint route
+  property("minLabelPropagate == union-find (reliable checkpoint dir)") =
     Prop.forAllNoShrink(graphGen) { case (vs, es) =>
-      val vertices = vs.toDF("doc_id")
-      val e0 = es.toDF("src", "dst")
-      val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
-      val got = Corpus.minLabelPropagate(vertices, edges)
-        .as[(Long, Long)].collect().toMap
-      val want = unionFind(vs, es)
-      got == want
+      TestSpark.withReliableCheckpointDir(coldMatches(vs, es))
     }
 
   // ------------------------------------------------------------------
@@ -155,19 +162,26 @@ object CorpusProps extends Properties("graft.Corpus") {
       before == after
     }
 
+  private def warmMatches(vs: List[Long], es: List[(Long, Long)]): Boolean = {
+    val vertices = vs.toDF("doc_id")
+    val e0 = es.toDF("src", "dst")
+    val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
+    // valid warm start: each vertex labeled with the min of itself and
+    // its direct neighbors (one manual propagation round)
+    val nbrMin = es.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2).min }
+    val init = vs.map(v => v -> math.min(v, nbrMin.getOrElse(v, v)))
+      .toDF("doc_id", "label")
+    val got = Corpus.minLabelPropagate(vertices, edges, Some(init))
+      .as[(Long, Long)].collect().toMap
+    got == unionFind(vs, es)
+  }
+
   property("warm-started propagation reaches the same fixpoint") =
+    Prop.forAllNoShrink(graphGen) { case (vs, es) => warmMatches(vs, es) }
+
+  property("warm-started propagation, reliable checkpoint dir") =
     Prop.forAllNoShrink(graphGen) { case (vs, es) =>
-      val vertices = vs.toDF("doc_id")
-      val e0 = es.toDF("src", "dst")
-      val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
-      // valid warm start: each vertex labeled with the min of itself and
-      // its direct neighbors (one manual propagation round)
-      val nbrMin = es.flatMap { case (a, b) => Seq(a -> b, b -> a) }
-        .groupBy(_._1).map { case (v, ns) => v -> ns.map(_._2).min }
-      val init = vs.map(v => v -> math.min(v, nbrMin.getOrElse(v, v)))
-        .toDF("doc_id", "label")
-      val got = Corpus.minLabelPropagate(vertices, edges, Some(init))
-        .as[(Long, Long)].collect().toMap
-      got == unionFind(vs, es)
+      TestSpark.withReliableCheckpointDir(warmMatches(vs, es))
     }
 }

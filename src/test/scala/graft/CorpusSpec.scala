@@ -13,32 +13,42 @@ class CorpusSpec extends AnyFunSuite {
   import spark.implicits._
   val sf = TestSpark.Sf
 
-  test("minLabelPropagate: chain + isolated vertex resolve to component minima") {
-    val vertices = Seq(1L, 2L, 3L, 4L, 7L).toDF("doc_id")
-    // chain 1-2-3 (needs transitive propagation), pair 4-7, symmetric
-    val e0 = Seq((1L, 2L), (2L, 3L), (4L, 7L)).toDF("src", "dst")
-    val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
-    val got = Corpus.minLabelPropagate(vertices, edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 7L -> 4L))
-  }
+  // The min-label cases run twice: in the default localCheckpoint mode
+  // and with spark.graft.checkpoint.dir set, so the convergence sum is
+  // also observed on the reliable Dataset.checkpoint route.
+  for ((reliable, suffix) <- Seq(false -> "", true -> " (reliable checkpoint dir)")) {
+    def run[A](body: => A): A =
+      if (reliable) TestSpark.withReliableCheckpointDir(body) else body
 
-  test("minLabelPropagate: star-of-stars converges (diameter > 1)") {
-    // two stars (10,[11,12]) and (20,[21,22]) bridged by edge 12-21:
-    // the minimum 10 must reach 22 across 3 hops.
-    val vertices = Seq(10L, 11L, 12L, 20L, 21L, 22L).toDF("doc_id")
-    val e0 = Seq((10L, 11L), (10L, 12L), (20L, 21L), (20L, 22L), (12L, 21L))
-      .toDF("src", "dst")
-    val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
-    val got = Corpus.minLabelPropagate(vertices, edges)
-      .as[(Long, Long)].collect().toMap
-    assert(got.values.toSet == Set(10L))
-  }
+    test("minLabelPropagate: chain + isolated vertex resolve to component minima" + suffix) {
+      val vertices = Seq(1L, 2L, 3L, 4L, 7L).toDF("doc_id")
+      // chain 1-2-3 (needs transitive propagation), pair 4-7, symmetric
+      val e0 = Seq((1L, 2L), (2L, 3L), (4L, 7L)).toDF("src", "dst")
+      val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
+      val got = run(Corpus.minLabelPropagate(vertices, edges)
+        .as[(Long, Long)].collect().toMap)
+      assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 7L -> 4L))
+    }
 
-  test("minLabelPropagate: empty vertex set returns empty labeling") {
-    val vertices = Seq.empty[Long].toDF("doc_id")
-    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
-    assert(Corpus.minLabelPropagate(vertices, edges).count() == 0)
+    test("minLabelPropagate: star-of-stars converges (diameter > 1)" + suffix) {
+      // two stars (10,[11,12]) and (20,[21,22]) bridged by edge 12-21:
+      // the minimum 10 must reach 22 across 3 hops.
+      val vertices = Seq(10L, 11L, 12L, 20L, 21L, 22L).toDF("doc_id")
+      val e0 = Seq((10L, 11L), (10L, 12L), (20L, 21L), (20L, 22L), (12L, 21L))
+        .toDF("src", "dst")
+      val edges = e0.unionByName(e0.select($"dst".as("src"), $"src".as("dst")))
+      val got = run(Corpus.minLabelPropagate(vertices, edges)
+        .as[(Long, Long)].collect().toMap)
+      assert(got.values.toSet == Set(10L))
+    }
+
+    test("minLabelPropagate: empty vertex set returns empty labeling" + suffix) {
+      // the observed SUM over zero rows is NULL and must read as 0, or
+      // the loop would never see the sum repeat
+      val vertices = Seq.empty[Long].toDF("doc_id")
+      val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+      assert(run(Corpus.minLabelPropagate(vertices, edges).count()) == 0)
+    }
   }
 
   test("q_dedup_cluster: components have size > 1 and contain their id") {

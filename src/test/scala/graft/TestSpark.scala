@@ -18,4 +18,20 @@ object TestSpark {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** Run `body` with spark.graft.checkpoint.dir set, so every
+    * PlanMode.checkpointTail takes the reliable Dataset.checkpoint route;
+    * the conf and the context's checkpoint directory are restored after.
+    */
+  def withReliableCheckpointDir[A](body: => A): A =
+    org.apache.spark.SparkTestHooks.restoringCheckpointDir(spark.sparkContext) {
+      spark.conf.set("spark.graft.checkpoint.dir", reliableDir)
+      try body
+      finally spark.conf.unset("spark.graft.checkpoint.dir")
+    }
+  private lazy val reliableDir: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.toURI.toString
+  }
 }
