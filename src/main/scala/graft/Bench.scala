@@ -1,70 +1,18 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.graftshim.BusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Shuffle-byte capture (the scale-decision currency: on a real
-    // cluster network bytes dominate long before local CPU does, so a
-    // byte regression between rounds must be visible in the committed
-    // artifact, not just wall-time noise).
-    val shufWrite = new AtomicLong; val shufRead = new AtomicLong
-    // Executor-CPU nanoseconds: the box-load-immune sibling of wall time.
-    // q_pagerank's wall has swung 2-4x across rounds on byte-identical
-    // plans (box noise); cpu_sec in the committed artifact lets the
-    // round-over-round audit separate "the plan got slower" from "the
-    // box was busy" without re-running anything.
-    val cpuNs = new AtomicLong
-    // Spill bytes: the constrained-heap rung's currency — a memory-starved
-    // operator should DEGRADE here (spill > 0, wall up) rather than OOM.
-    val memSpill = new AtomicLong; val diskSpill = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          cpuNs.addAndGet(m.executorCpuTime)
-          memSpill.addAndGet(m.memoryBytesSpilled)
-          diskSpill.addAndGet(m.diskBytesSpilled)
-        }
-      }
-    })
-    // Warm the JVM/codegen/file-index paths so startup cost isn't charged
-    // to whichever query happens to run first: touch every table's file
-    // index + footer, and run one shuffle + one broadcast-join shape so
-    // the generic exchange/codegen infrastructure is JIT'd. Guarded: a bad
-    // sf dir must surface as per-query -1 markers in the metric line, not
-    // a crash before any JSON is emitted.
-    // Each warmup step individually guarded: r7's events read threw and
-    // the single shared try skipped the join/codegen warmup entirely,
-    // inflating every alphabetically-early query 5-11× in the round
-    // artifact. One bad table must not cost the others their warmup.
-    def warm(what: String)(body: => Unit): Unit =
-      try body catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $what failed: ${e.getMessage}") }
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-                  "orders", "lineitem", "documents", "embeddings"))
-      warm(t)(spark.read.parquet(s"$sfDir/$t.parquet").count())
-    warm("events")(Tables.events(spark, sfDir).count())
-    warm("join-shape") {
-      val a = spark.range(100000L).selectExpr("id", "id % 100 AS k")
-      val b = spark.range(100L).selectExpr("id AS k", "id * 2 AS v")
-      a.join(org.apache.spark.sql.functions.broadcast(b), "k")
-        .groupBy("k").count().count()
-    }
+    val cpus = Harness.cpus(4)
+    val spark = Harness.session("graft-bench", cpus)
+    // Shuffle bytes, executor CPU and spill per query: a byte or CPU
+    // regression between rounds must be visible in the committed
+    // artifact, not just wall-time noise (q_pagerank's wall has swung
+    // 2-4x across rounds on byte-identical plans).
+    val metrics = Harness.metrics(spark)
+    Harness.warm(spark, sfDir)
     // Keep the sorted Seq end-to-end: deterministic execution AND output
     // key order. A failing query records -1 (not its time-to-throw) so
     // breakage is visible in the metric line instead of masked.
@@ -92,36 +40,6 @@ object Bench {
     case class R(name: String, first: Double, best: Double,
                  readMb: Double, writeMb: Double,
                  cpuSec: Double = 0.0, spillMb: Double = 0.0)
-    // Inter-query hygiene: drop any cache entries the query registered
-    // and nudge the ContextCleaner (weak-ref driven, so it only frees
-    // localCheckpoint/persist blocks after a GC). Without this, blocks
-    // and old-gen garbage accumulate across 123 queries x 2 runs and the
-    // tail of the run measures GC thrash, not the queries (r8: isolated
-    // q_embed_quantize 0.6 s vs 10.9 s late in a full sweep). Also keeps
-    // run 2 honest: a leaked persist from run 1 would under-measure it.
-    def sweep(): Unit = {
-      BusShim.drain(spark.sparkContext)
-      spark.sharedState.cacheManager.clearCache()
-      // localCheckpoint blocks (the checkpointTail queries) are NOT in
-      // the cache manager and are otherwise freed only when the async
-      // ContextCleaner processes the weak-ref queue — at 100x block
-      // sizes they pile up faster than the cleaner drains, pin the
-      // unevictable storage fraction, and starve execution memory (the
-      // whole-registry 100x sweep OOM'd mid-alphabet in an agg merge
-      // while every query passed in isolation). Drop them eagerly: the
-      // previous query's frames are dead by construction here.
-      // BLOCKING unpersist (round 15): with the eager-checkpoint
-      // materialization policy far more block storage is alive per
-      // query, and an async free lets the next query start while the
-      // previous one's blocks still occupy the heap — the 100×-diverse
-      // sweep OOM'd in q_prefix_jaccard (which passes in isolation at
-      // the same heap) from exactly that carryover. sweep() runs
-      // outside the timed region, so the synchronous free costs the
-      // measurement nothing.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
     // Rows whose steady-state wall exceeds this get a THIRD timing run:
     // the slow tail is where box-load noise hides real regressions (and
     // invents fake ones — q_pagerank re-litigated four rounds running);
@@ -148,11 +66,17 @@ object Bench {
       val w1 = runOnce(fn, name)
       if (w1 < 0) R(name, -1.0, -1.0, -1.0, -1.0, -1.0, -1.0)
       else {
-        sweep()
-        shufRead.set(0L); shufWrite.set(0L); cpuNs.set(0L)
-        memSpill.set(0L); diskSpill.set(0L)
+        // Inter-query hygiene, outside the timed region: without the
+        // sweep, blocks and old-gen garbage accumulate across the
+        // registry and the tail of the run measures GC thrash, not the
+        // queries (r8: isolated q_embed_quantize 0.6 s vs 10.9 s late in
+        // a full sweep). Also keeps run 2 honest: a leaked persist from
+        // run 1 would under-measure it.
+        PlanMode.sweep(spark)
+        metrics.reset()
         val w2 = runOnce(fn, name)
-        sweep()
+        PlanMode.sweep(spark)
+        val m = metrics.snapshot()
         // A failed run 2 leaves PARTIAL counters — record -1 markers
         // for ALL run-2-derived metrics (bytes, CPU, spill), not the
         // torn values, so the round-over-round comparison never reads
@@ -161,16 +85,16 @@ object Bench {
         // query and would seed an infinite-ratio flag when it recovers.
         if (w2 < 0) R(name, w1, w1, -1.0, -1.0, -1.0, -1.0)
         else {
-          val readMb = shufRead.get / 1048576.0
-          val writeMb = shufWrite.get / 1048576.0
-          val cpuSec = cpuNs.get / 1e9
-          val spillMb = (memSpill.get + diskSpill.get) / 1048576.0
+          val readMb = Harness.mb(m.shuffleReadBytes)
+          val writeMb = Harness.mb(m.shuffleWriteBytes)
+          val cpuSec = m.cpuNs / 1e9
+          val spillMb = Harness.mb(m.spillBytes)
           val best2 = math.min(w1, w2)
           val best =
             if (best2 < minOf3ThresholdSec) best2
             else {
               val w3 = runOnce(fn, name)
-              sweep()
+              PlanMode.sweep(spark)
               if (w3 < 0) best2 else math.min(best2, w3)
             }
           R(name, w1, best, readMb, writeMb, cpuSec, spillMb)
@@ -217,8 +141,7 @@ object Bench {
       sb.append(tail).toString
     }
     val artifact =
-      if (subset.isEmpty) "/root/repo/BENCH_LOCAL.json"
-      else "/root/repo/BENCH_SUBSET.json"
+      if (subset.isEmpty) "BENCH_LOCAL.json" else "BENCH_SUBSET.json"
     try {
       val w = new java.io.PrintWriter(artifact)
       try w.println(fullLine(sfDir)) finally w.close()

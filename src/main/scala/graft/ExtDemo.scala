@@ -1,11 +1,8 @@
 package graft
 object ExtDemo {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]").config("spark.sql.shuffle.partitions","4")
-      .config("spark.sql.extensions","graft.GraftExtensions")
-      .config("spark.ui.enabled","false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-ext-demo", 4,
+      conf = Seq("spark.sql.extensions" -> "graft.GraftExtensions"))
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .createOrReplaceTempView("embeddings")
     val r = spark.sql("SELECT vec_id, graft_norm(embedding) n, graft_dot(embedding, embedding) d, graft_hamming(vec_id, vec_id+1) h FROM embeddings ORDER BY vec_id LIMIT 3").collect()

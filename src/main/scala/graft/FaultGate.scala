@@ -114,24 +114,11 @@ object FaultGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER",
-                                   s"local-cluster[2,$cpus,4096]")
+                                   s"local-cluster[2,${Harness.cpus(8)},4096]")
     require(master.startsWith("local-cluster"),
             "FaultGate is only meaningful with real executor JVMs")
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-fault-gate")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-      .config("spark.executor.memory",
-              sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g"))
-      .config("spark.executor.extraJavaOptions",
-              org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-fault-gate", 8, Some(master))
     val report = new StringBuilder
     def log(s: String): Unit = { println(s"[faultgate] $s"); report ++= s + "\n" }
     var failures = 0
@@ -241,22 +228,20 @@ object FaultGate {
     log("")
     log("| query | re-consume after kill | rows == pre-kill |")
     log("|---|---|---|")
-    spark.conf.set("spark.graft.checkpoint.dir", ckptDir)
-    try iterative.foreach { n =>
-      awaitExecutors(spark, 2)
-      val df = qmap(n)(spark, sfDir)
-      val base = rows(df)
-      killAll()
-      val (outcome, eq) =
-        try { val r = rows(df); ("succeeded", r == base) }
-        catch { case e: Throwable => (s"FAILED: ${e.toString.take(160)}", false) }
-      if (!eq) failures += 1
-      log(s"| $n | $outcome | $eq |")
-    } finally {
-      spark.conf.unset("spark.graft.checkpoint.dir")
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(ckptDir))
-    }
+    try PlanMode.withConfs(spark, "spark.graft.checkpoint.dir" -> ckptDir) {
+      iterative.foreach { n =>
+        awaitExecutors(spark, 2)
+        val df = qmap(n)(spark, sfDir)
+        val base = rows(df)
+        killAll()
+        val (outcome, eq) =
+          try { val r = rows(df); ("succeeded", r == base) }
+          catch { case e: Throwable => (s"FAILED: ${e.toString.take(160)}", false) }
+        if (!eq) failures += 1
+        log(s"| $n | $outcome | $eq |")
+      }
+    } finally org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(ckptDir))
 
     // ----------------------------------------------------------------
     // D. scratch_redirect: the path knob under real executor JVMs.
@@ -266,12 +251,12 @@ object FaultGate {
     log("## D. spark.graft.scratchDir redirect under local-cluster")
     log("")
     val defRows = rows(qmap("q_pipeline_checkpointed")(spark, sfDir))
-    val scratch = new java.io.File("/root/repo/target/faultgate_scratch")
+    val scratch = new java.io.File("target/faultgate_scratch").getAbsoluteFile
     scratch.mkdirs()
-    spark.conf.set("spark.graft.scratchDir", scratch.toString)
     val redirected =
-      try rows(qmap("q_pipeline_checkpointed")(spark, sfDir))
-      finally spark.conf.unset("spark.graft.scratchDir")
+      PlanMode.withConfs(spark, "spark.graft.scratchDir" -> scratch.toString) {
+        rows(qmap("q_pipeline_checkpointed")(spark, sfDir))
+      }
     val dEq = redirected == defRows
     if (!dEq) failures += 1
     log(s"q_pipeline_checkpointed with scratchDir=$scratch (non-tmp, " +
@@ -291,23 +276,12 @@ object FaultGate {
     val sroot = java.nio.file.Files
       .createTempDirectory("graft_fault_stream").toString
     val ssrc = s"$sroot/src"
-    new java.io.File(ssrc).mkdirs()
     val sdocs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
               col("n_chars"))
     val sTotal = sdocs.count()
     val nSlice = 6
-    for (i <- 0 until nSlice) {
-      val tmp = s"$sroot/slice_$i"
-      sdocs.filter(pmod(col("doc_id"), lit(nSlice)) === i)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(
-        part.toPath,
-        java.nio.file.Paths.get(s"$ssrc/documents_$i.parquet"))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    Harness.writeSlices(sdocs, nSlice, ssrc)
     val sbench = sdocs.filter(col("doc_id") % 50 === 0)
     def ledgerRows(root: String, sub: String,
                    schema: org.apache.spark.sql.types.StructType,
@@ -396,7 +370,7 @@ object FaultGate {
     log("")
     log(s"**Gate result: ${if (failures == 0) "PASS" else s"$failures FAILURE(S)"}**")
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/docs/FAULT_GATE.md"),
+      java.nio.file.Paths.get("docs/FAULT_GATE.md"),
       report.toString)
     spark.stop()
     if (failures > 0) sys.exit(1)

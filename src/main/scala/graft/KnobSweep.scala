@@ -1,11 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.graftshim.BusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** Tuning-response matrix for the `spark.graft.*` caps (dev tool; the
   * committed table lives in docs/KNOBS.md).
   *
@@ -23,27 +17,9 @@ import org.apache.spark.sql.SparkSession
 object KnobSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-knob-sweep")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val shufR = new AtomicLong(0L)
-    val shufW = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val cpus = Harness.cpus(32)
+    val spark = Harness.session("graft-knob-sweep", cpus)
+    val metrics = Harness.metrics(spark)
 
     // knob -> the registry query whose candidate generation it caps.
     val flagship = Map(
@@ -53,14 +29,6 @@ object KnobSweep {
       "spark.graft.simhash.bandMaxDf" -> "q_dedup_simhash",
       "spark.graft.winnow.maxDf"      -> "q_winnow_fingerprint",
       "spark.graft.dbscan.bandMaxDf"  -> "q_dbscan")
-
-    def sweep(): Unit = {
-      BusShim.drain(spark.sparkContext)
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
 
     val report = new StringBuilder
     report ++= "# spark.graft.* tuning-response curves\n\n"
@@ -83,24 +51,26 @@ object KnobSweep {
       // and file-index cost and the "curve" is mostly warm-up shape
       // (first sweep: maxGramDf ¼× read 15.5 s vs 1.2 s at 4× — a
       // LOWER candidate cap cannot cost 13× more).
-      try { fn(spark, sfDir).queryExecution.toRdd.count(); sweep() }
+      try fn(spark, sfDir).queryExecution.toRdd.count()
       catch { case _: Throwable => () }
       for (v <- Seq(math.max(1L, default / 4), default, default * 4)) {
-        sweep()
-        shufR.set(0L); shufW.set(0L)
+        PlanMode.sweep(spark)
+        metrics.reset()
         val isDefault = v == default
-        if (!isDefault) spark.conf.set(key, v.toString)
+        val conf = if (isDefault) Nil else Seq(key -> v.toString)
         val t0 = System.nanoTime()
-        val row =
+        val row = PlanMode.withConfs(spark, conf: _*) {
           try {
             val n = fn(spark, sfDir).queryExecution.toRdd.count()
             val w = (System.nanoTime() - t0) / 1e9
+            val m = metrics.snapshot()
             f"| `$key`${if (isDefault) " (default)" else ""} | $v | $n | $w%.2f | " +
-              f"${shufR.get / 1048576.0}%.1f / ${shufW.get / 1048576.0}%.1f |"
+              f"${Harness.mb(m.shuffleReadBytes)}%.1f / ${Harness.mb(m.shuffleWriteBytes)}%.1f |"
           } catch { case e: Throwable =>
             bad += 1
             s"| `$key` | $v | FAILED: ${e.toString.take(120)} | | |"
-          } finally if (!isDefault) spark.conf.unset(key)
+          }
+        }
         report ++= row + "\n"
         println(s"[knobsweep] $row")
       }
@@ -122,7 +92,7 @@ response an operator consults before raising a cap at 100 TB
 (4× a cap ⇒ up to ~2× candidate bytes here, still zero row change).
 """
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/docs/KNOBS.md"), report.toString)
+      java.nio.file.Paths.get("docs/KNOBS.md"), report.toString)
     spark.stop()
     if (bad > 0) sys.exit(1)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** Audit escape hatch for the house checkpoint-tail pattern
   * (persist → build output → localCheckpoint(true) → unpersist).
@@ -31,32 +31,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   */
 object PlanMode {
   def auditing: Boolean = sys.props.get("graft.plan.audit").contains("1")
-
-  /** Single-consumer FINAL tail (round 16). A query's returned frame has
-    * exactly one consumer — the harness action (bench count / verify
-    * write / a caller's own sink). Checkpointing it buys zero reuse and
-    * costs one extra materialization job plus a block write + re-read of
-    * the full result: measured as part of the ~0.4-0.9 s fixed per-query
-    * floor that dominates the registry at sf0.1 (VERDICT r15 §scaling).
-    * So the final tail stays LAZY. The checkpointed intermediates the
-    * plan references are leaf-lineage blocks that CANNOT be released
-    * here (truncated lineage — an eager release would break the one
-    * consumer, which is why the old pattern materialized the tail
-    * first); they stay cached until the harness's inter-query sweep
-    * (Bench.sweep's blocking unpersist) or the ContextCleaner frees
-    * them — the same lifetime they had under the old pattern, whose
-    * release() also ran non-blocking at query end. Multi-consumer
-    * funnels and tails that must materialize before scratch-dir cleanup
-    * (q_pipeline_checkpointed) keep checkpointTail.
-    *
-    * Contract: the caller must CONSUME the returned frame before any
-    * sweep (Bench.sweep's blocking unpersist, a test's cleanup, a
-    * caller's own release). The sweep frees the localCheckpoint blocks
-    * this lazy plan still reads, and those blocks have no lineage to
-    * recompute from, so an action after the sweep fails on missing
-    * blocks — consume first, sweep after.
-    */
-  def lazyTail(df: DataFrame): DataFrame = df
 
   def checkpointTail(df: DataFrame): DataFrame =
     if (auditing) df
@@ -117,27 +91,47 @@ object PlanMode {
         // tail materializes), where a synchronous block-removal wait
         // adds ~0.1-0.5 s per checkpoint-heavy query (measured as a
         // broad bench smear). Cross-QUERY carryover — the 100×-diverse
-        // OOM class — is handled by Bench.sweep()'s BLOCKING unpersist
+        // OOM class — is handled by sweep()'s BLOCKING unpersist
         // between queries; in-query frees only need to be enqueued.
         l.rdd.unpersist(blocking = false)
       case _ => ()
     }
 
-  /** Run `body` with AQE off, restoring the prior setting after.
+  /** Inter-query release: drop every CacheManager entry, unpersist every
+    * persistent RDD BLOCKING, then GC. Run it between queries in any
+    * loop over the registry (Bench, Verify, KnobSweep, Probe).
     *
-    * For iterative tails (label propagation, power iteration) every
-    * round/stage is a tiny action over inputs already bounded by
-    * construction (star edges, capped ε/Hamming candidate graphs) and
-    * keyed by uniform ids — the regime where adaptive replanning's
-    * per-query-stage driver round-trip is pure latency (measured ~45%
-    * of per-round wall on q_dbscan's sf0.1 ε-graph) and its
-    * skew/broadcast rescue has nothing to improve. Scoped: everything
-    * outside the iterative body keeps AQE.
+    * localCheckpoint blocks live outside the CacheManager and are
+    * otherwise freed only when the async ContextCleaner processes its
+    * weak-ref queue; at 100× block sizes they pile up faster than the
+    * cleaner drains, pin the unevictable storage fraction and starve
+    * execution memory (the whole-registry 100× sweep OOM'd mid-alphabet
+    * while every query passed in isolation). The free is blocking so the
+    * next query cannot start while the previous one's blocks still
+    * occupy the heap (the 100×-diverse sweep OOM'd in q_prefix_jaccard
+    * from exactly that carryover).
+    *
+    * Contract: CONSUME a query's frame before sweeping. A returned frame
+    * is lazy — its plan may read checkpointTail'd leaf blocks that have
+    * no lineage to recompute from — so an action after the sweep fails
+    * on missing blocks.
     */
-  def withoutAqe[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A = {
-    val before = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
+  def sweep(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+  }
+
+  /** Run `body` with each `key -> value` set on the session, restoring
+    * every key after: a key that was set gets its old value back, a key
+    * that was unset is unset again.
+    */
+  def withConfs[A](spark: SparkSession, kv: (String, String)*)(body: => A): A = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally spark.conf.set("spark.sql.adaptive.enabled", before)
+    finally before.foreach { case (k, old) =>
+      old.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
 }

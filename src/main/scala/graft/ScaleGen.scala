@@ -174,14 +174,7 @@ object ScaleGen {
     val mode = args.lift(3).getOrElse("copy") // copy | diverse | stress
     val diverse = mode == "diverse" || mode == "stress"
     val stopMix = if (mode == "stress") StopMix else 0.0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scale-gen", 16)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     StaticDims.foreach { t =>
       spark.read.parquet(s"$src/$t.parquet")
@@ -196,7 +189,7 @@ object ScaleGen {
     // files; a real corpus has thousands of row groups and never hits
     // this). Round-robin repartition, not coalesce: copies arrive
     // unioned in copy order, and coalesce would keep copy-skewed files.
-    val nFiles = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val nFiles = Harness.cpus(16)
     ShiftCols.foreach { case (t, cols) =>
       val df = spark.read.parquet(s"$src/$t.parquet")
       val out = (t, diverse) match {

@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
 import graft.ops.Ops
-import org.apache.spark.graftshim.BusShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Head-to-head: MANUAL salting (q_salted_join / q_topk_salted's
@@ -46,27 +42,12 @@ import org.apache.spark.sql.functions._
   */
 object SkewBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Harness.cpus(32)
     val rows = sys.env.getOrElse("SPARK_GRAFT_SKEW_ROWS", "20000000").toLong
     val nKeys = 200000L
     val hotShare = 0.5 // fraction of fact rows on the single hot key
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val shufR = new AtomicLong; val shufW = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val spark = Harness.session("graft-skew-bench", cpus)
+    val metrics = Harness.metrics(spark)
 
     // Hot key 0 takes every even id (hotShare=0.5); odd ids spread
     // uniformly. Payload widens rows so shuffle sizes are realistic.
@@ -105,26 +86,20 @@ object SkewBench {
                    outScore = "score", outId = "id")
         .groupBy().agg(count(lit(1)).as("n"), sum(col("score")).as("sv"))
 
-    def withConfs[A](kv: (String, String)*)(body: => A): A = {
-      val olds = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-      kv.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally olds.foreach { case (k, o) =>
-        o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-    }
     def time(fn: () => DataFrame): Double = {
       val t0 = System.nanoTime()
       fn().queryExecution.toRdd.count()
       (System.nanoTime() - t0) / 1e9
     }
     def bestOf3(fn: () => DataFrame): (Double, Double, Double) = {
-      BusShim.drain(spark.sparkContext)
-      spark.sharedState.cacheManager.clearCache()
-      val walls = (1 to 3).map { i =>
-        shufR.set(0); shufW.set(0)
-        val w = time(fn); BusShim.drain(spark.sparkContext); w
+      PlanMode.sweep(spark)
+      val runs = (1 to 3).map { _ =>
+        metrics.reset()
+        val w = time(fn); (w, metrics.snapshot())
       }
-      (walls.min, shufR.get / 1048576.0, shufW.get / 1048576.0)
+      val last = runs.last._2 // bytes of the last (steady-state) run
+      (runs.map(_._1).min, Harness.mb(last.shuffleReadBytes),
+       Harness.mb(last.shuffleWriteBytes))
     }
 
     // Shuffle-join regime: no broadcast; AQE skew thresholds scaled to
@@ -151,33 +126,33 @@ object SkewBench {
     // exact equality holds regardless of summation order.
     def rowsOf(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
-    val refJoin = withConfs(skewTuned: _*)(rowsOf(plainJoin()))
-    val saltedRows = withConfs(noAqe: _*)(rowsOf(saltedJoin()))
+    val refJoin = PlanMode.withConfs(spark, skewTuned: _*)(rowsOf(plainJoin()))
+    val saltedRows = PlanMode.withConfs(spark, noAqe: _*)(rowsOf(saltedJoin()))
     require(refJoin == saltedRows,
       s"salted join diverged from plain join — abort\n plain=$refJoin\n salted=$saltedRows")
-    val refTopk = withConfs(skewTuned: _*)(rowsOf(topkWindow()))
-    val topkSaltedRows = withConfs(skewTuned: _*)(rowsOf(topkSalted()))
-    val topkHeapRows = withConfs(skewTuned: _*)(rowsOf(topkHeap()))
+    val refTopk = PlanMode.withConfs(spark, skewTuned: _*)(rowsOf(topkWindow()))
+    val topkSaltedRows = PlanMode.withConfs(spark, skewTuned: _*)(rowsOf(topkSalted()))
+    val topkHeapRows = PlanMode.withConfs(spark, skewTuned: _*)(rowsOf(topkHeap()))
     require(refTopk == topkSaltedRows,
       s"salted top-K diverged from window top-K — abort\n window=$refTopk\n salted=$topkSaltedRows")
     require(refTopk == topkHeapRows,
       s"heap top-K diverged from window top-K — abort\n window=$refTopk\n heap=$topkHeapRows")
 
     val out = scala.collection.mutable.LinkedHashMap[String, (Double, Double, Double)]()
-    out("join_aqe_skew") = withConfs(skewTuned: _*)(bestOf3(() => plainJoin()))
-    out("join_aqe_noskew") = withConfs(aqeNoSkew: _*)(bestOf3(() => plainJoin()))
-    out("join_noaqe") = withConfs(noAqe: _*)(bestOf3(() => plainJoin()))
-    out("join_salted_noaqe") = withConfs(noAqe: _*)(bestOf3(() => saltedJoin()))
-    out("join_salted_aqe") = withConfs(skewTuned: _*)(bestOf3(() => saltedJoin()))
-    out("topk_window") = withConfs(skewTuned: _*)(bestOf3(() => topkWindow()))
-    out("topk_salted") = withConfs(skewTuned: _*)(bestOf3(() => topkSalted()))
-    out("topk_heap") = withConfs(skewTuned: _*)(bestOf3(() => topkHeap()))
+    out("join_aqe_skew") = PlanMode.withConfs(spark, skewTuned: _*)(bestOf3(() => plainJoin()))
+    out("join_aqe_noskew") = PlanMode.withConfs(spark, aqeNoSkew: _*)(bestOf3(() => plainJoin()))
+    out("join_noaqe") = PlanMode.withConfs(spark, noAqe: _*)(bestOf3(() => plainJoin()))
+    out("join_salted_noaqe") = PlanMode.withConfs(spark, noAqe: _*)(bestOf3(() => saltedJoin()))
+    out("join_salted_aqe") = PlanMode.withConfs(spark, skewTuned: _*)(bestOf3(() => saltedJoin()))
+    out("topk_window") = PlanMode.withConfs(spark, skewTuned: _*)(bestOf3(() => topkWindow()))
+    out("topk_salted") = PlanMode.withConfs(spark, skewTuned: _*)(bestOf3(() => topkSalted()))
+    out("topk_heap") = PlanMode.withConfs(spark, skewTuned: _*)(bestOf3(() => topkHeap()))
 
     // Trigger proof: the AQE-skew claim must come from the plan, not be
     // inferred from wall times — execute the plain join under the tuned
     // confs and report whether the final adaptive plan's sort-merge join
     // carries the skew=true marker (and how many partition splits ran).
-    val skewMarker = withConfs(skewTuned: _*) {
+    val skewMarker = PlanMode.withConfs(spark, skewTuned: _*) {
       val df = plainJoin()
       df.queryExecution.toRdd.count()
       val plan = df.queryExecution.executedPlan.toString
@@ -191,7 +166,7 @@ object SkewBench {
     }.mkString(",")
     val line = s"""{"metric":"skew_headtohead","rows":$rows,"n_keys":$nKeys,"hot_share":$hotShare,"cpus":$cpus,"protocol":"min-of-3","aqe_skew_triggered":$skewMarker,"variants":{$body}}"""
     try {
-      val w = new java.io.PrintWriter("/root/repo/docs/SKEWBENCH.json")
+      val w = new java.io.PrintWriter("docs/SKEWBENCH.json")
       try w.println(line) finally w.close()
     } catch { case e: Throwable =>
       System.err.println(s"[skewbench] cannot write: ${e.getMessage}") }

@@ -1,10 +1,7 @@
 package graft
 
 import graft.streaming.{CorpusStream, PipelineStream, SubstringStream}
-import org.apache.spark.graftshim.BusShim
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Ingest-rate bench for the three production-critical streaming
   * surfaces (PipelineStream, SubstringStream, CorpusStream): a curation
@@ -31,35 +28,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Harness.cpus(4)
     val nSlices = sys.env.getOrElse("SPARK_GRAFT_STREAM_SLICES", "8").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // Per-batch progress via the engine's own listener (events ride the
-    // shared LiveListenerBus — BusShim.drain flushes them before reads).
-    case class P(name: String, batchId: Long, rows: Long, ms: Long)
-    val progress = new scala.collection.mutable.ArrayBuffer[P]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(
-        e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-        e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-        e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        progress.synchronized {
-          progress += P(p.name, p.batchId, p.numInputRows,
-                        Option(p.durationMs.get("triggerExecution"))
-                          .map(_.longValue).getOrElse(-1L))
-        }
-      }
-    })
+    val spark = Harness.session("graft-stream-bench", cpus)
+    val progress = Harness.streamProgress(spark)
 
     // ---- slice prep: N single-file crawl slices -----------------------
     val pid = ProcessHandle.current().pid()
@@ -68,36 +40,22 @@ object StreamBench {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(work), true)
     val srcDir = s"$work/src"
-    new java.io.File(srcDir).mkdirs()
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"),
               col("n_chars"))
     val totalRows = docs.count()
-    for (i <- 0 until nSlices) {
-      val tmp = s"$work/slice_$i"
-      docs.filter(pmod(col("doc_id"), lit(nSlices)) === i)
-        .coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for slice $i"))
-      java.nio.file.Files.move(
-        part.toPath,
-        java.nio.file.Paths.get(s"$srcDir/documents_$i.parquet"))
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
+    Harness.writeSlices(docs, nSlices, srcDir)
     val bench = docs.filter(col("doc_id") % 50 === 0).localCheckpoint(true)
 
-    case class S(rows: Long, wall: Double, batches: Seq[P])
+    case class S(rows: Long, wall: Double, batches: Seq[Harness.Progress])
     def measure(name: String)(body: => Unit): S = {
-      progress.synchronized(progress.clear())
+      progress.clear()
       val t0 = System.nanoTime()
       body
       val wall = (System.nanoTime() - t0) / 1e9
-      BusShim.drain(spark.sparkContext)
       // The final empty AvailableNow batch (0 rows) is commit overhead,
       // not ingest — keep only row-carrying batches for latency stats.
-      val ps = progress.synchronized(
-        progress.filter(p => p.name == name && p.rows > 0).toVector)
+      val ps = progress.snapshot().filter(p => p.name == name && p.rows > 0)
       S(ps.map(_.rows).sum, wall, ps)
     }
 
@@ -144,7 +102,7 @@ object StreamBench {
         "failing WITHOUT writing STREAMBENCH.json")
     } else {
       try {
-        val w = new java.io.PrintWriter("/root/repo/STREAMBENCH.json")
+        val w = new java.io.PrintWriter("STREAMBENCH.json")
         try w.println(line) finally w.close()
       } catch { case e: Throwable =>
         System.err.println(s"[streambench] cannot write STREAMBENCH.json: ${e.getMessage}") }

@@ -3,10 +3,8 @@ package graft
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.streaming.PipelineStream
-import org.apache.spark.graftshim.BusShim
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.Trigger
 
 /** Steady-state soak for the flagship streaming surface (dev tool; the
   * committed evidence is the `soak` section of STREAMBENCH.json).
@@ -45,31 +43,10 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, Trigger}
 object StreamSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val soakSec = sys.env.getOrElse("SPARK_GRAFT_SOAK_SEC", "300").toInt
     val sliceRows = sys.env.getOrElse("SPARK_GRAFT_SOAK_SLICE", "5000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-soak")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    case class P(batchId: Long, rows: Long, ms: Long, at: Long)
-    val progress = new scala.collection.mutable.ArrayBuffer[P]()
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
-        progress.synchronized {
-          progress += P(e.progress.batchId, e.progress.numInputRows,
-            Option(e.progress.durationMs.get("triggerExecution"))
-              .map(_.longValue).getOrElse(-1L),
-            System.nanoTime())
-        }
-    })
+    val spark = Harness.session("graft-stream-soak", 32)
+    val progress = Harness.streamProgress(spark)
 
     val pid = ProcessHandle.current().pid()
     val work = s"${GraftConf.scratchDir(spark)}/graft_soak_p$pid"
@@ -84,19 +61,8 @@ object StreamSoak {
     val totalRows = docs.count()
     val nPool = math.max(2, (totalRows / sliceRows).toInt)
     val poolDir = s"$work/pool"
-    new java.io.File(poolDir).mkdirs()
-    val poolRows = new Array[Long](nPool)
-    for (i <- 0 until nPool) {
-      val tmp = s"$work/slice_$i"
-      val part = docs.filter(pmod(col("doc_id"), lit(nPool)) === i)
-      poolRows(i) = part.count()
-      part.coalesce(1).write.parquet(tmp)
-      val f = new java.io.File(tmp).listFiles()
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part for slice $i"))
-      Files.move(f.toPath, Paths.get(s"$poolDir/pool_$i.parquet"))
-      fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-    }
+    val pool = Harness.writeSlices(docs, nPool, poolDir)
+    val poolRows = pool.map(spark.read.parquet(_).count())
     val bench = docs.filter(col("doc_id") % 50 === 0).localCheckpoint(true)
 
     // ---- calibration: per-slice batch wall via a 3-slice catch-up ----
@@ -105,15 +71,12 @@ object StreamSoak {
     new java.io.File(calSrc).mkdirs()
     val calN = math.min(3, nPool) // pool may hold only 2 slices at small sf
     for (i <- 0 until calN)
-      Files.copy(Paths.get(s"$poolDir/pool_$i.parquet"),
-                 Paths.get(s"$calSrc/documents_$i.parquet"))
-    progress.synchronized(progress.clear())
+      Files.copy(Paths.get(pool(i)), Paths.get(s"$calSrc/documents_$i.parquet"))
+    progress.clear()
     PipelineStream.runOnce(spark, calSrc, bench, calRoot,
                            name = "graft_soak_cal",
                            maxFilesPerTrigger = Some(1)).collect()
-    BusShim.drain(spark.sparkContext)
-    val calMs = progress.synchronized(
-      progress.filter(_.rows > 0).map(_.ms).toVector)
+    val calMs = progress.snapshot().filter(_.rows > 0).map(_.ms)
     require(calMs.nonEmpty, "calibration produced no row-carrying batches")
     // Calibrate on the WARM batches only: the first batch ever pays
     // JIT + empty-ledger bootstrap and overestimates the steady cost
@@ -143,7 +106,7 @@ object StreamSoak {
       val root = s"$work/${sc.name}_root"
       val src = s"$work/${sc.name}_src"
       new java.io.File(src).mkdirs()
-      progress.synchronized(progress.clear())
+      progress.clear()
 
       // Arrival thread: one slice per period; pausable for reconcile.
       // pausedAck is the handshake: the main thread must not snapshot
@@ -160,7 +123,7 @@ object StreamSoak {
         var j = 0
         while (!stopArrivals) {
           if (!paused) {
-            Files.copy(Paths.get(s"$poolDir/pool_${j % nPool}.parquet"),
+            Files.copy(Paths.get(pool(j % nPool)),
                        Paths.get(s"$src/documents_arr_$j.parquet"),
                        StandardCopyOption.REPLACE_EXISTING)
             delivered += poolRows(j % nPool)
@@ -175,14 +138,8 @@ object StreamSoak {
       }, s"soak-writer-${sc.name}")
       writer.setDaemon(true)
 
-      def processedRows: Long = {
-        BusShim.drain(spark.sparkContext)
-        progress.synchronized(progress.map(_.rows).sum)
-      }
-      def processedBatches: Int = {
-        BusShim.drain(spark.sparkContext)
-        progress.synchronized(progress.count(_.rows > 0))
-      }
+      def processedRows: Long = progress.snapshot().map(_.rows).sum
+      def processedBatches: Int = progress.snapshot().count(_.rows > 0)
 
       var q = PipelineStream.startQuery(spark, src, bench, root,
         name = s"graft_soak_${sc.name}", maxFilesPerTrigger = Some(1),
@@ -245,7 +202,7 @@ object StreamSoak {
         .filter(col("stage") === firstStage)
         .agg(coalesce(sum(col("docs_in")), lit(0L))).head().getLong(0)
       val conserved = intakeDocs == delivered
-      val ps = progress.synchronized(progress.filter(_.rows > 0).toVector)
+      val ps = progress.snapshot().filter(_.rows > 0)
       val walls = ps.map(_.ms).sorted
       def pct(q: Double) =
         if (walls.isEmpty) -1L
@@ -284,7 +241,7 @@ object StreamSoak {
       results.map { case (k, v) => s""""$k":$v""" }.mkString(",") + "}}"
     // Merge as the LAST field of STREAMBENCH.json (idempotent: any
     // previous soak section is replaced).
-    val sbPath = Paths.get("/root/repo/STREAMBENCH.json")
+    val sbPath = Paths.get("STREAMBENCH.json")
     val sb = new String(Files.readAllBytes(sbPath)).trim
     val cut = sb.indexOf(",\"soak\":")
     val base = if (cut >= 0) sb.substring(0, cut) + "}" else sb

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,34 +10,14 @@ object Verify {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_MASTER=local-cluster[2,8,4096] runs the SAME gate with
     // real separate executor JVMs — the multi-process posture a 100 TB
     // cluster has and single-JVM local[] structurally cannot exercise
     // (executor-side closure/expression serialization, broadcast
     // transport, per-executor memory). Everything else is identical, so
     // a green local-cluster run attests every query's plan survives
-    // process boundaries. Executors are spawned by the standalone-worker
-    // machinery from SPARK_HOME; they get the application classes via
-    // the driver's own classpath (same machine by definition).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder
-        .config("spark.executor.extraClassPath", sys.props("java.class.path"))
-        .config("spark.executor.memory",
-                sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g"))
-        // Executor JVMs need the same JDK-17 module opens the driver
-        // gets from build.sbt (spark-submit would inject these).
-        .config("spark.executor.extraJavaOptions",
-                org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // process boundaries.
+    val spark = Harness.session("graft-verify", 4, sys.env.get("SPARK_GRAFT_MASTER"))
     new java.io.File(outDir).mkdirs()
     // A query that throws leaves NO parquet dir, and the driver's compare
     // silently omits it from CORRECTNESS_r{N}.json — 23 broken queries
@@ -57,6 +36,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: $msg")
         failed(name) = msg
       }
+      // Free what the query persisted or checkpointed before the next
+      // one runs, or storage accumulates over the whole registry.
+      PlanMode.sweep(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -367,7 +367,7 @@ object Corpus {
               col("component_size"),
               col("max_quality"),
               (col("total_chars") - col("sv.n_chars")).as("chars_dropped"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qDedupKeepBestSql: String =
@@ -1456,7 +1456,7 @@ object Corpus {
         round(col("n_shared_chunks").cast("double")
                 / col("n_chunks").cast("double"), 6).as("shared_frac"))
       // No final orderBy: corpus-sized output; the gate sorts rows.
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qChunkDedupSql: String = chunkCtesSql + """,
@@ -2740,9 +2740,11 @@ object Corpus {
       bpeMergeLoopLocal(s, rows.map(r => (r.getString(0), r.getLong(1))))
     } else {
       // The distributed loop is NumMerges serial micro-jobs over the
-      // vocab table — the PlanMode.withoutAqe regime (no skew or
-      // partition-size problem in a vocab-bounded aggregate).
-      graft.PlanMode.withoutAqe(s) { bpeMergeLoop(s, base) }
+      // vocab table — the AQE-off regime (no skew or partition-size
+      // problem in a vocab-bounded aggregate).
+      graft.PlanMode.withConfs(s, "spark.sql.adaptive.enabled" -> "false") {
+        bpeMergeLoop(s, base)
+      }
     }
   }
 
@@ -3129,7 +3131,7 @@ object Corpus {
                 .as("dsir_score"),
               coalesce(col("selflag"), lit(0L)).as("is_selected"))
       // No final orderBy: corpus-sized output; the gate sorts rows.
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qDsirScoreSql: String =
@@ -3241,7 +3243,7 @@ object Corpus {
       .select(col("qid"), col("rn"), col("doc_id"), col("n_match"),
               round(col("score_u").cast("double") / 1e6, 6).as("bm25"))
       .orderBy(col("qid"), col("rn"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   /** The BM25 pipeline as bare CTEs (ending at `ranked`), shared by
@@ -3460,12 +3462,11 @@ object Corpus {
     // funnel a second time for 25 rows (profiled: a duplicate ~0.4 s
     // serial stage at sf0.1).
     val degLeaf = adj.select(col("u"), col("wdeg")).dropDuplicates("u")
-    graft.PlanMode.lazyTail(
-      top.join(degLeaf, Seq("u"))
-        .withColumn("rn", row_number().over(rankW).cast("bigint"))
-        .select(col("rn"), col("u").as("term"), col("wdeg"),
-                col("r").as("rank_u"))
-        .orderBy(col("rn")))
+    top.join(degLeaf, Seq("u"))
+      .withColumn("rn", row_number().over(rankW).cast("bigint"))
+      .select(col("rn"), col("u").as("term"), col("wdeg"),
+              col("r").as("rank_u"))
+      .orderBy(col("rn"))
   }
 
   val qTextrankSql: String = {

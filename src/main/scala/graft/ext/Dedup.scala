@@ -250,7 +250,7 @@ object Dedup {
     val out = scored
       .filter(col("edit_dist") >= 0L && col("edit_dist") <= MaxEditDist)
       .orderBy(col("doc_a"), col("doc_b"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qDedupEditdistSql: String =
@@ -330,7 +330,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("n_common"), col("containment"))
     // No final orderBy (gate sorts rows; range sampling would re-run
     // the pair aggregation).
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qContainmentSql: String =
@@ -510,7 +510,7 @@ object Dedup {
   /** Distinct-shingle frame (doc_id, grams, n) shared by the index and
     * the verification fetches.
     */
-  private[graft] def prefixJacDocs(docsIn: DataFrame): DataFrame =
+  private def prefixJacDocs(docsIn: DataFrame): DataFrame =
     docsIn.select(col("doc_id"),
         Ops.shingles(Ops.tokens(col("text")), 3).as("grams"))
       .select(col("doc_id"), col("grams"),
@@ -581,7 +581,7 @@ object Dedup {
     * partial-agg shuffle, bounded driver collect (PrefixOrderBuckets
     * longs — the Similarity codebook discipline).
     */
-  private[graft] def prefixOrderCounts(docs: DataFrame): Array[Long] = {
+  private def prefixOrderCounts(docs: DataFrame): Array[Long] = {
     val counts = new Array[Long](PrefixOrderBuckets.toInt)
     docs.select(explode(col("grams")).as("gram"))
       .groupBy(pmod(xxhash64(col("gram")), lit(PrefixOrderBuckets)).as("b"))
@@ -601,7 +601,7 @@ object Dedup {
     * per doc, so max(packed) ≡ (n, max(rn)) — the emitted pair row
     * shrinks from 7 fields to 4 on the operator's dominant exchange.
     */
-  private[graft] def prefixProbe(docs: DataFrame,
+  private def prefixProbe(docs: DataFrame,
                                  counts: Array[Long]): DataFrame = {
     val nB = lit(PrefixOrderBuckets)
     val bdf = typedLit(counts.toSeq)
@@ -622,17 +622,13 @@ object Dedup {
   private[graft] def prefixJacCandidates(docs: DataFrame): DataFrame =
     prefixPairAgg(prefixProbe(docs, prefixOrderCounts(docs)))
 
-  // --- Shared filter arithmetic (single source of truth) -------------
-  // ProfileSplit's sub-stage probes reuse these instead of re-inlining
-  // the t = 8/10 integer forms: if the threshold or the packed-window
-  // math ever changes, the probes measure the SHIPPED pipeline, not a
-  // stale copy of it.
+  // --- Filter arithmetic of the emitting self-join (t = 8/10) ---------
 
   /** Index-prefix restriction of a probe frame — the small-role side of
     * the emitting self-join only needs each doc's first
     * n − ⌈(8/9)·n⌉ + 2 grams (Xiao et al. WWW'08 §4).
     */
-  private[graft] def prefixIndexSide(pref: DataFrame): DataFrame =
+  private def prefixIndexSide(pref: DataFrame): DataFrame =
     pref.filter(col("rn") <= expr("n - ((8 * n + 8) div 9) + 2"))
 
   /** Role + lower-length-bound predicate of the self-join: small =
@@ -640,7 +636,7 @@ object Dedup {
     * upper bound is implied by n_l ≥ n_s). Expects columns
     * (n_s, n_l, doc_s, doc_l).
     */
-  private[graft] def prefixRoleLengthFilter: Column =
+  private def prefixRoleLengthFilter: Column =
     (col("n_s") < col("n_l") ||
      (col("n_s") === col("n_l") && col("doc_s") < col("doc_l"))) &&
       col("n_s") * 10 >= col("n_l") * 8
@@ -648,7 +644,7 @@ object Dedup {
   /** O_min = ⌈t·(n_s+n_l)/(1+t)⌉, exact in integers for t = 8/10.
     * Expects columns (n_s, n_l).
     */
-  private[graft] def prefixOMin: Column = expr("(4 * (n_s + n_l) + 8) div 9")
+  private def prefixOMin: Column = expr("(4 * (n_s + n_l) + 8) div 9")
 
   /** The emitting self-join + pair aggregation over a probe-prefix
     * frame — factored so prefixJaccard can PERSIST the probe frame
@@ -657,7 +653,7 @@ object Dedup {
     * plans the join worse — measured 67.6 s vs 35 s for the same
     * candidate stage at 100×-diverse (docs/SCALE.md round 13).
     */
-  private[graft] def prefixPairAgg(pref: DataFrame): DataFrame = {
+  private def prefixPairAgg(pref: DataFrame): DataFrame = {
     // INDEX-prefix reduction (Xiao et al. WWW'08 §4): for a qualifying
     // pair with n_s ≤ n_l, o_min = ⌈(t/(1+t))(n_s+n_l)⌉ ≥ ⌈(2t/(1+t))·n_s⌉,
     // so the two smallest common grams sit within the SMALLER doc's
@@ -713,7 +709,7 @@ object Dedup {
     // No final orderBy: the gate sorts rows, and a global sort's range
     // sampling re-executes the verify subtree — measured +1.1 GiB
     // shuffle read (the pair-agg exchange read twice) at 100×-diverse.
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qPrefixJaccardSql: String =
@@ -835,7 +831,7 @@ object Dedup {
               round(coalesce(col("max_jaccard"), lit(0.0)), 6).as("max_jaccard"),
               coalesce(col("is_dup"), lit(0L)).as("is_dup"))
     // No final orderBy: corpus-sized output; the gate sorts rows.
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   /** The DuckDB side of the MinHash pipeline, re-derived relationally:
@@ -955,7 +951,7 @@ object Dedup {
            (sum(abs(col("true_u") - col("est_u"))).cast("double") / 1e6
               / count(lit(1)).cast("double")).as("mean_abs_err"))
       .orderBy(col("n_matches"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qMinhashEvalSql: String = {
@@ -1117,7 +1113,7 @@ object Dedup {
                    col("n_hits").cast("double") /
                      col("n_exact").cast("double"))
                 .otherwise(lit(1.0)).as("recall"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qDedupRecallSql: String = {
@@ -1211,7 +1207,7 @@ object Dedup {
     // Lazy final tail (round 16): the cached per-config/exact/docs
     // frames are leaf inputs of the returned plan and are freed by the
     // harness sweep / ContextCleaner after the one consumer runs.
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qBandSweepSql: String = {
@@ -1517,7 +1513,7 @@ object Dedup {
                    (lit(3L) * col("n_triangles")).cast("double")
                      / col("n_wedges").cast("double"))
                 .otherwise(lit(0.0)).as("transitivity"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qTriangleCountSql: String =
@@ -1582,7 +1578,7 @@ object Dedup {
       .select(col("la").as("label"), col("va").as("vec_a"),
               col("vb").as("vec_b"), col("cos"))
       .orderBy(col("vec_a"), col("vec_b"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qDedupEmbeddingSql: String =
@@ -2237,7 +2233,7 @@ object Dedup {
   val qPagerank: Q = (s, d) => pagerank(Tables.documents(s, d))
 
   /** Core of q_pagerank over any (doc_id, text) frame. */
-  // NOT a PlanMode.withoutAqe site: the body is one action whose input
+  // NOT an AQE-off (PlanMode.withConfs) site: the body is one action whose input
   // side is the corpus-sized signature scan, not a bounded per-round
   // micro-frame — with AQE off the 100×-copy stressor regressed ~1.5×
   // (10.4 s vs 6.8 s) while 1× gained ~0.2 s. AQE stays on; the scope
@@ -2285,7 +2281,7 @@ object Dedup {
       .select(col("rn"), col("u").as("doc_id"), col("deg"),
               col("r").as("rank_u"))
       .orderBy(col("rn"))
-    graft.PlanMode.lazyTail(ranked)
+    ranked
   }
 
   val qPagerankSql: String = {

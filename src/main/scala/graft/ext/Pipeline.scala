@@ -560,7 +560,7 @@ object Pipeline {
     */
   private[graft] def pipelineRun(docsIn: DataFrame): DataFrame = {
     val pools = stagePools(docsIn)
-    graft.PlanMode.lazyTail(globalAttritionTail(pools))
+    globalAttritionTail(pools)
   }
 
   // ------------------------------------------------------------------
@@ -612,7 +612,7 @@ object Pipeline {
 
   private[graft] def pipelineBySource(docsIn: DataFrame): DataFrame = {
     val pools = stagePools(docsIn)
-    graft.PlanMode.lazyTail(bySourceAttritionTail(pools))
+    bySourceAttritionTail(pools)
   }
 
   /** BOTH curation reports — the global attrition table

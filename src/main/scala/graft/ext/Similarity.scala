@@ -1017,7 +1017,7 @@ object Similarity {
               round(coalesce(col("n_hits"), lit(0L)).cast("double")
                       / col("n_exact").cast("double"), 6).as("recall"))
       .orderBy(col("depth"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qRefineSweepSql: String = {
@@ -1301,7 +1301,7 @@ object Similarity {
               round(coalesce(col("n_hits"), lit(0L)).cast("double")
                       / col("n_exact").cast("double"), 6).as("recall"))
       .orderBy(col("nprobe"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   val qIvfSweepSql: String = {

@@ -562,10 +562,7 @@ object Stats {
           .otherwise(lit("noise")).as("role"),
         coalesce(col("cluster"), col("b_cluster"), lit(-1L)).as("cluster"))
       .orderBy(col("vec_id"))
-    // House checkpoint-tail: materialize BEFORE releasing the shared
-    // caches (the pagerank pattern) — the old eager unpersist() released
-    // sym before the plan ever executed.
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   /** The banded sign-LSH candidate generator as bare CTEs (sample `e`

@@ -628,7 +628,7 @@ object TextOps {
       .withColumn("correct",
         when(col("pred") === col("label"), 1L).otherwise(0L))
       .orderBy(col("doc_id"))
-    graft.PlanMode.lazyTail(out)
+    out
   }
 
   /** The full train-then-score CTE chain through `pf` (per-doc final

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Tiny driveable surface for the streaming plane: runs the hourly
   * windowed aggregation over a static events dir through a real
   * StreamingQuery (memory sink) and prints the row count + a sample, so
@@ -10,14 +8,7 @@ import org.apache.spark.sql.SparkSession
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions",
-              sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session("graft-stream-demo", 4)
     val out = EventStream.runOnce(spark, dir)
     println(s"[stream-demo] hourly-agg rows=${out.count()}")
     out.orderBy("bucket", "event_type").show(5, truncate = false)
