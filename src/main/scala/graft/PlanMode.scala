@@ -2,21 +2,13 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
-/** Audit escape hatch for the house checkpoint-tail pattern
-  * (persist → build output → localCheckpoint(true) → unpersist).
+/** The house materialization helpers: the eager checkpoint tail, its
+  * observed form, in-query release and the inter-query sweep.
   *
-  * Normal runs keep the eager localCheckpoint: it truncates iterative
-  * lineage so the returned frame is one stable cached scan. But that
-  * very truncation blinds PlanAudit — the audited "plan" is a single
-  * scan of checkpointed blocks, so shuffle/broadcast/pushdown evidence
-  * for the real query shape is lost (and the query executes at
-  * CONSTRUCTION time, which plan-only tooling must not trigger).
-  *
-  * PlanAudit sets `-Dgraft.plan.audit=1`; under that flag checkpointTail
-  * is the identity, so the full pre-checkpoint plan reaches the audit.
-  * The caches these queries unpersist after checkpointing are then
-  * released before execution — audit runs recompute instead of reading
-  * cache, which is exactly the lineage we want to see.
+  * checkpointTail's eager localCheckpoint truncates iterative lineage so
+  * the returned frame is one stable scan of checkpointed blocks; the
+  * checkpoint is a Spark execution of its own, fired while the frame is
+  * built (`graft.Probe` reports it as one of the query's executions).
   *
   * Cluster-reality note (also in docs/PLANS.md): localCheckpoint is NOT
   * fault-tolerant — blocks live in executor storage, so losing an
@@ -30,11 +22,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
   * Default path (knob unset) is bit-identical to the pre-knob behavior.
   */
 object PlanMode {
-  def auditing: Boolean = sys.props.get("graft.plan.audit").contains("1")
-
   def checkpointTail(df: DataFrame): DataFrame =
-    if (auditing) df
-    else GraftConf.checkpointDir(df.sparkSession) match {
+    GraftConf.checkpointDir(df.sparkSession) match {
       case Some(dir) =>
         val sc = df.sparkSession.sparkContext
         // setCheckpointDir mints a fresh per-app UUID subdir on every
@@ -57,32 +46,26 @@ object PlanMode {
     * Returns the checkpointed frame (its plan holds no observe node) and
     * the observed row. The value is read back synchronously from the
     * checkpoint action's executed plan, in both the localCheckpoint and
-    * the reliable `spark.graft.checkpoint.dir` modes.
-    *
-    * Audit mode: checkpointTail is the identity, so nothing would
-    * materialize — the frame comes back unobserved (the audited plan is
-    * unchanged) and the metric is computed by one separate aggregate. A
-    * missing observed row is an error, never a default: a caller looping
-    * to a fixpoint on the value must not spin on a stale one.
+    * the reliable `spark.graft.checkpoint.dir` modes. A missing observed
+    * row is an error, never a default: a caller looping to a fixpoint on
+    * the value must not spin on a stale one.
     */
-  def checkpointObserved(df: DataFrame, metric: Column): (DataFrame, Row) =
-    if (auditing) (df, df.agg(metric).head())
-    else {
-      val name = s"graft_observed_${observeSeq.incrementAndGet()}"
-      val observed = df.observe(name, metric)
-      val out = checkpointTail(observed)
-      val row = observed.queryExecution.observedMetrics.getOrElse(name,
-        throw new IllegalStateException(
-          s"observed metric $name missing after checkpoint materialization"))
-      (out, row)
-    }
+  def checkpointObserved(df: DataFrame, metric: Column): (DataFrame, Row) = {
+    val name = s"graft_observed_${observeSeq.incrementAndGet()}"
+    val observed = df.observe(name, metric)
+    val out = checkpointTail(observed)
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(
+        s"observed metric $name missing after checkpoint materialization"))
+    (out, row)
+  }
 
   /** Free the block storage behind a checkpointTail'd frame once every
     * consumer has materialized (localCheckpoint blocks live OUTSIDE the
     * SQL cache manager, so Dataset.unpersist cannot reach them and they
     * otherwise wait for the async ContextCleaner). Reliable-checkpoint
     * mode (spark.graft.checkpoint.dir) keeps its durable files — the
-    * unpersist only drops any block-cache replica. No-op under audit.
+    * unpersist only drops any block-cache replica.
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {

@@ -2,8 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import scala.collection.mutable
+import scala.util.control.NonFatal
+
+import org.apache.spark.graftshim.BusShim
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dev CLI: plans and profiles of registered queries.
   *
@@ -11,14 +18,19 @@ import org.apache.spark.sql.execution.FormattedMode
   *   runMain graft.Probe plan q1,q2 [sfDir] [--dump DIR]
   *   runMain graft.Probe profile q1,q2 [sfDir]
   *
-  * `audit` prints one row per registry query — shuffle exchanges,
-  * single-partition exchanges, broadcasts, whole-stage-codegen spans and
-  * the columns each parquet scan reads — the table in docs/PLANS.md.
-  * `plan` prints `explain("formatted")` of each query, or writes it to
-  * `DIR/<query>.txt`. Both run in audit mode (`-Dgraft.plan.audit=1`):
-  * checkpointTail is the identity, so the plan is the query's real
-  * pre-checkpoint shape rather than one scan of checkpointed blocks, and
-  * building the frame executes nothing.
+  * `audit` and `plan` read the SQL executions a query actually runs:
+  * the frame is built and consumed with `collect()`, and every execution
+  * that fires on the way is recorded in order — the checkpoints and
+  * driver collects fired while the frame is built, then the final
+  * collect. Each execution's plan is the AQE-final one it ran.
+  *
+  * `audit` prints one row per registry query — the number of executions
+  * and, summed over them, shuffle exchanges, single-partition exchanges,
+  * broadcasts, operators fused into whole-stage codegen and the columns
+  * each parquet scan reads — the table in docs/PLANS.md. It exits 1 if
+  * any row is an ERROR. `plan` prints `explain("formatted")` of each
+  * execution, headed by its action name, or writes them to
+  * `DIR/<query>.txt`.
   * `profile` runs each query twice and reports, per run, the job count,
   * job-covered wall and dead air between jobs, and each stage's wall,
   * executor run and CPU, input and shuffle bytes; read the second run
@@ -39,78 +51,127 @@ object Probe {
     val sfDir = pos.lift(at).orElse(sys.env.get("SPARK_GRAFT_SF_DIR")).getOrElse(usage())
     val names = if (mode == "audit") Nil else pos.lift(1).getOrElse(usage()).split(",").toSeq
     val spark = Harness.session("graft-probe", 8)
-    try mode match {
+    val ok = try mode match {
       case "audit" => audit(spark, sfDir)
-      case "plan" => plan(spark, names, sfDir, dump)
-      case _ => Harness.warm(spark, sfDir); profile(spark, names, sfDir)
+      case "plan" => plan(spark, names, sfDir, dump); true
+      case _ => Harness.warm(spark, sfDir); profile(spark, names, sfDir); true
     } finally spark.stop()
+    if (!ok) sys.exit(1)
   }
 
   private def usage(): Nothing = { System.err.println(Usage); sys.exit(2) }
 
-  private def auditMode[A](body: => A): A = {
-    val before = System.setProperty("graft.plan.audit", "1")
-    try body
-    finally Option(before).fold(System.clearProperty("graft.plan.audit"))(
-      System.setProperty("graft.plan.audit", _))
-  }
-
-  private def formatted(df: DataFrame): String =
-    df.queryExecution.explainString(FormattedMode)
-
-  /** Print one audit row per registry query, in name order. */
-  def audit(spark: SparkSession, sfDir: String): Unit = auditMode {
-    println("| query | shuffles | 1-part exch | broadcasts | codegen spans | scans (pruned cols) |")
-    println("|---|---|---|---|---|---|")
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
-        val df = fn(spark, sfDir)
-        df.collect() // execute THIS plan so AQE finalizes it
-        // AQE's toString appends an "== Initial Plan ==" section that
-        // would double-count every node — audit the final plan only.
-        val executed = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head
-        val lines = executed.linesIterator.toSeq
-        val shuffles = lines.count(l => l.contains("Exchange hashpartitioning") ||
-                                        l.contains("Exchange rangepartitioning"))
-        // The corpus-cardinality anti-pattern detector: an Exchange
-        // SinglePartition funnels EVERY row to one task (constant-group
-        // windows, un-limited global sorts). Bounded inputs excuse it
-        // (≤K-row tails); a nonzero count on a corpus-sized input is a
-        // scale bug. TakeOrderedAndProject does NOT show up here — that
-        // is the point of cutting top-K via orderBy().limit().
-        val singles = lines.count(_.contains("Exchange SinglePartition"))
-        val bcasts = lines.count(_.contains("BroadcastExchange"))
-        // whole-stage-codegen spans show as `*(n)` prefixes in the tree
-        val codegen = "\\*\\((\\d+)\\)".r.findAllMatchIn(executed)
-          .map(_.group(1)).toSet.size
-        val scanCols = formatted(df).linesIterator
-          .filter(_.trim.startsWith("ReadSchema:"))
-          .map(l => l.count(_ == ':') - 1) // fields in struct<a:t,b:t,...>
-          .toSeq
-        println(s"| $name | $shuffles | $singles | $bcasts | $codegen | " +
-                s"${scanCols.length} (${scanCols.mkString("/")}) |")
-      } catch {
-        case e: Throwable =>
-          println(s"| $name | ERROR ${String.valueOf(e.getMessage).take(60)} |")
-      }
+  /** Build query `name`'s frame, `collect()` it and return every SQL
+    * execution that ran on the way (action name, QueryExecution), in
+    * order, as one QueryExecutionListener on the session saw them.
+    * Sweeps the session's storage after.
+    */
+  private[graft] def executions(spark: SparkSession, name: String,
+                                sfDir: String): Seq[(String, QueryExecution)] = {
+    val sc = spark.sparkContext
+    BusShim.drain(sc) // no earlier query's executions reach the recorder
+    val seen = mutable.ArrayBuffer[(String, QueryExecution)]()
+    val recorder = new QueryExecutionListener {
+      def onSuccess(action: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.synchronized(seen += action -> qe)
+      def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(recorder)
+    try {
+      SparkEntry.queries(name)(spark, sfDir).collect()
+      BusShim.drain(sc)
+      seen.synchronized(seen.toVector)
+    } finally {
+      spark.listenerManager.unregister(recorder)
       PlanMode.sweep(spark)
     }
   }
 
-  /** Print each query's formatted plan, or write it to `dump/<query>.txt`. */
+  /** One audit row: a query's plan shape summed over its executions. */
+  final case class AuditRow(query: String, actions: Seq[String], shuffles: Int,
+                            singles: Int, broadcasts: Int, codegen: Int,
+                            scans: Seq[Int]) {
+    def line: String =
+      s"| $query | ${actions.size} | $shuffles | $singles | $broadcasts | $codegen | " +
+        s"${scans.length} (${scans.mkString("/")}) |"
+  }
+
+  /** Run query `name` and sum the plan shape of every execution it ran. */
+  def auditRow(spark: SparkSession, name: String, sfDir: String): AuditRow = {
+    val execs = executions(spark, name, sfDir)
+    // AQE's toString appends an "== Initial Plan ==" section that would
+    // double-count every node — audit the final plans only.
+    val lines = execs.flatMap(
+      _._2.executedPlan.toString.split("== Initial Plan ==").head.linesIterator)
+    AuditRow(name, execs.map(_._1),
+      shuffles = lines.count(l => l.contains("Exchange hashpartitioning") ||
+                                  l.contains("Exchange rangepartitioning")),
+      // The corpus-cardinality anti-pattern detector: an Exchange
+      // SinglePartition funnels EVERY row to one task (constant-group
+      // windows, un-limited global sorts). Bounded inputs excuse it
+      // (≤K-row tails); a nonzero count on a corpus-sized input is a
+      // scale bug. TakeOrderedAndProject does NOT show up here — that
+      // is the point of cutting top-K via orderBy().limit().
+      singles = lines.count(_.contains("Exchange SinglePartition")),
+      broadcasts = lines.count(_.contains("BroadcastExchange")),
+      // Operators fused into whole-stage codegen: the `*(n)`-prefixed
+      // nodes. Not the spans: when both join sides are small, AQE
+      // broadcasts whichever shuffle stage finishes first, and the build
+      // side decides whether the other side's operators fuse into the
+      // join's span — the span count moves with stage timing, the fused
+      // operators do not.
+      codegen = lines.count(_.dropWhile(" :+-".contains(_)).startsWith("*(")),
+      scans = execs.flatMap(e => FinalPlan.scans(e._2.executedPlan)))
+  }
+
+  private object FinalPlan extends AdaptiveSparkPlanHelper {
+    /** Columns read by each parquet scan of a final plan, cached
+      * relations' plans included. Not the ReadSchema lines of the
+      * formatted explain: it also details the AQE initial plan's scan
+      * nodes, which never ran.
+      */
+    def scans(plan: SparkPlan): Seq[Int] = collectWithSubqueries(plan) {
+      case scan: FileSourceScanExec => Seq(scan.requiredSchema.length)
+      case cached: InMemoryTableScanExec => scans(cached.relation.cachedPlan)
+    }.flatten
+  }
+
+  /** Print one audit row per registry query, in name order; false if
+    * any query failed (its row reads ERROR).
+    */
+  def audit(spark: SparkSession, sfDir: String): Boolean = {
+    println("| query | executions | shuffles | 1-part exch | broadcasts | codegen ops | scans (pruned cols) |")
+    println("|---|---|---|---|---|---|---|")
+    SparkEntry.queries.keys.toSeq.sorted.map { name =>
+      try { println(auditRow(spark, name, sfDir).line); true }
+      catch {
+        case NonFatal(e) =>
+          println(s"| $name | ERROR ${String.valueOf(e.getMessage).take(60)} |")
+          false
+      }
+    }.forall(identity)
+  }
+
+  /** Print the formatted plan of each execution of each query, headed by
+    * its action name, or write them to `dump/<query>.txt`. Returns each
+    * query's recorded action names.
+    */
   def plan(spark: SparkSession, names: Seq[String], sfDir: String,
-           dump: Option[String]): Unit = auditMode {
+           dump: Option[String]): Seq[(String, Seq[String])] = {
     dump.foreach(d => Files.createDirectories(Paths.get(d)))
-    for (q <- names) {
-      val text = formatted(SparkEntry.queries(q)(spark, sfDir))
+    for (q <- names) yield {
+      val execs = executions(spark, q, sfDir)
+      val text = execs.zipWithIndex.map { case ((action, qe), i) =>
+        s"===== execution ${i + 1}/${execs.size}: $action =====\n" +
+          qe.explainString(FormattedMode)
+      }.mkString("\n")
       dump match {
         case Some(d) =>
           Files.writeString(Paths.get(d, s"$q.txt"), text)
           println(s"[probe] wrote ${Paths.get(d, s"$q.txt")}")
         case None => println(s"===== $q =====\n$text")
       }
-      PlanMode.sweep(spark)
+      q -> execs.map(_._1)
     }
   }
 

@@ -76,11 +76,7 @@ object Corpus {
     // executor-cpu-s, wall 5.7 → 4.1 s (same direction on
     // q_dedup_cluster and the pipeline near-dup stage). At scale AQE
     // additionally restores the skew handling every other join gets.
-    minLabelPropagateLoop(vertices, edges, initLabels)
-  }
-
-  private def minLabelPropagateLoop(vertices: DataFrame, edges: DataFrame,
-                                    initLabels: Option[DataFrame]): DataFrame = {
+    //
     // CHECKPOINTED leaves, not persist (round-15, the pagerank fix):
     // with persist every round's fresh Dataset re-analyzes and
     // re-optimizes the full edge-derivation plan (candidate generation,
@@ -119,16 +115,13 @@ object Corpus {
     // Without a caller warm start, start from one neighbor-min step over
     // the identity labeling — least(v, min(dst)) from the checkpointed
     // edges, which is what a star-rep warm start computes, at no extra
-    // materialization. Audit mode starts from the identity itself, the
-    // plan it has always shown: its edges are not checkpointed, so the
-    // step would re-derive the edge pipeline inside the audited plan.
-    val identity = vertices.select(col("doc_id"), col("doc_id").as("label"))
+    // materialization.
     var (labels, prevSum) = materialize(initLabels
       .map(init => vertices.alias("v")
         .join(init.alias("i"), col("v.doc_id") === col("i.doc_id"), "left")
         .select(col("v.doc_id").as("doc_id"),
                 coalesce(col("i.label"), col("v.doc_id")).as("label")))
-      .getOrElse(if (graft.PlanMode.auditing) identity else nbrStep(identity)))
+      .getOrElse(nbrStep(vertices.select(col("doc_id"), col("doc_id").as("label")))))
     val spent = scala.collection.mutable.ArrayBuffer(labels)
     var converged = false
     var round = 0
@@ -158,36 +151,19 @@ object Corpus {
       // so un-truncated lineage would grow 4× per round (the analyzer's
       // self-join deduplication clones one side — round ~8 OOMs the
       // driver during planning). The round's checkpoint truncates it.
-      // Audit mode (checkpointTail is the identity) keeps rounds 1-2
-      // deep — every round has the identical shape, so the audit still
-      // sees the full per-round join structure — then truncates too
-      // (q_dbscan's real sf0.01 graph used to OOM the un-truncated
-      // audit at 4^rounds).
-      val (next, s) = materialize(
-        if (!graft.PlanMode.auditing) raw
-        else if (round > 2) raw.localCheckpoint(false)
-        else raw.persist())
+      val (next, s) = materialize(raw)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       spent += next
       // `next` is materialized, so the round-before-last labeling is
       // dead — release it now rather than holding O(rounds) copies of
       // the label table in executor storage on high-diameter graphs.
-      if (spent.length > 2) {
-        val dead = spent.remove(0)
-        dead.unpersist()
-        graft.PlanMode.release(dead) // checkpointed frames live outside the cache manager
-      }
+      if (spent.length > 2) graft.PlanMode.release(spent.remove(0))
       labels = next
     }
     // The converged round's checkpoint IS the result: its lineage is one
-    // stable scan of the converged labels (in audit mode the deep
-    // iterative plan is returned as-is, its round cache dropped).
-    // Release everything else.
-    spent.foreach { df =>
-      df.unpersist()
-      if (!(df eq labels)) graft.PlanMode.release(df)
-    }
+    // stable scan of the converged labels. Release everything else.
+    spent.foreach(df => if (!(df eq labels)) graft.PlanMode.release(df))
     graft.PlanMode.release(e)
     labels
   }
@@ -243,14 +219,8 @@ object Corpus {
     // these star edges IS the min rep over the doc's groups (each doc's
     // neighbors are exactly its groups' reps; a rep's neighbors are its
     // members, all larger), read from the checkpointed edge list instead
-    // of re-deriving keyed ⋈ star from the text. Audit mode (nothing is
-    // checkpointed) passes that star-rep minimum explicitly, so the
-    // audited plan keeps its shape.
-    val auditInit =
-      if (!graft.PlanMode.auditing) None
-      else Some(keyed.join(star, Seq("key"))
-        .groupBy(col("doc_id")).agg(min(col("rep")).as("label")))
-    minLabelPropagate(docsIn.select(col("doc_id")), edges, auditInit)
+    // of re-deriving keyed ⋈ star from the text.
+    minLabelPropagate(docsIn.select(col("doc_id")), edges)
   }
 
   val qDedupCluster: Q = (s, d) => {
@@ -898,7 +868,7 @@ object Corpus {
   //
   // The global running sum is the scale trap: a naive unpartitioned
   // window funnels the corpus through one task (the Exchange
-  // SinglePartition anti-pattern PlanAudit hunts). Instead, the
+  // SinglePartition anti-pattern `graft.Probe audit` counts). Instead, the
   // standard two-level decomposition:
   //   level 1: within-source running sums — windows PARTITIONED BY
   //     source, all sources in parallel;

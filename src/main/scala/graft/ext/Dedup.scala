@@ -752,56 +752,28 @@ object Dedup {
   val NumBands = 8
   val RowsPerBand = NumHashes / NumBands
 
-  val qDedupMinhash: Q = (s, d) => {
-    // One md5 per gram (engine-portable 60-bit digest), then 32 cheap
-    // affine min-hashes over the pre-hashed values — not 32 re-hashes of
-    // every gram. Band buckets are the packed signature slice itself (a
-    // ':'-joined string): equality on the slice is what LSH needs, no
-    // second hash required, and it stays byte-identical across engines.
-    // Grams + the 32-hash signature are the expensive per-doc compute and
-    // feed the banding pass plus BOTH sides of the candidate gram join —
-    // persist, or each consumer re-runs the md5+minhash scan (the
-    // unpersisted plan audited at 14 corpus scans).
-    val docs = Tables.documents(s, d)
+  /** The MinHash funnel's per-doc compute: (doc_id, grams, sig) — word
+    * 3-gram shingles and their 32-hash signature. One md5 per gram
+    * (engine-portable 60-bit digest), then 32 cheap affine min-hashes
+    * over the pre-hashed values — not 32 re-hashes of every gram. Shared
+    * by q_dedup_minhash, q_minhash_eval and the recall block of
+    * q_dedup_recall / q_band_sweep; callers checkpoint it, since grams +
+    * signature feed the banding pass and both sides of the candidate
+    * gram join.
+    */
+  private def minhashDocs(docs: DataFrame): DataFrame =
+    docs
       .select(col("doc_id"),
               Ops.shingles(Ops.tokens(col("text")), 3).as("grams"))
       .withColumn("sig", Ops.minHashSignatureMod(
         transform(col("grams"), g => Ops.md5Bits60(g) % Ops.HashModP), NumHashes))
+
+  val qDedupMinhash: Q = (s, d) => {
+    val docs = minhashDocs(Tables.documents(s, d))
       .transform(graft.PlanMode.checkpointTail)
-    // Band/bucket/dedup on (ids, bucket) ONLY — carrying gram arrays
-    // through the 8-band explode, the self-join, and the pair distinct
-    // would multiply shuffle bytes by ~8× the array size at scale. Grams
-    // join back exactly once, for the unique candidate pairs.
-    val banded = docs.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(NumBands - 1)),
-        j => array_join(transform(
-               slice(col("sig"), j * RowsPerBand + 1, lit(RowsPerBand)),
-               _.cast("string")), ":"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "bucket")
-    // STAR edges per bucket, not cliques: every member pairs with its
-    // bucket's min doc_id only, so a bucket of m near-identical docs
-    // contributes m−1 candidate pairs instead of m(m−1)/2 — each doc
-    // generates ≤ NumBands member-side candidates, linear at any
-    // duplicate density. (The clique form measured 443 s / 22 GiB
-    // shuffled on the 100× duplicate-saturated corpus — the exact
-    // hot-bucket blowup the n-gram/aHash caps defend against; star
-    // edges are the qDedupCluster recipe applied to LSH buckets.)
-    // This is an intentional RECALL trade, like banding itself: only
-    // rep–member edges are verified, so two non-rep members of a bucket
-    // are never compared directly — a true near-dup pair whose shared
-    // bucket rep is a dissimilar band-collision is missed, and the
-    // partner stats (n_candidates/max_jaccard) reflect rep-edges only.
-    // In the common case the trade is free — near-dups collide in SOME
-    // band with their cluster's true rep — and the oracle applies the
-    // identical star-edge rule, so both engines rank the same pairs.
-    val bucketRep = banded.groupBy(col("band_id"), col("bucket"))
-      .agg(min(col("doc_id")).as("rep"))
-    val candidateIds = banded.join(bucketRep, Seq("band_id", "bucket"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-      .distinct()
+    // Banded star-edge candidates (see starCandidates) on (ids, bucket)
+    // only; grams join back exactly once, for the unique candidate pairs.
+    val candidateIds = starCandidates(docs, NumBands, RowsPerBand)
     val gramsOf = docs.select(col("doc_id"), col("grams"))
     // pairs feed the per-doc partner stats twice and the dup flag once —
     // persist the (small) verified-pair table rather than re-running the
@@ -910,26 +882,9 @@ object Dedup {
   // and a ≤33-row rollup.
   // ------------------------------------------------------------------
   val qMinhashEval: Q = (s, d) => {
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"),
-              Ops.shingles(Ops.tokens(col("text")), 3).as("grams"))
-      .withColumn("sig", Ops.minHashSignatureMod(
-        transform(col("grams"), g => Ops.md5Bits60(g) % Ops.HashModP), NumHashes))
+    val docs = minhashDocs(Tables.documents(s, d))
       .transform(graft.PlanMode.checkpointTail)
-    val banded = docs.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(NumBands - 1)),
-        j => array_join(transform(
-               slice(col("sig"), j * RowsPerBand + 1, lit(RowsPerBand)),
-               _.cast("string")), ":"))))
-      .withColumnRenamed("pos", "band_id")
-      .withColumnRenamed("col", "bucket")
-    val bucketRep = banded.groupBy(col("band_id"), col("bucket"))
-      .agg(min(col("doc_id")).as("rep"))
-    val candidateIds = banded.join(bucketRep, Seq("band_id", "bucket"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("rep").as("doc_a"), col("doc_id").as("doc_b"))
-      .distinct()
+    val candidateIds = starCandidates(docs, NumBands, RowsPerBand)
     val side = docs.select(col("doc_id"), col("grams"), col("sig"))
     val scored = candidateIds
       .join(side.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"),
@@ -1035,18 +990,36 @@ object Dedup {
     * the call site).
     */
   private def recallBlock(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
-      .filter(col("doc_id") % 2 === 0 && col("doc_id") < DedupRecallIdCap)
-      .select(col("doc_id"),
-              Ops.shingles(Ops.tokens(col("text")), 3).as("grams"))
-      .withColumn("sig", Ops.minHashSignatureMod(
-        transform(col("grams"), g => Ops.md5Bits60(g) % Ops.HashModP),
-        NumHashes))
+    minhashDocs(Tables.documents(s, d)
+      .filter(col("doc_id") % 2 === 0 && col("doc_id") < DedupRecallIdCap))
 
-  /** Star-edge banded candidates over a (doc_id, sig) frame for an
-    * arbitrary (bands × rowsPer = NumHashes) split — q_dedup_recall's
-    * generator with the banding parametrized so q_band_sweep can price
-    * the knob on the same signatures.
+  /** Star-edge banded candidates (doc_a < doc_b) over a (doc_id, sig)
+    * frame for a (bands × rowsPer = NumHashes) split — the MinHash
+    * funnel's generator, shared by q_dedup_minhash, q_minhash_eval,
+    * q_dedup_recall and q_band_sweep (which prices the split on the same
+    * signatures). Band buckets are the packed signature slice itself (a
+    * ':'-joined string): equality on the slice is what LSH needs, no
+    * second hash required, and it stays byte-identical across engines.
+    * Banding and the pair distinct carry (ids, bucket) only — gram
+    * arrays through the explode and self-join would multiply shuffle
+    * bytes by ~bands× the array size at scale.
+    *
+    * STAR edges per bucket, not cliques: every member pairs with its
+    * bucket's min doc_id only, so a bucket of m near-identical docs
+    * contributes m−1 candidate pairs instead of m(m−1)/2 — each doc
+    * generates ≤ bands member-side candidates, linear at any duplicate
+    * density. (The clique form measured 443 s / 22 GiB shuffled on the
+    * 100× duplicate-saturated corpus — the exact hot-bucket blowup the
+    * n-gram/aHash caps defend against; star edges are the qDedupCluster
+    * recipe applied to LSH buckets.) This is an intentional RECALL
+    * trade, like banding itself: only rep–member edges are verified, so
+    * two non-rep members of a bucket are never compared directly — a
+    * true near-dup pair whose shared bucket rep is a dissimilar
+    * band-collision is missed, and q_dedup_minhash's partner stats
+    * (n_candidates/max_jaccard) reflect rep-edges only. In the common
+    * case the trade is free — near-dups collide in SOME band with their
+    * cluster's true rep — and the oracles apply the identical star-edge
+    * rule, so both engines rank the same pairs.
     */
   private def starCandidates(docs: DataFrame, bands: Int,
                              rowsPer: Int): DataFrame = {
@@ -1099,21 +1072,29 @@ object Dedup {
                 >= DedupRecallJacT)
       .select(col("doc_a"), col("doc_b"))
 
+  /** One row (n_exact, n_candidates, n_hits, recall) of a candidate set
+    * against the exact pairs, each count a 1-row aggregate; recall is 1
+    * when there is nothing to find. `prefix` columns lead the row.
+    */
+  private def recallRow(exact: DataFrame, cand: DataFrame,
+                        prefix: Column*): DataFrame = {
+    // two consumers of cand: volume count + hit semi-join
+    val hits = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
+    exact.agg(count(lit(1)).as("n_exact"))
+      .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
+      .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
+      .select(prefix ++ Seq(col("n_exact"), col("n_candidates"), col("n_hits"),
+              when(col("n_exact") > 0L,
+                   col("n_hits").cast("double") /
+                     col("n_exact").cast("double"))
+                .otherwise(lit(1.0)).as("recall")): _*)
+  }
+
   val qDedupRecall: Q = (s, d) => {
     val docs = graft.PlanMode.checkpointTail(recallBlock(s, d))
     val cand = graft.PlanMode.checkpointTail(
       starCandidates(docs, NumBands, RowsPerBand))
-    val exact = graft.PlanMode.checkpointTail(exactPairs(docs))
-    val hits = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
-    val out = exact.agg(count(lit(1)).as("n_exact"))
-      .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
-      .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-      .select(col("n_exact"), col("n_candidates"), col("n_hits"),
-              when(col("n_exact") > 0L,
-                   col("n_hits").cast("double") /
-                     col("n_exact").cast("double"))
-                .otherwise(lit(1.0)).as("recall"))
-    out
+    recallRow(graft.PlanMode.checkpointTail(exactPairs(docs)), cand)
   }
 
   val qDedupRecallSql: String = {
@@ -1186,28 +1167,14 @@ object Dedup {
   val qBandSweep: Q = (s, d) => {
     val docs = graft.PlanMode.checkpointTail(recallBlock(s, d))
     val exact = graft.PlanMode.checkpointTail(exactPairs(docs))
-    val perConfig = BandConfigs.map { case (b, r) =>
-      val cand = graft.PlanMode.checkpointTail(starCandidates(docs, b, r))
-      // two consumers: volume count + hit semi-join
-      val hits = exact.join(cand, Seq("doc_a", "doc_b"), "left_semi")
-      val row = exact.agg(count(lit(1)).as("n_exact"))
-        .crossJoin(cand.agg(count(lit(1)).as("n_candidates")))
-        .crossJoin(hits.agg(count(lit(1)).as("n_hits")))
-        .select(lit(b.toLong).as("n_bands"),
-                lit(r.toLong).as("rows_per_band"),
-                col("n_exact"), col("n_candidates"), col("n_hits"),
-                when(col("n_exact") > 0L,
-                     col("n_hits").cast("double") /
-                       col("n_exact").cast("double"))
-                  .otherwise(lit(1.0)).as("recall"))
-      (row, cand)
-    }
-    val out = perConfig.map(_._1).reduce(_.unionByName(_))
-      .orderBy(col("n_bands"))
     // Lazy final tail (round 16): the cached per-config/exact/docs
     // frames are leaf inputs of the returned plan and are freed by the
     // harness sweep / ContextCleaner after the one consumer runs.
-    out
+    BandConfigs.map { case (b, r) =>
+      recallRow(exact, graft.PlanMode.checkpointTail(starCandidates(docs, b, r)),
+                lit(b.toLong).as("n_bands"), lit(r.toLong).as("rows_per_band"))
+    }.reduce(_.unionByName(_))
+      .orderBy(col("n_bands"))
   }
 
   val qBandSweepSql: String = {

@@ -733,10 +733,9 @@ object Pipeline {
     * executes at construction — materializeStages writes the stage
     * checkpoints and the 8-row tail is eagerly localCheckpointed —
     * because durability IS the semantics under test; a lazy wrapper
-    * would reorder the stage writes out of the timed/audited window.
-    * Plan-only tooling (PlanAudit) sees the pre-checkpoint tail via
-    * PlanMode.auditing and skips the scratch-dir cleanup below (the
-    * lazy audit plan still reads the stage files).
+    * would reorder the stage writes out of the timed window.
+    * `graft.Probe` reports the stage writes and the tail's checkpoint
+    * as executions of this query.
     *
     * The scratch dir embeds a sanitized sfDir slug AND the JVM pid:
     * two concurrent drivers on one box (Bench + Verify, or two users)
@@ -758,7 +757,7 @@ object Pipeline {
     fs.delete(p, true)
     try graft.PlanMode.checkpointTail(
       pipelineRunCheckpointed(Tables.documents(s, d), dir))
-    finally if (!graft.PlanMode.auditing) fs.delete(p, true)
+    finally fs.delete(p, true)
   }
 
   /** Shared oracle CTE chain through pool6 — one definition for the
