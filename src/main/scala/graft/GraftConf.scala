@@ -46,25 +46,6 @@ object GraftConf {
      "DBSCAN banded ε-graph: skip sign-LSH band buckets larger than this"),
   )
 
-  /** String-valued PATH knobs: where operator scratch/ledger/checkpoint
-    * state lives. On one box the defaults (java.io.tmpdir; executor-local
-    * checkpoints) are correct; on a real multi-node cluster all three
-    * must point at a cluster filesystem URI — executors do not share a
-    * /tmp, and localCheckpoint blocks die with their executor
-    * (docs/CLUSTER_GATE.md scope note; docs/FAULT_GATE.md measurements).
-    * Tuples are (conf key, default-when-unset description, meaning);
-    * defaults are resolved at read time, not compiled literals, so the
-    * table documents them as placeholders.
-    */
-  def pathKnobs: Seq[(String, String, String)] = Seq(
-    ("spark.graft.scratchDir", "<java.io.tmpdir>",
-     "base directory/URI for operator scratch space (checkpointed-pipeline stage files; KvTable ledgers unless spark.graft.kv.dir is set). Point at a cluster FS when executors don't share a local /tmp"),
-    ("spark.graft.kv.dir", "<spark.graft.scratchDir>",
-     "base directory/URI under which the KV-ledger demo (q_kv_latest) builds its LSM tiers; falls back to the scratch dir"),
-    ("spark.graft.checkpoint.dir", "<unset: executor-local localCheckpoint>",
-     "when set, iterative checkpoint tails use RELIABLE Dataset.checkpoint() against this cluster-FS directory instead of localCheckpoint — lineage tails survive executor loss at the cost of a durable write"),
-  )
-
   /** Scratch root for operator temp state. Default: java.io.tmpdir
     * (bit-identical behavior to the pre-knob code). Trailing slash
     * stripped so callers can append `/name` uniformly.

@@ -81,8 +81,11 @@ object PlanMode {
     }
 
   /** Inter-query release: drop every CacheManager entry, unpersist every
-    * persistent RDD BLOCKING, then GC. Run it between queries in any
-    * loop over the registry (Bench, Verify, KnobSweep, Probe).
+    * persistent RDD BLOCKING, then GC — unless there was nothing to
+    * free: with the CacheManager and the persistent RDDs already empty
+    * the GC reclaims nothing this sweep owns and only costs wall time.
+    * Run it between queries in any loop over the registry (Bench,
+    * Verify, KnobSweep, Probe).
     *
     * localCheckpoint blocks live outside the CacheManager and are
     * otherwise freed only when the async ContextCleaner processes its
@@ -100,10 +103,13 @@ object PlanMode {
     * on missing blocks.
     */
   def sweep(spark: SparkSession): Unit = {
-    spark.sharedState.cacheManager.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
-    System.gc()
+    val cache = spark.sharedState.cacheManager
+    val sc = spark.sparkContext
+    if (!cache.isEmpty || sc.getPersistentRDDs.nonEmpty) {
+      cache.clearCache()
+      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      System.gc()
+    }
   }
 
   /** Run `body` with each `key -> value` set on the session, restoring

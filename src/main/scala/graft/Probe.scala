@@ -6,6 +6,7 @@ import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.graftshim.BusShim
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{FileSourceScanExec, FormattedMode, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -32,7 +33,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * execution, headed by its action name, or writes them to
   * `DIR/<query>.txt`.
   * `profile` runs each query twice and reports, per run, the job count,
-  * job-covered wall and dead air between jobs, and each stage's wall,
+  * job-covered wall and dead air between jobs, the generated classes
+  * compiled (codegen cache misses), and each stage's wall,
   * executor run and CPU, input and shuffle bytes; read the second run
   * (post-JIT, post-file-index).
   *
@@ -175,8 +177,11 @@ object Probe {
     }
   }
 
-  /** One profiled run of a query. */
-  case class Run(name: String, run: Int, wallSec: Double, m: Harness.Snapshot) {
+  /** One profiled run of a query; `compiles` counts the generated
+    * classes Janino compiled during it.
+    */
+  case class Run(name: String, run: Int, wallSec: Double, m: Harness.Snapshot,
+                 compiles: Long) {
     def jobs: Int = m.jobSpans.size
     /** Wall covered by at least one running job. */
     def coveredSec: Double = {
@@ -197,14 +202,17 @@ object Probe {
     val metrics = Harness.metrics(spark)
     try for (name <- names; run <- 1 to 2) yield {
       metrics.reset()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
-      val r = Run(name, run, (System.nanoTime() - t0) / 1e9, metrics.snapshot())
+      val wall = (System.nanoTime() - t0) / 1e9
+      val r = Run(name, run, wall, metrics.snapshot(),
+                  CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
       PlanMode.sweep(spark)
       val ss = r.m.stages.sortBy(-_.runMs)
       println(f"%n=== $name run$run wall=${r.wallSec}%.2f s ===")
       println(f"  jobs=${r.jobs} coveredByJobs=${r.coveredSec}%.2f s " +
-        f"deadAir=${r.wallSec - r.coveredSec}%.2f s " +
+        f"deadAir=${r.wallSec - r.coveredSec}%.2f s compiles=${r.compiles} " +
         f"sumRun=${ss.map(_.runMs).sum / 1000.0}%.2f s " +
         f"sumCpu=${ss.map(_.cpuMs).sum / 1000.0}%.2f s stages=${ss.size}")
       for (st <- ss.take(18))

@@ -589,7 +589,7 @@ object Corpus {
   // Scale shape: the component labels are the dedup-cluster funnel
   // (star-edge buckets, O(log diameter) pointer-doubling rounds);
   // the profile adds two bounded partial aggs (components → distinct
-  // sizes) and a 1-row total.
+  // sizes) and a window total over the distinct sizes.
   // -------------------------------------------------------------------
   val qCcProfile: Q = (s, d) =>
     Dedup.sizeProfile(

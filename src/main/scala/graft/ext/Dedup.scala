@@ -3,6 +3,7 @@ package graft.ext
 import graft.Tables
 import graft.ops.Ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a large-scale training-data pipeline, over
@@ -44,8 +45,8 @@ object Dedup {
   // Scale shape: one partial-aggregated scan to hash-clusters, a
   // second partial agg over cluster SIZES (output = distinct sizes, a
   // handful of rows at any corpus scale — the 100×-copy stressor's
-  // whole profile is one row at csize≈100), and a 1-row total
-  // crossJoined back. Every aggregate is a BIGINT; doc_frac is one
+  // whole profile is one row at csize≈100), and the total as a window
+  // sum over those rows. Every aggregate is a BIGINT; doc_frac is one
   // division of identical integers rounded identically.
   // ------------------------------------------------------------------
   val qDupProfile: Q = (s, d) => dupProfile(Tables.documents(s, d))
@@ -70,12 +71,16 @@ object Dedup {
       .select(col("csize"), col("n_clusters"),
               (col("csize") * col("n_clusters")).as("n_docs"),
               ((col("csize") - 1) * col("n_clusters")).as("removable"))
-    val tot = dist.agg(sum(col("n_docs")).as("tot_docs"))
-    dist.crossJoin(tot)
-      .select(col("csize"), col("n_clusters"), col("n_docs"),
-              col("removable"),
-              round(col("n_docs").cast("double")
-                      / col("tot_docs").cast("double"), 6).as("doc_frac"))
+    // tot_docs is a whole-frame window sum over dist (one row per
+    // distinct size, bounded at any scale): its single partition arrives
+    // sorted on csize, so the presentation sort adds no exchange.
+    val all = Window.orderBy(col("csize"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    dist.select(col("csize"), col("n_clusters"), col("n_docs"),
+                col("removable"),
+                round(col("n_docs").cast("double")
+                        / sum(col("n_docs")).over(all).cast("double"), 6)
+                  .as("doc_frac"))
       .orderBy(col("csize"))
   }
 
@@ -775,9 +780,6 @@ object Dedup {
     // only; grams join back exactly once, for the unique candidate pairs.
     val candidateIds = starCandidates(docs, NumBands, RowsPerBand)
     val gramsOf = docs.select(col("doc_id"), col("grams"))
-    // pairs feed the per-doc partner stats twice and the dup flag once —
-    // persist the (small) verified-pair table rather than re-running the
-    // candidate join per consumer.
     val pairs = candidateIds
       .join(gramsOf.select(col("doc_id").as("doc_a"), col("grams").as("grams_a")),
             Seq("doc_a"))
@@ -786,18 +788,20 @@ object Dedup {
       .withColumn("jaccard",
         size(array_intersect(col("grams_a"), col("grams_b"))).cast("double") /
         size(array_union(col("grams_a"), col("grams_b"))))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .transform(graft.PlanMode.checkpointTail)
-    val partners = pairs.select(col("doc_a").as("doc_id"), col("jaccard"))
-      .unionByName(pairs.select(col("doc_b").as("doc_id"), col("jaccard")))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_candidates"), max(col("jaccard")).as("max_jaccard"))
-    val dupFlag = pairs.filter(col("jaccard") >= 0.9)
-      .select(col("doc_b").as("doc_id")).distinct()
-      .withColumn("is_dup", lit(1L))
+    // Each verified pair is read once: it fans out to its two docs —
+    // the b side flagged a duplicate when the pair is ≥ 0.9 similar —
+    // and one doc-keyed aggregation yields every per-doc stat.
+    val ends = explode(array(
+      struct(col("doc_a").as("doc_id"), col("jaccard"), lit(0L).as("dup")),
+      struct(col("doc_b").as("doc_id"), col("jaccard"),
+             (col("jaccard") >= 0.9).cast("bigint").as("dup"))))
+    val partners = pairs.select(ends.as("e"))
+      .groupBy(col("e.doc_id").as("doc_id"))
+      .agg(count(lit(1)).as("n_candidates"),
+           max(col("e.jaccard")).as("max_jaccard"),
+           max(col("e.dup")).as("is_dup"))
     val out = Tables.documents(s, d).select(col("doc_id"))
       .join(partners, Seq("doc_id"), "left")
-      .join(dupFlag, Seq("doc_id"), "left")
       .select(col("doc_id"),
               coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
               round(coalesce(col("max_jaccard"), lit(0.0)), 6).as("max_jaccard"),

@@ -37,21 +37,42 @@ object Similarity {
   // Scores are rounded to 6 decimals on BOTH engines before ranking so
   // that float-summation-order noise in the oracle can never flip a
   // rank; vec_id breaks residual ties.
-  val qSimilarityTopk: Q = (s, d) => {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"),
-              VectorFunctions.vecNorm(col("embedding")).as("nrm"))
+  val qSimilarityTopk: Q = (s, d) =>
+    exactTopk(s, d).orderBy(col("qid"), col("rn"))
+
+  /** q_similarity_topk's ranked list, unsorted: (qid, vec_id, score, rn).
+    * The exact baseline every recall eval grades against.
+    */
+  private def exactTopk(s: SparkSession, d: String): DataFrame =
+    bruteTopk(Tables.embeddings(s, d), col("embedding"))
+
+  /** Brute-force candidate pass: every query vector (vec_id <
+    * NumQueries) against every other row of `vecs`, scored under each
+    * named vector form (an array<float> column over `vecs`) as
+    * `score_<name>` — cosine over that form, rounded to 6 places. One
+    * broadcast of the bounded query side, one scan of the corpus, each
+    * form's norms computed once per vector. Returns (qid, vec_id,
+    * score_<name>...).
+    */
+  private def bruteScores(vecs: DataFrame, forms: (String, Column)*): DataFrame = {
+    val e = vecs.select(col("vec_id") +: forms.flatMap { case (f, v) =>
+      Seq(v.as(s"v_$f"), VectorFunctions.vecNorm(v).as(s"nrm_$f")) }: _*)
     val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-              col("nrm").as("qnrm"))
-    val cand = e
-      .join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("score",
-        round(VectorFunctions.vecDot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
-    Ops.topKPerGroup(cand, Seq("qid"), -col("score"), col("vec_id"), TopK)
-      .select(col("qid"), col("vec_id"), col("score"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
+      .select(col("vec_id").as("qid") +: forms.flatMap { case (f, _) =>
+        Seq(col(s"v_$f").as(s"qv_$f"), col(s"nrm_$f").as(s"qnrm_$f")) }: _*)
+    e.join(broadcast(q), col("vec_id") =!= col("qid"))
+      .select(col("qid") +: col("vec_id") +: forms.map { case (f, _) =>
+        round(VectorFunctions.vecDot(col(s"qv_$f"), col(s"v_$f")) /
+                (col(s"qnrm_$f") * col(s"nrm_$f")), 6).as(s"score_$f") }: _*)
   }
+
+  /** Brute-force cosine top-K over the vector form `v` of `vecs`:
+    * (qid, vec_id, score, rn), ranked (score desc, vec_id), unsorted.
+    */
+  private def bruteTopk(vecs: DataFrame, v: Column): DataFrame =
+    Ops.topKPerGroup(bruteScores(vecs, "v" -> v), Seq("qid"),
+                     -col("score_v"), col("vec_id"), TopK)
+      .select(col("qid"), col("vec_id"), col("score_v").as("score"), col("rn"))
 
   val qSimilarityTopkSql: String =
     """WITH q AS (SELECT vec_id AS qid, embedding AS qe
@@ -304,7 +325,10 @@ object Similarity {
   // ANN: bucket the corpus once, probe each query's bucket only, exact
   // cosine re-rank inside the bucket. Output keeps the bucket id so
   // recall/selectivity is inspectable.
-  val qAnnLsh: Q = (s, d) => {
+  val qAnnLsh: Q = (s, d) => annLshTopk(s, d).orderBy(col("qid"), col("rn"))
+
+  /** q_ann_lsh's ranked list, unsorted: (qid, bucket, vec_id, score, rn). */
+  private def annLshTopk(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
               lshBucket(col("embedding")).as("bucket"),
@@ -318,7 +342,6 @@ object Similarity {
         round(VectorFunctions.vecDot(col("qe"), col("embedding")) / (col("qnrm") * col("nrm")), 6))
     Ops.topKPerGroup(cand, Seq("qid"), -col("score"), col("vec_id"), TopK)
       .select(col("qid"), col("bucket"), col("vec_id"), col("score"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
   }
 
   // ------------------------------------------------------------------
@@ -426,10 +449,12 @@ object Similarity {
     }
   }
 
-  val qAnnIvf: Q = (s, d) => {
+  val qAnnIvf: Q = (s, d) => annIvfTopk(s, d).orderBy(col("qid"), col("rn"))
+
+  /** q_ann_ivf's ranked list, unsorted: (qid, cell, vec_id, score, rn). */
+  private def annIvfTopk(s: SparkSession, d: String): DataFrame = {
     val e0 = Tables.embeddings(s, d)
     ivfTopkWith(e0, trainCodebook(e0), NProbe)
-      .orderBy(col("qid"), col("rn"))
   }
 
   /** The IVF probe retrieval over a pre-trained codebook, parametrized
@@ -622,36 +647,50 @@ object Similarity {
   // intersection count is exact, not sampled).
   //
   // Scale shape: both sides are the already-K-bounded per-query lists;
-  // the eval joins ≤TopK rows per query — metadata-sized regardless of
-  // corpus. (The candidate-generation cost IS the two retrievals; at
-  // 100 TB an eval run samples queries, which is what NumQueries is.)
+  // the eval is ONE qid-keyed aggregation over their tagged union —
+  // metadata-sized regardless of corpus. (The candidate-generation cost
+  // IS the two retrievals; at 100 TB an eval run samples queries, which
+  // is what NumQueries is.)
   // ------------------------------------------------------------------
   /** recall@K of an approximate (qid, vec_id) list against the exact
-    * one — shared by the per-index-family eval queries.
+    * one — shared by the per-index-family eval queries. One aggregation
+    * over the tagged union of both lists, grouped on qid: each qid's
+    * exact and approximate id sets give n_exact and n_hits (their
+    * intersection) together; a qid absent from the exact list has an
+    * empty exact set and is dropped.
     */
-  def recallOf(approx: DataFrame, exact: DataFrame): DataFrame = {
-    val hits = exact.join(approx, Seq("qid", "vec_id"), "left_semi")
-      .groupBy(col("qid")).agg(count(lit(1)).as("n_hits"))
-    exact.groupBy(col("qid")).agg(count(lit(1)).as("n_exact"))
-      .join(hits, Seq("qid"), "left")
-      .select(col("qid"), col("n_exact"),
-              coalesce(col("n_hits"), lit(0L)).as("n_hits"),
-              (coalesce(col("n_hits"), lit(0L)).cast("double") /
-                 col("n_exact").cast("double")).as("recall"))
+  def recallOf(approx: DataFrame, exact: DataFrame): DataFrame =
+    exact.select(col("qid"), col("vec_id"), lit(true).as("exact"))
+      .unionByName(approx.select(col("qid"), col("vec_id"), lit(false).as("exact")))
+      .groupBy(col("qid"))
+      .agg(collect_set(when(col("exact"), col("vec_id"))).as("xs"),
+           collect_set(when(!col("exact"), col("vec_id"))).as("as"))
+      .filter(size(col("xs")) > 0)
+      .transform(recallRows)
+
+  /** (qid, xs, as) — each qid's exact and approximate id sets — → the
+    * eval's rows (qid, n_exact, n_hits, recall), sorted by qid for
+    * presentation.
+    */
+  private def recallRows(sets: DataFrame): DataFrame = {
+    val nHits = size(array_intersect(col("xs"), col("as"))).cast("bigint")
+    sets.select(col("qid"), size(col("xs")).cast("bigint").as("n_exact"),
+                nHits.as("n_hits"),
+                (nHits.cast("double") / size(col("xs")).cast("double")).as("recall"))
       .orderBy(col("qid"))
   }
 
   val qAnnRecall: Q = (s, d) => recallOf(
-    qAnnIvf(s, d).select(col("qid"), col("vec_id")),
-    qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
+    annIvfTopk(s, d).select(col("qid"), col("vec_id")),
+    exactTopk(s, d).select(col("qid"), col("vec_id")))
 
   // q_lsh_recall — the same eval grading the sign-LSH single-bucket
   // retrieval; on near-uniform embeddings its recall sits well below
   // IVF's (the AnnClusteredSpec-documented geometry effect), and
   // surfacing that number IS the operator's job.
   val qLshRecall: Q = (s, d) => recallOf(
-    qAnnLsh(s, d).select(col("qid"), col("vec_id")),
-    qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
+    annLshTopk(s, d).select(col("qid"), col("vec_id")),
+    exactTopk(s, d).select(col("qid"), col("vec_id")))
 
   // q_pq_recall — the eval grading the PQ ADC shortlist + exact
   // re-rank: quantifies what the 8-byte-code scan trade costs in
@@ -659,8 +698,31 @@ object Similarity {
   // (IVF / LSH / PQ against one shared exact baseline and one shared
   // oracle tail).
   val qPqRecall: Q = (s, d) => recallOf(
-    qAnnPq(s, d).select(col("qid"), col("vec_id")),
-    qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
+    annPqTopk(s, d).select(col("qid"), col("vec_id")),
+    exactTopk(s, d).select(col("qid"), col("vec_id")))
+
+  /** recall@K of brute-force cosine over an approximate per-vector form
+    * `approx` (an array<float> column over the embeddings) against the
+    * full-precision exact top-K — for the evals whose approximate
+    * retrieval re-scores the same full candidate set. One candidate
+    * pass scores both forms, and one qid-keyed aggregation keeps each
+    * form's top-K ids as a bounded heap (graftshim.BoundedTopK, ranked
+    * score desc, vec_id — the topKPerGroup order): map-side partial
+    * aggregation ships at most K ids per qid per partition and form,
+    * where rank windows over the candidates would shuffle every
+    * candidate row.
+    */
+  private def formRecall(vecs: DataFrame, approx: Column): DataFrame = {
+    import org.apache.spark.sql.graftshim.{BoundedTopK, Shim}
+    def topIds(score: String): Column =
+      Shim.column(BoundedTopK(Shim.expression(-col(score)),
+                              Shim.expression(col("vec_id")), TopK)
+        .toAggregateExpression()).getField("id")
+    bruteScores(vecs, "exact" -> col("embedding"), "approx" -> approx)
+      .groupBy(col("qid"))
+      .agg(topIds("score_exact").as("xs"), topIds("score_approx").as("as"))
+      .transform(recallRows)
+  }
 
   /** The exact-side + intersection tail of a recall oracle: grades the
     * CTE named `approx_list` (qid, vec_id) against brute-force cosine.
@@ -799,12 +861,13 @@ object Similarity {
                .cast("int").as("code"))
     }: _*)
 
-  val qAnnPq: Q = (s, d) => {
-    val rer = pqRerankedShortlist(s, Tables.embeddings(s, d))
-    Ops.topKPerGroup(rer, Seq("qid"), -col("score"), col("vec_id"), TopK)
+  val qAnnPq: Q = (s, d) => annPqTopk(s, d).orderBy(col("qid"), col("rn"))
+
+  /** q_ann_pq's ranked list, unsorted: (qid, vec_id, adc, score, rn). */
+  private def annPqTopk(s: SparkSession, d: String): DataFrame =
+    Ops.topKPerGroup(pqRerankedShortlist(s, Tables.embeddings(s, d)), Seq("qid"),
+                     -col("score"), col("vec_id"), TopK)
       .select(col("qid"), col("vec_id"), col("adc"), col("score"), col("rn"))
-      .orderBy(col("qid"), col("rn"))
-  }
 
   /** The PQ funnel through the exact-cosine re-rank of the ADC
     * shortlist, ADC rank (`srn`) retained — shared by q_ann_pq (final
@@ -995,7 +1058,7 @@ object Similarity {
     // caches and re-optimize the PQ/brute-force funnels per stage-job.
     val rer = graft.PlanMode.checkpointTail(pqRerankedShortlist(s, e0))
     val exact = graft.PlanMode.checkpointTail(
-      qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
+      exactTopk(s, d).select(col("qid"), col("vec_id")))
     // Round-15 shape: ONE fused plan for the whole depth curve (the
     // qIvfSweep note) — each re-ranked row fans out to every depth that
     // includes its shortlist rank, then one (depth, qid) top-K + one
@@ -1055,8 +1118,8 @@ object Similarity {
   // the float32 store 4× with no codebook to train. Retrieval is
   // brute-force cosine over the RECONSTRUCTED (dequantized) vectors —
   // the symmetric-distance regime an SQ8 index actually scans in —
-  // graded against the full-precision exact top-K via the shared
-  // recallOf / recallTailSql pair.
+  // graded against the full-precision exact top-K (formRecall; the
+  // oracle's tail is the shared recallTailSql).
   //
   // Exactness: reconstruction is the floor-based double arithmetic of
   // q_embed_quantize verbatim, snapped to REAL per element (DuckDB's
@@ -1064,45 +1127,37 @@ object Similarity {
   // so both engines score the identical float vectors with the same
   // in-index-order double folds and round-6 tiebreak.
   //
-  // Scale shape: the recon projection is map-only and the retrieval +
-  // eval are exactly q_similarity_topk's (NumQueries-sampled scan,
-  // K-bounded tail) — the operator prices the 4× bandwidth cut, it
+  // Scale shape: the recon projection is map-only, and ONE
+  // NumQueries-sampled candidate scan scores both the full and the
+  // dequantized vectors; one qid-keyed bounded top-K aggregation ranks
+  // both (formRecall) — the operator prices the 4× bandwidth cut, it
   // does not add plan weight.
   // ------------------------------------------------------------------
   val SqLevels = 255
 
   /** Map-only dequantized corpus: per-vector affine int8 round trip,
-    * reconstructed values snapped to float.
+    * reconstructed values snapped to float. (vec_id, recon).
     */
-  private[graft] def sqReconstructed(e0: DataFrame): DataFrame = {
+  private[graft] def sqReconstructed(e0: DataFrame): DataFrame =
+    withSqRecon(e0).select(col("vec_id"), col("recon"))
+
+  /** `e0` with `recon`, the dequantized form of `embedding`, appended —
+    * the one definition of the SQ vector.
+    */
+  private def withSqRecon(e0: DataFrame): DataFrame = {
     val xd = (c: Column) => c.cast("double")
-    e0.select(col("vec_id"), col("embedding"),
-              xd(array_min(col("embedding"))).as("mn"),
-              xd(array_max(col("embedding"))).as("mx"))
-      .withColumn("scale", (col("mx") - col("mn")) / lit(SqLevels.toDouble))
-      .select(col("vec_id"),
-              transform(col("embedding"), x =>
-                when(col("scale") === 0.0, col("mn")).otherwise(
-                  col("mn") + floor((xd(x) - col("mn")) / col("scale"))
-                    * col("scale")).cast("float")).as("recon"))
+    e0.withColumn("mn", xd(array_min(col("embedding"))))
+      .withColumn("scale",
+        (xd(array_max(col("embedding"))) - col("mn")) / lit(SqLevels.toDouble))
+      .withColumn("recon", transform(col("embedding"), x =>
+        when(col("scale") === 0.0, col("mn")).otherwise(
+          col("mn") + floor((xd(x) - col("mn")) / col("scale"))
+            * col("scale")).cast("float")))
+      .drop("mn", "scale")
   }
 
-  val qSqRecall: Q = (s, d) => {
-    val r = sqReconstructed(Tables.embeddings(s, d))
-      .select(col("vec_id"), col("recon"),
-              VectorFunctions.vecNorm(col("recon")).as("nrm"))
-    val q = r.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("recon").as("qrecon"),
-              col("nrm").as("qnrm"))
-    val cand = r.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("score",
-        round(VectorFunctions.vecDot(col("qrecon"), col("recon"))
-                / (col("qnrm") * col("nrm")), 6))
-    val approx = Ops.topKPerGroup(cand, Seq("qid"), -col("score"),
-                                  col("vec_id"), TopK)
-      .select(col("qid"), col("vec_id"))
-    recallOf(approx, qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
-  }
+  val qSqRecall: Q = (s, d) =>
+    formRecall(withSqRecon(Tables.embeddings(s, d)), col("recon"))
 
   val qSqRecallSql: String = {
     val recon =
@@ -1163,41 +1218,31 @@ object Similarity {
   //
   // Exactness: the truncated side is the q_similarity_topk arithmetic
   // verbatim on slice(embedding, 1, MrlDim) — same round-6 score, same
-  // (score DESC, vec_id) tiebreak — and the eval tail is the shared
-  // recallOf / recallTailSql pair, so every count is BIGINT and recall
-  // is one division of identical integers.
+  // (score DESC, vec_id) tiebreak — and the eval counts hits as
+  // BIGINTs (formRecall; the oracle's tail is the shared
+  // recallTailSql), so recall is one division of identical integers.
   //
-  // Scale shape: identical to the panel siblings — the eval joins two
-  // K-bounded per-query lists (metadata-sized); the retrieval cost is
-  // the NumQueries-sampled brute-force scan, truncated-side reading
-  // MrlDim/Dim of the vector bytes (the knob's entire point).
+  // Scale shape: the q_sq_recall shape — one NumQueries-sampled
+  // brute-force scan scores both the full and the truncated vectors,
+  // and one qid-keyed bounded top-K aggregation ranks both. A
+  // truncated-only index reads MrlDim/Dim of the vector bytes (the
+  // knob's entire point); the eval reads both, once.
   // ------------------------------------------------------------------
   val MrlDim = 16
+
+  /** The first `dims` dimensions of a vector — MRL's truncated form. */
+  private def mrlTruncated(emb: Column, dims: Int): Column = slice(emb, 1, dims)
 
   /** Brute-force cosine top-K over the first `dims` dimensions —
     * parametrized so the spec can pin dims = Dim ≡ the exact retrieval
     * (structural self-consistency of the truncation pipeline).
     */
-  def mrlTopk(s: SparkSession, d: String, dims: Int): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), slice(col("embedding"), 1, dims).as("te"))
-      .select(col("vec_id"), col("te"),
-              VectorFunctions.vecNorm(col("te")).as("nrm"))
-    val q = e.filter(col("vec_id") < NumQueries)
-      .select(col("vec_id").as("qid"), col("te").as("qe"),
-              col("nrm").as("qnrm"))
-    val cand = e
-      .join(broadcast(q), col("vec_id") =!= col("qid"))
-      .withColumn("score",
-        round(VectorFunctions.vecDot(col("qe"), col("te"))
-                / (col("qnrm") * col("nrm")), 6))
-    Ops.topKPerGroup(cand, Seq("qid"), -col("score"), col("vec_id"), TopK)
+  def mrlTopk(s: SparkSession, d: String, dims: Int): DataFrame =
+    bruteTopk(Tables.embeddings(s, d), mrlTruncated(col("embedding"), dims))
       .select(col("qid"), col("vec_id"))
-  }
 
-  val qMrlRecall: Q = (s, d) => recallOf(
-    mrlTopk(s, d, MrlDim),
-    qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
+  val qMrlRecall: Q = (s, d) =>
+    formRecall(Tables.embeddings(s, d), mrlTruncated(col("embedding"), MrlDim))
 
   val qMrlRecallSql: String =
     s"""WITH nrm AS (
@@ -1257,7 +1302,7 @@ object Similarity {
     // rationale: one materialization each, leaf plans for all points.
     val e = graft.PlanMode.checkpointTail(ivfAssigned(e0, mat))
     val exact = graft.PlanMode.checkpointTail(
-      qSimilarityTopk(s, d).select(col("qid"), col("vec_id")))
+      exactTopk(s, d).select(col("qid"), col("vec_id")))
     // Round-15 shape: ONE fused plan for the whole nprobe curve instead
     // of a 4-branch union that re-ran the probe join per point (the
     // sweep was pure job cadence — 37 AQE stage-jobs, cpu ≈ 1 s). Each

@@ -13,8 +13,6 @@ object VectorFunctions {
   def vecNorm(a: Column): Column = Shim.column(FloatVectorNorm(Shim.expression(a)))
   def hamming(a: Column, b: Column): Column =
     Shim.column(HammingDistance(Shim.expression(a), Shim.expression(b)))
-  def vecCosine(a: Column, b: Column): Column =
-    vecDot(a, b) / (vecNorm(a) * vecNorm(b))
 
   /** Codebook-row ids ranked by dot product with `a` (dot desc, id asc).
     * `mat` is row-major numRows×dim; it rides the plan as one reference

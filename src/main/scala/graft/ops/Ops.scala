@@ -171,9 +171,6 @@ object Ops {
   def exactSum(c: Column, scale: Int = 2): Column =
     sum(c.cast(s"decimal(18,$scale)")).cast("double")
 
-  def exactAvg(c: Column, scale: Int = 2): Column =
-    sum(c.cast(s"decimal(18,$scale)")).cast("double") / count(lit(1))
-
   // ---------------------------------------------------------------------
   // Ordered group-concat (reference's sorted emit + trailing-comma strip,
   // UserHotcar.java:175-198): collect, sort, join — concat_ws makes the
@@ -262,8 +259,19 @@ object Ops {
   // ---------------------------------------------------------------------
   val HashModP = 1000000007L
 
-  /** First 60 bits of md5(c) as a non-negative bigint. */
-  def md5Bits60(c: Column): Column =
+  /** First 60 bits of md5(c) as a non-negative bigint: one native
+    * expression over the digest bytes (graftshim.Md5Bits60).
+    */
+  def md5Bits60(c: Column): Column = {
+    import org.apache.spark.sql.graftshim.{Md5Bits60, Shim}
+    Shim.column(Md5Bits60(Shim.expression(c)))
+  }
+
+  /** The hex round trip [[md5Bits60]] replaces — md5 hex, first 15
+    * chars, base 16 → 10 — kept as the spec oracle; it is also the
+    * DuckDB oracles' formulation.
+    */
+  def md5Bits60HexForm(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("bigint")
 
   /** MinHash signature over pre-hashed gram values (md5Bits60 % HashModP):

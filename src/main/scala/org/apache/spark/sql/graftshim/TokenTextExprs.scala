@@ -1,6 +1,6 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -23,12 +23,51 @@ private[graftshim] object TokenHash {
     md.reset()
     md.update(token.getBytes)
     if (salt.length > 0) md.update(salt)
-    val dig = md.digest()
+    bits60(md.digest())
+  }
+
+  /** First 60 bits of md5(bytes), on this thread's digest instance. */
+  def md5Bits60(bytes: Array[Byte]): Long = {
+    val md = threadMd5.get()
+    md.reset()
+    bits60(md.digest(bytes))
+  }
+
+  private val threadMd5 = ThreadLocal.withInitial[java.security.MessageDigest](
+    () => java.security.MessageDigest.getInstance("MD5"))
+
+  private def bits60(dig: Array[Byte]): Long = {
     var v = 0L
     var b = 0
     while (b < 7) { v = (v << 8) | (dig(b) & 0xffL); b += 1 }
     (v << 4) | ((dig(7) >> 4) & 0xfL)
   }
+}
+
+/** The 60-bit md5 digest of one value (its bytes; strings cast to
+  * binary as md5() casts them): what conv(substring(md5(x), 1, 15), 16,
+  * 10) parses, computed from the digest bytes instead of through a
+  * 32-char hex string, a substring and a base conversion. Null in, null
+  * out. Pinned equal to the hex form by TokenTextExprsSpec.
+  */
+case class Md5Bits60(child: Expression)
+    extends UnaryExpression with ImplicitCastInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(BinaryType)
+  override def dataType: DataType = LongType
+  override def prettyName: String = "graft_md5_bits60"
+
+  def compute(bytes: Array[Byte]): Long = TokenHash.md5Bits60(bytes)
+
+  override def nullSafeEval(a: Any): Any = compute(a.asInstanceOf[Array[Byte]])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("md5Bits60", this, classOf[Md5Bits60].getName)
+    nullSafeCodeGen(ctx, ev, a => s"${ev.value} = $ref.compute($a);")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Md5Bits60 =
+    copy(child = newChild)
 }
 
 /** 60-bit SimHash of a token array in ONE compiled pass: per token the

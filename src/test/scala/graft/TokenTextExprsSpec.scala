@@ -132,6 +132,29 @@ class TokenTextExprsSpec extends AnyFunSuite {
     }
   }
 
+  test("Md5Bits60 == md5 hex round trip: fixture tokens, salts, non-ASCII, empty, null") {
+    val words = fixtureDocs.select(explode(Ops.tokens(col("text"))).as("t"))
+      .unionByName(crafted.select(explode(Ops.tokens(col("text"))).as("t")))
+      .unionByName(crafted.select(col("text").as("t"))) // "", multi-byte
+      .unionByName(spark.range(1).select(lit(null).cast("string").as("t")))
+    assert(words.filter(col("t") === "").count() > 0)
+    for (x <- Seq(col("t"), concat(col("t"), lit(":qc")),
+                  concat(col("t"), lit(":"), col("t")))) {
+      val both = words.select(Ops.md5Bits60(x).as("n"),
+                              Ops.md5Bits60HexForm(x).as("h"))
+      assert(both.filter(!(col("n") <=> col("h"))).count() === 0,
+             s"Md5Bits60 drifted from the hex form on $x")
+      assert(both.filter(col("n").isNull).count() === 1, "null in, null out")
+    }
+    // the interpreted path (no codegen) agrees too
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftshim.Md5Bits60
+    val bytes = "ünïcode".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    assert(Md5Bits60(Literal(bytes)).eval() ==
+             spark.range(1).select(Ops.md5Bits60HexForm(lit("ünïcode")))
+               .head().getLong(0))
+  }
+
   test("QcRound.roundToLong == BigDecimal HALF_UP + toLong, brute force") {
     def ref(x: Double): Long =
       if (java.lang.Double.isNaN(x) || java.lang.Double.isInfinite(x)) x.toLong
