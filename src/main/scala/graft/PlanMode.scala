@@ -43,6 +43,8 @@ object PlanMode {
     * checkpointTail runs anyway, so a caller that needs a driver-side
     * number about the frame (a convergence sum, a row count) gets it
     * without a second aggregation job over the checkpointed blocks.
+    * Columns named in `scratch` feed the metric only: they are dropped
+    * above the observation, so the checkpoint does not store them.
     * Returns the checkpointed frame (its plan holds no observe node) and
     * the observed row. The value is read back synchronously from the
     * checkpoint action's executed plan, in both the localCheckpoint and
@@ -50,9 +52,10 @@ object PlanMode {
     * row is an error, never a default: a caller looping to a fixpoint on
     * the value must not spin on a stale one.
     */
-  def checkpointObserved(df: DataFrame, metric: Column): (DataFrame, Row) = {
+  def checkpointObserved(df: DataFrame, metric: Column,
+                         scratch: String*): (DataFrame, Row) = {
     val name = s"graft_observed_${observeSeq.incrementAndGet()}"
-    val observed = df.observe(name, metric)
+    val observed = df.observe(name, metric).drop(scratch: _*)
     val out = checkpointTail(observed)
     val row = observed.queryExecution.observedMetrics.getOrElse(name,
       throw new IllegalStateException(

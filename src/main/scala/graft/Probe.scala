@@ -36,7 +36,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * job-covered wall and dead air between jobs, the generated classes
   * compiled (codegen cache misses), and each stage's wall,
   * executor run and CPU, input and shuffle bytes; read the second run
-  * (post-JIT, post-file-index).
+  * (post-JIT, post-file-index). Jobs, compiles and wall are also split
+  * into what fired while the frame was built (eager checkpoints, driver
+  * collects) and what fired while it was consumed.
   *
   * sfDir defaults to `SPARK_GRAFT_SF_DIR`.
   */
@@ -178,10 +180,12 @@ object Probe {
   }
 
   /** One profiled run of a query; `compiles` counts the generated
-    * classes Janino compiled during it.
+    * classes Janino compiled during it. The `built` fields cover the
+    * construction of the frame only, the rest of the run consumed it.
     */
   case class Run(name: String, run: Int, wallSec: Double, m: Harness.Snapshot,
-                 compiles: Long) {
+                 compiles: Long, builtSec: Double, builtJobs: Int,
+                 builtCompiles: Long) {
     def jobs: Int = m.jobSpans.size
     /** Wall covered by at least one running job. */
     def coveredSec: Double = {
@@ -202,12 +206,17 @@ object Probe {
     val metrics = Harness.metrics(spark)
     try for (name <- names; run <- 1 to 2) yield {
       metrics.reset()
-      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compiles0 = compiled
       val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count()
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      val built = metrics.snapshot()
+      val builtCompiles = compiled - compiles0
+      val builtSec = (System.nanoTime() - t0) / 1e9
+      df.queryExecution.toRdd.count()
       val wall = (System.nanoTime() - t0) / 1e9
-      val r = Run(name, run, wall, metrics.snapshot(),
-                  CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0)
+      val r = Run(name, run, wall, metrics.snapshot(), compiled - compiles0,
+                  builtSec, built.jobSpans.size, builtCompiles)
       PlanMode.sweep(spark)
       val ss = r.m.stages.sortBy(-_.runMs)
       println(f"%n=== $name run$run wall=${r.wallSec}%.2f s ===")
@@ -215,6 +224,9 @@ object Probe {
         f"deadAir=${r.wallSec - r.coveredSec}%.2f s compiles=${r.compiles} " +
         f"sumRun=${ss.map(_.runMs).sum / 1000.0}%.2f s " +
         f"sumCpu=${ss.map(_.cpuMs).sum / 1000.0}%.2f s stages=${ss.size}")
+      println(f"  construct: jobs=${r.builtJobs} compiles=${r.builtCompiles} " +
+        f"wall=${r.builtSec}%.2f s | consume: jobs=${r.jobs - r.builtJobs} " +
+        f"compiles=${r.compiles - r.builtCompiles} wall=${r.wallSec - r.builtSec}%.2f s")
       for (st <- ss.take(18))
         println(f"  stage ${st.id}%4d ${st.wallMs / 1000.0}%6.2fs run=${st.runMs / 1000.0}%7.2fs " +
           f"cpu=${st.cpuMs / 1000.0}%7.2fs tasks=${st.tasks}%3d " +

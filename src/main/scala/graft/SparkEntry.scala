@@ -26,12 +26,30 @@ object SparkEntry {
     * multimodal).
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    jobs.CoreQueries.queries ++ jobs.RecPipeline.queries ++
+    (jobs.CoreQueries.queries ++ jobs.RecPipeline.queries ++
       jobs.AnalyticsQueries.queries ++
       ext.Dedup.queries ++ ext.Similarity.queries ++ ext.TextOps.queries ++
       ext.Sessions.queries ++ ext.Multimodal.queries ++ ext.Pipeline.queries ++
       ext.Corpus.queries ++ ext.Stats.queries ++ ext.Layout.queries ++
-      sources.KvTable.queries
+      sources.KvTable.queries).map { case (name, q) => name -> stableCodegen(q) }
+
+  /** Whole-stage codegen names each generated class after its codegen
+    * stage id, and under AQE the ids follow the order in which a query's
+    * stages materialize, which varies from run to run: the same operator
+    * pipeline then gets a new class body and misses the codegen cache
+    * (q_dedup_minhash compiled 12 classes again on its second run in one
+    * session, all but one of them a class of its first run under another
+    * id). With
+    * the id left out of the class name, equal pipelines generate equal
+    * source and hit the cache; the id stays in a comment of the generated
+    * code. Set on the session each registry query is built on, since the
+    * caller, not this library, builds the session.
+    */
+  private def stableCodegen(q: (SparkSession, String) => DataFrame)
+      : (SparkSession, String) => DataFrame = (s, d) => {
+    s.conf.set("spark.sql.codegen.useIdInClassName", "false")
+    q(s, d)
+  }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops (those get

@@ -3,6 +3,7 @@ package graft.ext
 import graft.Tables
 import graft.ops.Ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Corpus-preparation operators for a large-scale training-data pipeline,
@@ -14,11 +15,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: everything is signature-group-bys, bounded star-edge
   * joins, or windowed cumulative sums — no all-pairs work, no driver
-  * collects. The connected-components loop is the one iterative operator;
-  * it converges in O(log component diameter) rounds, each round a single
-  * equi-join + partial-aggregating min materialized by ONE checkpoint
-  * that also observes the round's convergence sum — no round fires a
-  * separate aggregation job.
+  * collects. The connected-components loop is the one iterative operator:
+  * it runs over (doc, blocking key) incidence rows, a round is a window
+  * min over the key then one over the doc, and each materialization is
+  * ONE checkpoint that also observes whether a closing key-min changed
+  * anything — so the converged round is its own check, and a one-hop
+  * corpus converges in one materialization.
   */
 object Corpus {
   type Q = (SparkSession, String) => DataFrame
@@ -31,141 +33,130 @@ object Corpus {
   // cluster — exactly what multi-band LSH output needs before canonical
   // selection.
   //
-  // Graph shape: each blocking group contributes STAR edges (member →
-  // group-min), never the full clique — O(n) edges for an n-member
-  // group. Labels propagate by iterated neighbor-min until fixpoint
-  // (deterministic: the fixpoint is the component-min labeling no matter
-  // the iteration schedule). Per round: one shuffle join + one partial
-  // min plus a pointer-doubling shortcut. The round count is
-  // O(log diameter), not corpus size — the standard large-scale CC
-  // recipe (Pregel min-propagation accelerated by path shortcutting,
-  // cf. hash-to-min / Kiveris et al. "Connected Components in
-  // MapReduce and Beyond").
+  // Graph shape: the blocking keys are GROUPS and each doc is a member
+  // of its two groups — the (doc_id, key) incidence rows starKeyed
+  // emits, O(n) rows, never a doc–doc edge list and never the clique.
+  // Labels propagate by alternating a min over each group and a min
+  // over each vertex until fixpoint (deterministic: the fixpoint is the
+  // component-min labeling no matter the schedule). The round count is
+  // O(log diameter) with the pointer-doubling shortcut, not corpus size
+  // — the standard large-scale CC recipe (Pregel min-propagation
+  // accelerated by path shortcutting, cf. hash-to-min / Kiveris et al.
+  // "Connected Components in MapReduce and Beyond").
   // -------------------------------------------------------------------
   /** Min-label propagation to fixpoint over a symmetric edge list:
     * returns (doc_id, label) where label is the component minimum.
-    * Deterministic regardless of iteration schedule (the fixpoint is
-    * unique); each round is one equi-join + partial-aggregating min,
-    * materialized by exactly one checkpoint (PlanMode.checkpointTail)
-    * on which the convergence sum Σlabel is OBSERVED — no separate
-    * aggregation job per round. The converged round's checkpoint is the
-    * returned frame, so its lineage is one stable scan, with every other
-    * per-round checkpoint released.
     *
-    * Edges are expected between members of `vertices` (an edge to a
-    * non-vertex is ignored, as the propagation join ignores it).
+    * An adapter onto the incidence loop (`propagate`): each vertex is
+    * the one member of its own group — so an isolated vertex keeps its
+    * identity label, and that row is the one the result is read from —
+    * and each edge {src, dst} is a two-member group, keyed by
+    * (least, greatest) so the (src, dst) and (dst, src) rows of the
+    * symmetric list each contribute one member. Edge rows whose src is
+    * not in `vertices` are dropped; an edge whose dst is not a vertex is
+    * then a group of one, so an edge that touches a non-vertex is
+    * ignored.
     *
     * @param initLabels optional warm-start (doc_id, label) with
-    *   label(v) <= v and label(v) a member of v's component. Absent, the
-    *   loop starts from one neighbor-min step over the identity labeling,
-    *   least(v, min(dst)), taken from the checkpointed edges (for the star
-    *   graphs of clusterLabelsOf that is exactly the star-rep minimum).
-    *   Vertices missing from a given warm start fall back to identity
-    *   (left join below), so a partial warm start can never silently
-    *   drop vertices.
+    *   label(v) <= v and label(v) a member of v's component. Vertices
+    *   missing from a given warm start fall back to identity (left join
+    *   below), so a partial warm start can never silently drop vertices.
     */
   def minLabelPropagate(vertices: DataFrame, edges: DataFrame,
                         initLabels: Option[DataFrame] = None): DataFrame = {
-    // AQE stays ON for the loop as of round 15. The old AQE-off
-    // rationale (replanning latency dominated, 0.8 → 0.5 s/round) was
-    // measured when every round re-optimized the full edge-derivation
-    // plan; with the checkpointed-leaf inputs below, replanning is a
-    // 3-join micro-plan and AQE's partition coalescing + runtime
-    // broadcast remove the fixed-32-partition sort-merge machinery each
-    // round paid — profiled on q_dbscan's sf0.1 ε-graph: 34.8 → 1.8
-    // executor-cpu-s, wall 5.7 → 4.1 s (same direction on
-    // q_dedup_cluster and the pipeline near-dup stage). At scale AQE
-    // additionally restores the skew handling every other join gets.
-    //
-    // CHECKPOINTED leaves, not persist (round-15, the pagerank fix):
-    // with persist every round's fresh Dataset re-analyzes and
-    // re-optimizes the full edge-derivation plan (candidate generation,
-    // verify joins) under AQE-off static planning, whose pre-fill size
-    // estimate also denies the rounds their broadcast — profiled on
-    // q_dbscan's ε-graph as ~3 executor-cpu-s per round of re-derived
-    // candidate pipeline. A leaf edge list with exact stats makes each
-    // round three tiny joins. Same rows: eager materialization of the
-    // identical frames.
-    val e = graft.PlanMode.checkpointTail(edges)
-    // One neighbor-min step: each vertex takes the least of its own
-    // label and its neighbors' labels.
-    def nbrStep(labels: DataFrame): DataFrame = {
-      val nbrMin = e
-        .join(labels, e("dst") === labels("doc_id"))
-        .groupBy(e("src")).agg(min(col("label")).as("nbr_label"))
-      labels.alias("l")
-        .join(nbrMin, col("l.doc_id") === nbrMin("src"), "left")
-        .select(col("l.doc_id").as("doc_id"),
-                least(col("l.label"),
-                      coalesce(col("nbr_label"), col("l.label"))).as("label"))
+    val vs = vertices.select(col("doc_id"))
+    val self = vs.select(col("doc_id"),
+      struct(col("doc_id").as("a"), col("doc_id").as("b")).as("grp"),
+      lit(0).as("pos"))
+    val pairs = edges
+      .join(vs.withColumnRenamed("doc_id", "src"), Seq("src"), "left_semi")
+      .select(col("src").as("doc_id"),
+        struct(least(col("src"), col("dst")).as("a"),
+               greatest(col("src"), col("dst")).as("b")).as("grp"),
+        lit(1).as("pos"))
+    val rows = self.unionByName(pairs)
+    propagate(initLabels match {
+      case Some(init) =>
+        rows.join(init.select(col("doc_id"), col("label")), Seq("doc_id"),
+                  "left")
+          .withColumn("label", coalesce(col("label"), col("doc_id")))
+      case None => rows.withColumn("label", col("doc_id"))
+    })
+  }
+
+  /** The connected-components loop over incidence rows (doc_id, grp,
+    * pos, label): a vertex belongs to every group it has a row in, the
+    * row with pos = 0 is its one primary row, and label is its starting
+    * label (label <= doc_id, a member of the doc's component; the same
+    * on all of a doc's rows). Returns (doc_id, label) with label the
+    * minimum doc_id of its component, where components are the
+    * connected pieces of the vertex–group incidence graph.
+    *
+    * A round is a min over the group, then a min over the vertex: two
+    * window exchanges. Every materialization — one checkpoint
+    * (PlanMode.checkpointTail) — ends with one more group-min, and the
+    * number of rows that last step lowered is OBSERVED on the same
+    * checkpoint (PlanMode.checkpointObserved). Zero means every group
+    * already agreed on the vertex-consistent labeling before it, so that
+    * labeling is constant on components and, labels being component
+    * members <= their vertex, equal to the component minimum: the
+    * converged materialization is its own check, and no round runs only
+    * to see that nothing changed. A one-hop graph (the star blocking of
+    * clusterLabelsOf) converges in one materialization. The next round
+    * starts from the checked group-min, so it runs the vertex-min only.
+    * The result is the primary rows of the last checkpoint — a filter,
+    * no shuffle — with every other checkpoint released.
+    */
+  private def propagate(rows: DataFrame): DataFrame = {
+    val byGrp = Window.partitionBy(col("grp"))
+    val byDoc = Window.partitionBy(col("doc_id"))
+    def groupMin(df: DataFrame): DataFrame =
+      df.withColumn("label", min(col("label")).over(byGrp))
+    def vertexMin(df: DataFrame): DataFrame =
+      df.withColumn("label", min(col("label")).over(byDoc))
+    // Pointer doubling (round-10): label(v) names a vertex w of v's own
+    // component with w <= v, so composing the labeling with itself —
+    // label(v) := label(label(v)), read off w's primary row — halves the
+    // remaining distance to the component min. Group/vertex mins alone
+    // need diameter-many rounds (hash-to-min); with the shortcut the
+    // round count is O(log diameter): measured 46 s -> 12 s cold on
+    // q_dbscan's sf0.1 cross-label ε-graph. Applied from the third
+    // materialization: one-hop graphs have converged by then and would
+    // pay the extra label-keyed join for nothing.
+    def shortcut(df: DataFrame): DataFrame = {
+      val at = df.filter(col("pos") === 0)
+        .select(col("doc_id").as("w"), col("label").as("w_label"))
+      df.join(at, col("label") === col("w"), "left")
+        .select(col("doc_id"), col("grp"), col("pos"),
+                coalesce(col("w_label"), col("label")).as("label"))
     }
-    // Convergence check without a compare-join: labels are per-vertex
-    // non-increasing, so Σlabel (exact decimal — ids can be huge at
-    // scale) strictly decreases on every round that changed anything.
-    // The sum is OBSERVED on the checkpoint that materializes the round
-    // anyway (PlanMode.checkpointObserved), so a round is one
-    // materialization with no separate aggregation job. SUM over zero
-    // rows is NULL — map to 0 so an empty vertex set converges on the
-    // first round instead of NPE-ing on compareTo.
-    def materialize(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val (out, row) = graft.PlanMode.checkpointObserved(df,
-        sum(col("label").cast("decimal(38,0)")).as("s"))
-      (out, Option(row.getDecimal(0)).getOrElse(java.math.BigDecimal.ZERO))
+    // The checked group-min, materialized. Each materialization's plan
+    // reads the previous checkpoint only, so lineage never grows with
+    // the round count (un-truncated, the shortcut's self-join doubles
+    // the plan every round and OOMs the driver during planning).
+    def materialize(df: DataFrame): (DataFrame, Long) = {
+      val (out, row) = graft.PlanMode.checkpointObserved(
+        groupMin(df.withColumn("prev", col("label"))),
+        count(when(col("label") < col("prev"), 1)).as("changed"), "prev")
+      (out, row.getLong(0))
     }
-    // Without a caller warm start, start from one neighbor-min step over
-    // the identity labeling — least(v, min(dst)) from the checkpointed
-    // edges, which is what a star-rep warm start computes, at no extra
-    // materialization.
-    var (labels, prevSum) = materialize(initLabels
-      .map(init => vertices.alias("v")
-        .join(init.alias("i"), col("v.doc_id") === col("i.doc_id"), "left")
-        .select(col("v.doc_id").as("doc_id"),
-                coalesce(col("i.label"), col("v.doc_id")).as("label")))
-      .getOrElse(nbrStep(vertices.select(col("doc_id"), col("doc_id").as("label")))))
+    var (labels, changed) = materialize(vertexMin(groupMin(rows)))
     val spent = scala.collection.mutable.ArrayBuffer(labels)
-    var converged = false
-    var round = 0
-    while (!converged) {
-      val nbrStepped = nbrStep(labels)
-      // Pointer-doubling shortcut (round-10): label(v) always names a
-      // vertex w of v's own component with w <= v (see @param note), so
-      // composing the labeling with itself — label(v) := label(label(v))
-      // — halves the remaining distance to the component min each round.
-      // Neighbor-min alone needs diameter-many rounds (hash-to-min);
-      // with the shortcut the round count is O(log diameter): measured
-      // 46 s -> 12 s cold on q_dbscan's sf0.1 cross-label ε-graph. One
-      // extra label-keyed equi-join per round, fixpoint unchanged.
-      // Applied from round 3 only: the star graphs of the dedup callers
-      // converge by round ~3 and would pay the extra join for nothing,
-      // while a real-diameter graph reaches the doubling exactly when
-      // plain hash-to-min stops making fast progress.
-      val raw =
-        if (round < 2) nbrStepped
-        else nbrStepped.alias("a")
-          .join(nbrStepped.alias("b"), col("a.label") === col("b.doc_id"), "left")
-          .select(col("a.doc_id").as("doc_id"),
-                  coalesce(col("b.label"), col("a.label")).as("label"))
+    var round = 1
+    while (changed > 0) {
       round += 1
-      // Each round's plan references the previous round's TWICE (join +
-      // neighbor-min) and the shortcut references the step twice again,
-      // so un-truncated lineage would grow 4× per round (the analyzer's
-      // self-join deduplication clones one side — round ~8 OOMs the
-      // driver during planning). The round's checkpoint truncates it.
-      val (next, s) = materialize(raw)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
+      val stepped = vertexMin(labels)
+      val (next, c) = materialize(if (round < 3) stepped else shortcut(stepped))
+      changed = c
       spent += next
       // `next` is materialized, so the round-before-last labeling is
       // dead — release it now rather than holding O(rounds) copies of
-      // the label table in executor storage on high-diameter graphs.
+      // the incidence rows in executor storage on high-diameter graphs.
       if (spent.length > 2) graft.PlanMode.release(spent.remove(0))
       labels = next
     }
-    // The converged round's checkpoint IS the result: its lineage is one
-    // stable scan of the converged labels. Release everything else.
     spent.foreach(df => if (!(df eq labels)) graft.PlanMode.release(df))
-    graft.PlanMode.release(e)
-    labels
+    labels.filter(col("pos") === 0).select(col("doc_id"), col("label"))
   }
 
   /** Shared blocking-graph component labeling: (doc_id, label) for EVERY
@@ -177,12 +168,12 @@ object Corpus {
   private def clusterLabels(s: SparkSession, d: String): DataFrame =
     clusterLabelsOf(Tables.documents(s, d))
 
-  /** The blocking signature keys of each document — (doc_id, key), two
-    * rows per doc (normalized-prefix and normalized-suffix star keys).
-    * ONE definition shared by clusterLabelsOf and the streaming
-    * pipeline's near-dup ledger probe, so batch components and the
-    * streamed first-seen-wins admission can never disagree on what a
-    * near-dup candidate is.
+  /** The blocking signature keys of each document — (doc_id, pos, key),
+    * two rows per doc: the normalized-prefix key at pos 0 and the
+    * normalized-suffix key at pos 1. ONE definition shared by
+    * clusterLabelsOf and the streaming pipeline's near-dup ledger probe,
+    * so batch components and the streamed first-seen-wins admission can
+    * never disagree on what a near-dup candidate is.
     */
   private[graft] def starKeyed(docsIn: DataFrame): DataFrame = {
     val docs = docsIn
@@ -191,37 +182,24 @@ object Corpus {
               Ops.normalizeText(col("text")).as("nt"))
     // ONE pass: both keys from a single evaluation of the normalized
     // text — the union-of-two-projections form re-derived `docs` (and
-    // its whole-document normalize) once per branch. Same (doc_id, key)
-    // multiset; downstream is a groupBy, so branch order is irrelevant.
+    // its whole-document normalize) once per branch.
     val bothKeys = array(
       concat_ws("|", col("lang"), col("len_bucket"),
                 substring(col("nt"), 1, 40)),
       concat_ws("|", col("lang"), col("len_bucket"),
                 expr("right(nt, 40)")))
-    docs.select(col("doc_id"), explode(bothKeys).as("key"))
+    docs.select(col("doc_id"), posexplode(bothKeys).as(Seq("pos", "key")))
   }
 
   /** Same labeling over any documents-shaped frame (doc_id, lang,
     * n_chars, text) — the composed pipeline runs it on the exact-dedup
     * SURVIVORS, where components differ from the whole-corpus ones by
-    * construction.
+    * construction. The loop runs on starKeyed's rows as they are: each
+    * key is a group, pos 0 is the doc's primary row.
     */
-  private[graft] def clusterLabelsOf(docsIn: DataFrame): DataFrame = {
-    val keyed = starKeyed(docsIn)
-    val star = keyed.groupBy(col("key")).agg(min(col("doc_id")).as("rep"))
-    val e0 = keyed.join(star, Seq("key"))
-      .filter(col("doc_id") =!= col("rep"))
-      .select(col("doc_id").as("src"), col("rep").as("dst"))
-      .distinct()
-    val edges = e0
-      .unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
-    // No explicit warm start: the loop's default least(v, min(dst)) over
-    // these star edges IS the min rep over the doc's groups (each doc's
-    // neighbors are exactly its groups' reps; a rep's neighbors are its
-    // members, all larger), read from the checkpointed edge list instead
-    // of re-deriving keyed ⋈ star from the text.
-    minLabelPropagate(docsIn.select(col("doc_id")), edges)
-  }
+  private[graft] def clusterLabelsOf(docsIn: DataFrame): DataFrame =
+    propagate(starKeyed(docsIn).select(col("doc_id"), col("key").as("grp"),
+                                       col("pos"), col("doc_id").as("label")))
 
   val qDedupCluster: Q = (s, d) => {
     val labels = clusterLabels(s, d)
@@ -234,10 +212,11 @@ object Corpus {
       .orderBy(col("doc_id"))
   }
 
-  /** Shared recursive-CTE tail: resolves the same star-edge graph as
-    * `clusterLabels` into `comp(doc_id, component_id)` + `sizes` — the
-    * reachable-label minimum of each vertex is its connected component
-    * (edges are symmetric), so it equals the Spark fixpoint. Expects a
+  /** Shared recursive-CTE tail: resolves the blocking groups of
+    * `clusterLabels`, as star edges (member → group min), into
+    * `comp(doc_id, component_id)` + `sizes` — the reachable-label minimum
+    * of each vertex is its connected component (edges are symmetric), so
+    * it equals the Spark fixpoint. Expects a
     * preceding `docs` CTE exposing (doc_id, lang, len_bucket, nt).
     */
   private val clusterCtesTail: String =
@@ -295,9 +274,10 @@ object Corpus {
   // char mass the drop releases.
   //
   // Scale shape: component labeling is the bounded-round min-label
-  // propagation (star edges, never cliques); everything after is
-  // partial-aggregated group-bys keyed on component labels plus one
-  // members⋈stats equi-join — no windows, no all-rows-to-one-task cut.
+  // propagation (doc–key incidence rows, never cliques); everything
+  // after is partial-aggregated group-bys keyed on component labels plus
+  // one members⋈stats equi-join — no windows, no all-rows-to-one-task
+  // cut.
   // The argmax is the classic two-pass shape (per-key max, then filter
   // members equal to it): quality doubles are computed by identical
   // expression trees in both engines, so the equality filter is exact.
@@ -426,7 +406,7 @@ object Corpus {
   // chase next.
   //
   // Scale shape: the component labels are the dedup-cluster funnel
-  // (star-edge buckets, no all-pairs); the leakage measure is one
+  // (blocking-key groups, no all-pairs); the leakage measure is one
   // gram-keyed equi-join (never holdout×train pairs) + a per-doc
   // bounded window — q_contamination's posture with a ~5% probe side.
   // -------------------------------------------------------------------
@@ -484,7 +464,6 @@ object Corpus {
     * join that shuffles regardless).
     */
   private[graft] def capHotGramsColocated(large: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     large
       .withColumn("gram_df",
         count(lit(1)).over(Window.partitionBy(col("gram"))))
@@ -501,7 +480,6 @@ object Corpus {
     */
   private[graft] def worstGramOverlap(probe: DataFrame, partner: DataFrame,
                                     partnerCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("n_common").desc, col(partnerCol).asc)
     probe.join(partner, Seq("gram"))
@@ -587,7 +565,8 @@ object Corpus {
   // the two reports can never drift semantically.
   //
   // Scale shape: the component labels are the dedup-cluster funnel
-  // (star-edge buckets, O(log diameter) pointer-doubling rounds);
+  // (blocking-key groups, one materialization per round, the last
+  // round its own convergence check);
   // the profile adds two bounded partial aggs (components → distinct
   // sizes) and a window total over the distinct sizes.
   // -------------------------------------------------------------------
@@ -672,7 +651,6 @@ object Corpus {
   // Ranking carries the term as the deterministic tiebreaker.
   // -------------------------------------------------------------------
   val qTfidfTopterms: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, d)
     // raw-ASCII filter then lowercase, mirroring the oracle exactly
     // (locale-proof — see qInvertedIndex)
@@ -826,7 +804,6 @@ object Corpus {
   val NumShards = 4
 
   val qPackSequences: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     Tables.documents(s, d)
@@ -882,7 +859,6 @@ object Corpus {
   val TokenShards = 16
 
   val qTokenShards: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
               size(Ops.tokens(col("text"))).cast("bigint").as("n_toks"))
@@ -954,7 +930,6 @@ object Corpus {
     * crafted shard.
     */
   def padWaste(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = docs
       .select(col("doc_id"),
               (Ops.md5Bits60(col("doc_id").cast("string")) % PadShards)
@@ -1059,7 +1034,6 @@ object Corpus {
     * order, so the fold is ingest-order-free by construction).
     */
   def shuffleFold(keyed: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val t = keyed.withColumn("shard", col("h") % ShuffleShards)
     val order = Window.partitionBy(col("shard")).orderBy(col("h"), col("doc_id"))
     t.withColumn("pos", row_number().over(order).cast("bigint"))
@@ -1171,9 +1145,14 @@ object Corpus {
     val t = Tables.documents(s, d)
       .select(col("doc_id"), col("lang"),
               size(Ops.tokens(col("text"))).cast("bigint").as("n_toks"))
-    val tot = t.groupBy(col("lang")).agg(sum(col("n_toks")).as("lang_toks"))
-    val m = tot.agg(min(col("lang_toks")).as("min_toks"))
-    val rates = tot.crossJoin(m)
+    // min_toks is a whole-frame window min over tot (one row per lang,
+    // bounded at any scale), so the per-language totals are aggregated
+    // once: a separate min aggregate re-read documents, since the join
+    // below adds isnotnull(lang) to only one of the two branches.
+    val all = Window.orderBy(col("lang"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val rates = t.groupBy(col("lang")).agg(sum(col("n_toks")).as("lang_toks"))
+      .withColumn("min_toks", min(col("lang_toks")).over(all))
       .withColumn("rate",
         col("min_toks").cast("double") / col("lang_toks").cast("double"))
       .withColumn("thr",
@@ -1640,7 +1619,6 @@ object Corpus {
     * merge algebra on crafted documents.
     */
   def spanCorrupt(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val pos = docs
       .select(col("doc_id"),
               size(Ops.tokens(col("text"))).cast("bigint").as("n_toks"))
@@ -1996,7 +1974,6 @@ object Corpus {
 
   /** Core of q_ks_test over any (source, text) frame. */
   def ksTest(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lens = docs
       .select(col("source"), size(Ops.tokens(col("text"))).cast("bigint")
                 .as("x"))
@@ -2239,7 +2216,6 @@ object Corpus {
     * corpus vocabulary has ≥ 2 types (the smoothed rest-denominator is
     * then always positive). */
   def logOdds(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cnt = docs
       .select(col("source"), explode(Ops.tokens(col("text"))).as("term"))
       .groupBy(col("source"), col("term")).agg(count(lit(1)).as("c"))
@@ -2335,7 +2311,6 @@ object Corpus {
 
   /** Core of q_mann_whitney over any (source, text) frame. */
   def mannWhitney(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lens = docs
       .select(col("source"), size(Ops.tokens(col("text"))).cast("bigint")
                 .as("x"))
@@ -3171,7 +3146,6 @@ object Corpus {
   val Bm25TopK = 5
 
   val qBm25Mlt: Q = (s, d) => {
-    import org.apache.spark.sql.expressions.Window
     val perDoc = Tables.documents(s, d)
       .select(col("doc_id"), explode(Ops.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))

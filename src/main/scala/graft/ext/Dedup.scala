@@ -780,8 +780,14 @@ object Dedup {
     // only; grams join back exactly once, for the unique candidate pairs.
     val candidateIds = starCandidates(docs, NumBands, RowsPerBand)
     val gramsOf = docs.select(col("doc_id"), col("grams"))
+    // The doc_a join is a sort-merge join by hint: left to AQE, it
+    // broadcast whichever small side materialized first — the candidates
+    // on some runs, the grams on others — so the plan, and with it the
+    // generated code, changed from run to run and each new shape missed
+    // the codegen cache. A shuffle join is the scale shape anyway.
     val pairs = candidateIds
-      .join(gramsOf.select(col("doc_id").as("doc_a"), col("grams").as("grams_a")),
+      .join(gramsOf.select(col("doc_id").as("doc_a"), col("grams").as("grams_a"))
+              .hint("merge"),
             Seq("doc_a"))
       .join(gramsOf.select(col("doc_id").as("doc_b"), col("grams").as("grams_b")),
             Seq("doc_b"))

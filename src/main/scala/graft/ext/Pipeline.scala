@@ -398,7 +398,7 @@ object Pipeline {
   //                    keep '5_pass' (q_filter_funnel's rules)
   //   3_exact_dedup  — keep min doc_id per normalized-text md5
   //                    (q_fingerprint / q_training_pipeline rule)
-  //   4_near_dedup   — star-edge component labels over the exact
+  //   4_near_dedup   — blocking-key component labels over the exact
   //                    survivors (Corpus.clusterLabelsOf), keep the
   //                    component-minimum doc
   //   5_decontam     — drop survivors sharing ANY df-capped word-5-gram

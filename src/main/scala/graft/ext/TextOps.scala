@@ -447,6 +447,7 @@ object TextOps {
   private val FhShift = Integer.numberOfTrailingZeros(FhDim)
 
   val qFeatureHash: Q = (s, d) => {
+    import org.apache.spark.sql.expressions.Window
     val tok = Tables.documents(s, d)
       .select(col("doc_id"), explode(Ops.tokens(col("text"))).as("term"))
       .withColumn("h", Ops.md5Bits60(concat(col("term"), lit(":fh"))))
@@ -457,12 +458,11 @@ object TextOps {
     val perDim = tok.groupBy(col("doc_id"), col("dim"))
       .agg(sum(col("sgn")).as("raw"))
       .filter(col("raw") =!= 0L)
-    val norms = perDim.groupBy(col("doc_id"))
-      .agg(sum(col("raw") * col("raw")).as("ss"))
-    perDim.join(norms, Seq("doc_id"))
-      .select(col("doc_id"), col("dim"), col("raw"),
-              round(col("raw").cast("double") /
-                      sqrt(col("ss").cast("double")), 6).as("unit"))
+    // The norm is a window sum over the doc, so perDim is read once.
+    val ss = sum(col("raw") * col("raw")).over(Window.partitionBy(col("doc_id")))
+    perDim.select(col("doc_id"), col("dim"), col("raw"),
+                  round(col("raw").cast("double") /
+                          sqrt(ss.cast("double")), 6).as("unit"))
     // No final orderBy: O(docs × dims) output; the gate sorts rows.
   }
 

@@ -171,8 +171,8 @@ object PipelineStream {
       Corpus.clusterLabelsOf(pool3).filter(col("label") === col("doc_id"))
         .select(col("doc_id")), Seq("doc_id"))
     val batchKeys = Corpus.starKeyed(inBatchKept)
-      .withColumn("bucket",
-        format_string("%02x", pmod(xxhash64(col("key")), lit(256L))))
+      .select(col("doc_id"), col("key"),
+        format_string("%02x", pmod(xxhash64(col("key")), lit(256L))).as("bucket"))
       .localCheckpoint(true)
     val keyBuckets = batchKeys.select(col("bucket")).distinct()
       .collect().map(_.getString(0)).toSeq

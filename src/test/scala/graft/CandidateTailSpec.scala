@@ -17,7 +17,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - q_mrl_recall and q_sq_recall score both vector forms in one
   *    nested-loop pass over `embeddings`;
   *  - the size profile's total is a window, not a joined-back aggregate;
-  *  - q_dedup_minhash checkpoints its signatures only.
+  *  - q_dedup_minhash checkpoints its signatures only, and a repeat run
+  *    generates the classes of the run before it;
+  *  - q_mixture_sample aggregates its per-language totals once and
+  *    q_feature_hash reads its per-dimension sums once (window totals,
+  *    not joined-back aggregates).
   */
 class CandidateTailSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
@@ -72,5 +76,26 @@ class CandidateTailSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val actions = plans("q_dedup_minhash").map(_._1)
     assert(actions.count(a => a == "localCheckpoint" || a == "checkpoint") == 1, actions)
     assert(actions.last == "collect", actions)
+  }
+
+  test("q_dedup_minhash: a repeat run in one session compiles no generated class") {
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def run(): Unit =
+      try SparkEntry.queries("q_dedup_minhash")(spark, TestSpark.Sf).collect()
+      finally PlanMode.sweep(spark)
+    run()
+    val before = METRIC_COMPILATION_TIME.getCount
+    run()
+    assert(METRIC_COMPILATION_TIME.getCount - before == 0)
+  }
+
+  test("q_mixture_sample: the per-language totals are aggregated once") {
+    val scans = nodes("q_mixture_sample") { case s: FileSourceScanExec => s }
+    assert(scans.size == 2, scans.map(_.nodeName))
+  }
+
+  test("q_feature_hash: the norm is a window, nothing is joined back") {
+    val joins = nodes("q_feature_hash") { case j: BaseJoinExec => j }
+    assert(joins.isEmpty, joins.map(_.nodeName))
   }
 }

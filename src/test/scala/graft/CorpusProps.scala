@@ -62,6 +62,52 @@ object CorpusProps extends Properties("graft.Corpus") {
     }
 
   // ------------------------------------------------------------------
+  // clusterLabelsOf on random doc–key incidence. Each text is two
+  // 40-char blocks, already normalized, so a doc's blocking keys are
+  // its lang and length bucket with its first and its last block: docs
+  // are edges between blocks and a shared block joins them. Every case
+  // starts with a chain (a, b), (b, c), (c, d), ... of at least three
+  // docs whose ids rise along it — prefix keys chained to suffix keys
+  // across docs — so the minimum sits at one end and convergence needs
+  // at least two rounds (the first and the third chain doc share no
+  // key, so one group-min and vertex-min cannot label the third with
+  // the minimum); random docs over blocks of their own and of the
+  // chain, in two langs, follow.
+  // ------------------------------------------------------------------
+  private def block(i: Int): String = f"blk$i%02d".padTo(40, 'x')
+
+  val docsGen: Gen[List[(Long, String, String)]] = for {
+    chain <- Gen.chooseNum(3, 6)
+    nBlocks <- Gen.chooseNum(2, 9)
+    extra <- Gen.listOfN(12, for {
+      lang <- Gen.oneOf("en", "de")
+      a <- Gen.oneOf((0 until nBlocks) ++ (20 to 20 + chain))
+      b <- Gen.oneOf((0 until nBlocks) ++ (20 to 20 + chain))
+    } yield (lang, a, b))
+    nExtra <- Gen.chooseNum(0, 12)
+  } yield {
+    val chained = (0 until chain).map(k => ("en", 20 + k, 21 + k))
+    (chained ++ extra.take(nExtra)).zipWithIndex.map { case ((lang, a, b), i) =>
+      (i.toLong + 1, lang, s"${block(a)} ${block(b)}")
+    }.toList
+  }
+
+  property("clusterLabelsOf == union-find over shared blocking keys") =
+    Prop.forAllNoShrink(docsGen) { docs =>
+      val frame = docs.toDF("doc_id", "lang", "text")
+        .withColumn("n_chars", org.apache.spark.sql.functions.length($"text"))
+      val got = Corpus.clusterLabelsOf(frame).as[(Long, Long)].collect().toMap
+      val keyed = docs.flatMap { case (id, lang, t) =>
+        Seq(s"$lang|${t.length / 100}|${t.take(40)}",
+            s"$lang|${t.length / 100}|${t.takeRight(40)}").map(_ -> id)
+      }
+      val es = keyed.groupBy(_._1).values.toList.flatMap { ms =>
+        ms.map(_._2).zip(ms.tail.map(_._2))
+      }
+      got == unionFind(docs.map(_._1), es)
+    }
+
+  // ------------------------------------------------------------------
   // boilerplateRemove invariants on random corpora: a driver-side
   // re-implementation of the segment/df/filter/reassemble pipeline must
   // agree exactly, covering shapes the fixed corpus can't (doc counts

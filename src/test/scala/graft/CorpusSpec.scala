@@ -43,8 +43,8 @@ class CorpusSpec extends AnyFunSuite {
     }
 
     test("minLabelPropagate: empty vertex set returns empty labeling" + suffix) {
-      // the observed SUM over zero rows is NULL and must read as 0, or
-      // the loop would never see the sum repeat
+      // the observed count of changed rows over zero rows reads 0, so
+      // the loop stops after its first materialization
       val vertices = Seq.empty[Long].toDF("doc_id")
       val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
       assert(run(Corpus.minLabelPropagate(vertices, edges).count()) == 0)

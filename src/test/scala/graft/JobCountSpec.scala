@@ -14,11 +14,11 @@ import scala.collection.mutable
   * by counting them with a SparkListener:
   *
   *  - every min-label propagation round is ONE materialization — the
-  *    round's checkpoint, on which the convergence sum is observed. The
-  *    whole call fires exactly 1 (edges) + 1 (warm start) + rounds
-  *    checkpoint executions, and no other job: no aggregation job runs
-  *    between one round's checkpoint and the next, and the converged
-  *    round's checkpoint is returned as-is.
+  *    round's checkpoint, on which the count of rows its closing
+  *    group-min changed is observed. The whole call fires exactly one
+  *    checkpoint execution per round and no other job: no edge-list
+  *    checkpoint, no separate warm-start or verification round, no
+  *    aggregation job between one round's checkpoint and the next.
   *  - every Lloyd step of the codebook trainers is one job (the seed
   *    collect is the other).
   */
@@ -61,55 +61,83 @@ class JobCountSpec extends AnyFunSuite {
     description.startsWith("localCheckpoint at") ||
       description.startsWith("checkpoint at")
 
-  /** The loop's round count, simulated on the driver: warm start = one
-    * neighbor-min step from identity; then neighbor-min steps, with the
-    * label(label(v)) shortcut from round 3, until Σlabel repeats.
+  /** The loop's materialization count, simulated on the driver over the
+    * incidence rows minLabelPropagate builds (a one-member group per
+    * vertex, a {src, dst} group per edge): the first materialization is
+    * group-min, vertex-min, then the checking group-min; each later one
+    * is vertex-min, the label(label(v)) shortcut from the third on, and
+    * the checking group-min; the loop stops once a check changes no row.
     */
   private def expectedRounds(vs: Seq[Long], es: Seq[(Long, Long)]): Int = {
-    val nbrs = es.groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2) }
-    def step(l: Map[Long, Long]): Map[Long, Long] =
-      l.map { case (v, x) => v -> (x +: nbrs.getOrElse(v, Nil).map(l)).min }
-    var labels = step(vs.map(v => v -> v).toMap)
-    var rounds = 0
-    var converged = false
-    while (!converged) {
-      val s = step(labels)
-      val next = if (rounds < 2) s else s.map { case (v, x) => v -> s(x) }
+    val rows = vs.map(v => (v, (v, v), true)) ++
+      es.map { case (a, b) => (a, (a min b, a max b), false) }
+    def groupMin(l: Seq[Long]): Seq[Long] = {
+      val m = rows.zip(l).groupMapReduce(_._1._2)(_._2)(_ min _)
+      rows.map(r => m(r._2))
+    }
+    def vertexMin(l: Seq[Long]): Seq[Long] = {
+      val m = rows.zip(l).groupMapReduce(_._1._1)(_._2)(_ min _)
+      rows.map(r => m(r._1))
+    }
+    def shortcut(l: Seq[Long]): Seq[Long] = {
+      val at = rows.zip(l).collect { case ((v, _, true), x) => v -> x }.toMap
+      l.map(x => at.getOrElse(x, x))
+    }
+    def check(l: Seq[Long]): (Seq[Long], Boolean) = {
+      val g = groupMin(l)
+      (g, g != l)
+    }
+    var (labels, changed) = check(vertexMin(groupMin(rows.map(_._1))))
+    var rounds = 1
+    while (changed) {
       rounds += 1
-      converged = next.values.sum == labels.values.sum
+      val stepped = vertexMin(labels)
+      val (next, c) = check(if (rounds < 3) stepped else shortcut(stepped))
       labels = next
+      changed = c
     }
     rounds
   }
 
-  private def assertOneCheckpointPerRound(vs: Seq[Long],
-                                          es0: Seq[(Long, Long)]): Unit = {
+  private def assertOneCheckpointPerRound(vs: Seq[Long], es0: Seq[(Long, Long)],
+                                          rounds: Int): Unit = {
     val es = es0 ++ es0.map(_.swap)
+    assert(expectedRounds(vs, es) == rounds)
     val vertices = vs.toDF("doc_id")
     val edges = es.toDF("src", "dst")
     val (labels, fired) = record(Corpus.minLabelPropagate(vertices, edges))
-    val rounds = expectedRounds(vs, es)
     val descs = fired.executions.values.toSeq
     assert(descs.forall(isCheckpoint),
            s"a non-checkpoint SQL action fired inside the loop: $descs")
-    assert(descs.length == 2 + rounds,
-           s"expected edges + warm start + $rounds round checkpoints, got $descs")
+    assert(descs.length == rounds,
+           s"expected $rounds round checkpoints, got $descs")
     assert(fired.jobs.forall(_.exists(fired.executions.contains)),
            s"a job fired outside the loop's checkpoints: ${fired.jobs}")
     assert(labels.as[(Long, Long)].collect().map(_._2).toSet == Set(vs.min))
   }
 
-  test("minLabelPropagate: a star graph is edges + warm start + one round") {
+  test("minLabelPropagate: a star graph converges in one checkpoint") {
     val leaves = (2L to 9L).toSeq
-    assert(expectedRounds(1L +: leaves,
-      leaves.flatMap(l => Seq(1L -> l, l -> 1L))) == 1)
-    assertOneCheckpointPerRound(1L +: leaves, leaves.map(1L -> _))
+    assertOneCheckpointPerRound(1L +: leaves, leaves.map(1L -> _), rounds = 1)
   }
 
+  // The loop this one replaced took 8 checkpoints here (an edge list, a
+  // warm start and 6 rounds, the last of them only a verification).
   test("minLabelPropagate: 24-node path graph fires one checkpoint per round") {
     val n = 24L
     assertOneCheckpointPerRound((1L to n).toSeq,
-                                (1L until n).map(i => i -> (i + 1)))
+                                (1L until n).map(i => i -> (i + 1)), rounds = 5)
+  }
+
+  // The blocking keys converge in one materialization at sf0.001: its
+  // three window exchanges and the checkpoint's own stage. The loop this
+  // one replaced fired 14 here (edge list, warm start and a round that
+  // only verified).
+  test("q_cc_profile fires at most 4 jobs while its frame is built") {
+    Tables.documents(spark, TestSpark.Sf).schema
+    val (_, fired) = record(SparkEntry.queries("q_cc_profile")(spark, TestSpark.Sf))
+    assert(fired.jobs.length <= 4, s"construction jobs: ${fired.jobs.length}")
+    PlanMode.sweep(spark)
   }
 
   test("trainCodebook fires exactly 1 + KmIters jobs") {

@@ -5,14 +5,15 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The dev CLI reads the executions a query actually runs: audit rows
-  * and plan dumps cover the checkpoints fired while q_dedup_cluster's
-  * frame is built, not only its final collect. Profile is smoke-tested
-  * on the MaxTemperature-shaped registry query.
+  * and plan dumps cover the checkpoints fired while q_dedup_keep_best's
+  * frame is built (its component labels and its members table), not only
+  * its final collect. Profile is smoke-tested on the
+  * MaxTemperature-shaped registry query.
   */
 class ProbeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val Q = "q_max_per_group"
-  private val Checkpointing = "q_dedup_cluster"
+  private val Checkpointing = "q_dedup_keep_best"
 
   private def isCheckpoint(action: String): Boolean =
     action == "localCheckpoint" || action == "checkpoint"
