@@ -38,7 +38,7 @@ object PlanMode {
 
   private val observeSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** checkpointTail that also OBSERVES `metric` (one aggregate column)
+  /** checkpointTail that also OBSERVES `metrics` (aggregate columns)
     * on the same pass: `Dataset.observe` rides on the materialization
     * checkpointTail runs anyway, so a caller that needs a driver-side
     * number about the frame (a convergence sum, a row count) gets it
@@ -46,16 +46,16 @@ object PlanMode {
     * Columns named in `scratch` feed the metric only: they are dropped
     * above the observation, so the checkpoint does not store them.
     * Returns the checkpointed frame (its plan holds no observe node) and
-    * the observed row. The value is read back synchronously from the
+    * the observed row, one field per metric. The value is read back synchronously from the
     * checkpoint action's executed plan, in both the localCheckpoint and
     * the reliable `spark.graft.checkpoint.dir` modes. A missing observed
     * row is an error, never a default: a caller looping to a fixpoint on
     * the value must not spin on a stale one.
     */
-  def checkpointObserved(df: DataFrame, metric: Column,
+  def checkpointObserved(df: DataFrame, metrics: Seq[Column],
                          scratch: String*): (DataFrame, Row) = {
     val name = s"graft_observed_${observeSeq.incrementAndGet()}"
-    val observed = df.observe(name, metric).drop(scratch: _*)
+    val observed = df.observe(name, metrics.head, metrics.tail: _*).drop(scratch: _*)
     val out = checkpointTail(observed)
     val row = observed.queryExecution.observedMetrics.getOrElse(name,
       throw new IllegalStateException(

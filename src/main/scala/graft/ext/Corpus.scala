@@ -137,7 +137,7 @@ object Corpus {
     def materialize(df: DataFrame): (DataFrame, Long) = {
       val (out, row) = graft.PlanMode.checkpointObserved(
         groupMin(df.withColumn("prev", col("label"))),
-        count(when(col("label") < col("prev"), 1)).as("changed"), "prev")
+        Seq(count(when(col("label") < col("prev"), 1)).as("changed")), "prev")
       (out, row.getLong(0))
     }
     var (labels, changed) = materialize(vertexMin(groupMin(rows)))

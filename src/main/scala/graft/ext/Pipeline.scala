@@ -410,13 +410,15 @@ object Pipeline {
   //                    pool; reports the packed-sequence count
   //
   // Scale shape: each stage is the standalone operator's plan (all
-  // individually audited); the composition adds per-stage bounded
-  // 1-row aggregates and one 8-row lag window. Stage pools are
-  // persisted because each feeds both its attrition row and the next
-  // stage (released before return — CacheHygieneSpec discipline); a
-  // production 100 TB run would checkpoint each pool to the cluster
-  // filesystem instead, which also gives restartability between
-  // stages.
+  // individually audited). Each stage pool is checkpointed once, in
+  // order (it feeds the next stage), and its (n_docs, n_tokens) row is
+  // observed on that same checkpoint, so the stage rows are a local
+  // relation: counting adds no scan and no job. The report's only
+  // corpus-sized work is the pack count over the final pool; the 8-row
+  // lag window is a bounded final. A production 100 TB run would
+  // checkpoint each pool to the cluster filesystem instead
+  // (spark.graft.checkpoint.dir, or the durable chain below), which
+  // also gives restartability between stages.
   // ------------------------------------------------------------------
   val qPipelineRun: Q = (s, d) => pipelineRun(Tables.documents(s, d))
 
@@ -426,38 +428,47 @@ object Pipeline {
   /** The documents-shaped input projected to the run's working columns
     * — stage 0's pool.
     */
-  private def rawPool(docsIn: DataFrame): DataFrame =
+  private[graft] def rawPool(docsIn: DataFrame): DataFrame =
     docsIn.select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
                   col("text"),
                   size(Ops.tokens(col("text"))).cast("bigint").as("n_toks"))
 
-  /** One stage transition: the survivor pool of `stage` from the
-    * previous pool. `d0` is the raw pool — the decontamination stage
-    * screens against its quarantined benchmark slice. Each case is the
-    * standalone registry operator's rule (shared code, see the
-    * q_pipeline_run note above), factored per-stage so the in-memory
-    * chain and the checkpointed restartable chain can never drift.
+  /** In-pool exact collapse: keep the min doc_id per normalized-text md5
+    * (q_fingerprint / q_training_pipeline rule). The md5 stays on as
+    * `fpr`: the stream keys its admitted-hash ledger on it.
     */
-  private def stageStep(stage: String, prev: DataFrame,
-                        d0: DataFrame): DataFrame = {
+  private[graft] def exactCollapse(pool: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    pool
+      .withColumn("fpr", md5(Ops.normalizeText(col("text"))))
+      .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy(col("fpr"))))
+      .filter(col("doc_id") === col("min_id"))
+      .drop("min_id")
+  }
+
+  /** One stage transition: the survivor pool of `stage` from the
+    * previous pool. `bench` is the quarantined benchmark slice the
+    * decontamination stage screens against; `hotGrams` replaces that
+    * stage's in-pool hot-gram set (the stream passes a precomputed
+    * corpus-wide one). Each case is the standalone registry operator's
+    * rule (shared code, see the q_pipeline_run note above), factored
+    * per-stage so the in-memory chain, the checkpointed restartable
+    * chain and PipelineStream can never drift. The stream keeps its own
+    * caps stage: its ledger offset sits inside the cap filter.
+    */
+  private[graft] def stageStep(stage: String, prev: DataFrame, bench: DataFrame,
+                               hotGrams: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     stage match {
       case "1_quarantine" => prev.filter(col("doc_id") % 50 =!= 0)
       case "2_quality" => prev.filter(TextOps.funnelStage === "5_pass")
-      case "3_exact_dedup" =>
-        prev
-          .withColumn("fpr", md5(Ops.normalizeText(col("text"))))
-          .withColumn("min_id",
-            min(col("doc_id")).over(Window.partitionBy(col("fpr"))))
-          .filter(col("doc_id") === col("min_id"))
-          .drop("fpr", "min_id")
+      case "3_exact_dedup" => exactCollapse(prev).drop("fpr")
       case "4_near_dedup" =>
         prev.join(Corpus.clusterLabelsOf(prev)
                     .filter(col("label") === col("doc_id"))
                     .select(col("doc_id")),
                   Seq("doc_id"))
       case "5_decontam" =>
-        val bench = d0.filter(col("doc_id") % 50 === 0)
         val survGrams = prev.select(col("doc_id"),
           explode(Ops.shingles(Ops.tokens(col("text")), Corpus.ContamN))
             .as("gram"))
@@ -472,7 +483,8 @@ object Pipeline {
         // partials.
         val contaminated = survGrams
           .join(benchGrams, Seq("gram"), "left_semi")
-          .join(Corpus.hotGrams(survGrams), Seq("gram"), "left_anti")
+          .join(hotGrams.getOrElse(Corpus.hotGrams(survGrams)), Seq("gram"),
+                "left_anti")
           .select(col("doc_id")).distinct()
         prev.join(contaminated, Seq("doc_id"), "left_anti")
       case "6_source_caps" =>
@@ -488,9 +500,30 @@ object Pipeline {
     }
   }
 
-  /** The shared stage-pool chain: each pool CHECKPOINTED eagerly (it
-    * feeds both its attrition row(s) and the next stage); callers must
-    * release every returned frame after materializing their report.
+  /** The benchmark slice of the raw pool (the quarantine's complement). */
+  private def benchmarkOf(d0: DataFrame): DataFrame = d0.filter(col("doc_id") % 50 === 0)
+
+  /** A stage pool with its (n_docs, n_tokens). */
+  private[graft] final case class Counted(pool: DataFrame, docs: Long, tokens: Long)
+
+  /** Materialize a stage pool — one checkpoint — and observe its
+    * (n_docs, n_tokens) on that same checkpoint. The one stage count of
+    * both planes (stagePools here, PipelineStream.ingestBatch).
+    *
+    * The observation is the pool's top operator, so it runs in the
+    * result stage of the checkpoint job, with no exchange between it
+    * and the checkpoint root: Spark applies a result task's accumulator
+    * update once per partition, where a shuffle-map task's update is
+    * applied again when its stage is resubmitted, so the count stays
+    * exact under executor loss.
+    */
+  private[graft] def observedPool(pool: DataFrame): Counted = {
+    val (out, row) = graft.PlanMode.checkpointObserved(pool,
+      Seq(count(lit(1)), coalesce(sum(col("n_toks")), lit(0L))))
+    Counted(out, row.getLong(0), row.getLong(1))
+  }
+
+  /** The shared stage-pool chain, each pool counted on its checkpoint.
     *
     * checkpointTail, not persist (round-15): with lazy persist the
     * whole chain first materializes inside the report's one action,
@@ -502,25 +535,38 @@ object Pipeline {
     * and every consumer — including stage k+1 and the per-source grid —
     * plans against a flat leaf. Same rows per pool by construction.
     */
-  private def stagePools(docsIn: DataFrame): Seq[(String, DataFrame)] = {
-    val d0 = graft.PlanMode.checkpointTail(rawPool(docsIn))
+  private[graft] def stagePools(docsIn: DataFrame): Seq[(String, Counted)] = {
+    val d0 = observedPool(rawPool(docsIn))
+    val bench = benchmarkOf(d0.pool)
     StageNames.tail.scanLeft("0_raw" -> d0) { case ((_, prev), stage) =>
-      stage -> graft.PlanMode.checkpointTail(stageStep(stage, prev, d0))
+      stage -> observedPool(stageStep(stage, prev.pool, bench))
     }
   }
 
-  /** Global attrition tail over the stage pools — the q_pipeline_run
-    * report shape. Pools need only (doc_id, source, n_toks), so the
-    * same tail serves the in-memory chain, the checkpointed restartable
-    * chain (whose durable pools are slim by design), and the combined
-    * pipelineReport.
+  /** The attrition table of the in-memory chain: its observed stage
+    * rows are a local relation, no scan and no job.
     */
-  private def globalAttritionTail(pools: Seq[(String, DataFrame)]): DataFrame = {
+  private def observedTail(pools: Seq[(String, Counted)]): DataFrame = {
+    val pack = pools.last._2.pool
+    attritionTail(pack.sparkSession
+      .createDataFrame(pools.map { case (st, c) => (st, c.docs, c.tokens) })
+      .toDF("stage", "n_docs", "n_tokens"), pack)
+  }
+
+  /** The attrition table — (stage, n_docs, n_tokens, docs_dropped,
+    * tokens_dropped, n_seqs) — from per-stage (stage, n_docs, n_tokens)
+    * rows plus the pack pool, the final stage's (doc_id, n_toks): the
+    * one tail of the in-memory chain (observed rows), the checkpointed
+    * restartable chain (rows read back from its slim pools) and
+    * PipelineStream.attritionView (rows folded from its ledger).
+    * Packing drops nothing, so the 7_pack row carries the pool mass of
+    * the row before it and its packed-sequence count.
+    */
+  private[graft] def attritionTail(rows: DataFrame, packPool: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pool6 = pools.last._2
     val wpack = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val nSeqs = pool6
+    val packRow = packPool
       .select(col("doc_id"),
               (Ops.md5Bits60(col("doc_id").cast("string"))
                  % Corpus.NumShards).as("shard"),
@@ -530,37 +576,35 @@ object Pipeline {
       .select(col("shard"), expr(s"cum_before DIV ${Corpus.SeqLen}").as("seq_id"))
       .distinct()
       .agg(count(lit(1)).as("n_seqs"))
-
-    def stat(name: String, pool: DataFrame): DataFrame =
-      pool.agg(count(lit(1)).as("n_docs"),
-               coalesce(sum(col("n_toks")), lit(0L)).as("n_tokens"))
-        .select(lit(name).as("stage"), col("n_docs"), col("n_tokens"))
-
-    val stageRows = (pools.map { case (n, p) => stat(n, p) } :+
-      stat("7_pack", pool6)).reduce(_.unionByName(_))
+      .select(lit("7_pack").as("stage"), lit(null).cast("bigint").as("n_docs"),
+              lit(null).cast("bigint").as("n_tokens"), col("n_seqs"))
     // 8 fixed rows: the lag window's single partition is bounded by
-    // construction (docs/PLANS.md global-final rule).
+    // construction (docs/PLANS.md global-final rule), and it arrives
+    // sorted on stage, so the presentation sort adds no exchange.
     val wlag = Window.orderBy(col("stage"))
-    stageRows
-      .withColumn("docs_dropped",
-        coalesce(lag(col("n_docs"), 1).over(wlag) - col("n_docs"), lit(0L)))
-      .withColumn("tokens_dropped",
-        coalesce(lag(col("n_tokens"), 1).over(wlag) - col("n_tokens"),
-                 lit(0L)))
-      .crossJoin(nSeqs)
-      .select(col("stage"), col("n_docs"), col("n_tokens"),
-              col("docs_dropped"), col("tokens_dropped"),
-              when(col("stage") === "7_pack", col("n_seqs"))
-                .otherwise(lit(0L)).as("n_seqs"))
+    val prevDocs = lag(col("n_docs"), 1).over(wlag)
+    val prevToks = lag(col("n_tokens"), 1).over(wlag)
+    rows.select(col("stage"), col("n_docs"), col("n_tokens"), lit(0L).as("n_seqs"))
+      .unionByName(packRow)
+      .select(col("stage"),
+              coalesce(col("n_docs"), prevDocs).as("n_docs"),
+              coalesce(col("n_tokens"), prevToks).as("n_tokens"),
+              coalesce(prevDocs - col("n_docs"), lit(0L)).as("docs_dropped"),
+              coalesce(prevToks - col("n_tokens"), lit(0L)).as("tokens_dropped"),
+              col("n_seqs"))
+      .filter(col("n_docs").isNotNull) // no stage rows, no pack row
       .orderBy(col("stage"))
   }
 
   /** The composed run over any documents-shaped frame (doc_id, source,
-    * lang, n_chars, text) — factored for stage-invariant specs.
+    * lang, n_chars, text) — factored for stage-invariant specs. Only
+    * the final pool is read by the returned frame, so the others are
+    * released here.
     */
   private[graft] def pipelineRun(docsIn: DataFrame): DataFrame = {
     val pools = stagePools(docsIn)
-    globalAttritionTail(pools)
+    pools.init.foreach(p => graft.PlanMode.release(p._2.pool))
+    observedTail(pools)
   }
 
   // ------------------------------------------------------------------
@@ -579,11 +623,11 @@ object Pipeline {
   val qPipelineBySource: Q = (s, d) => pipelineBySource(Tables.documents(s, d))
 
   /** Per-source attrition tail over the stage pools — the
-    * q_pipeline_by_source report shape (same slim-pool contract as
-    * globalAttritionTail).
+    * q_pipeline_by_source report shape.
     */
-  private def bySourceAttritionTail(pools: Seq[(String, DataFrame)]): DataFrame = {
+  private def bySourceAttritionTail(counted: Seq[(String, Counted)]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val pools = counted.map { case (st, c) => st -> c.pool }
     val perStage = pools.map { case (name, p) =>
       p.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
@@ -610,10 +654,8 @@ object Pipeline {
       .orderBy(col("source"), col("stage"))
   }
 
-  private[graft] def pipelineBySource(docsIn: DataFrame): DataFrame = {
-    val pools = stagePools(docsIn)
-    bySourceAttritionTail(pools)
-  }
+  private[graft] def pipelineBySource(docsIn: DataFrame): DataFrame =
+    bySourceAttritionTail(stagePools(docsIn))
 
   /** BOTH curation reports — the global attrition table
     * (q_pipeline_run's shape) and the per-source lineage grid
@@ -626,9 +668,9 @@ object Pipeline {
     */
   def pipelineReport(docsIn: DataFrame): (DataFrame, DataFrame) = {
     val pools = stagePools(docsIn)
-    val global = graft.PlanMode.checkpointTail(globalAttritionTail(pools))
+    val global = graft.PlanMode.checkpointTail(observedTail(pools))
     val bySource = graft.PlanMode.checkpointTail(bySourceAttritionTail(pools))
-    pools.foreach(p => graft.PlanMode.release(p._2))
+    pools.foreach(p => graft.PlanMode.release(p._2.pool))
     (global, bySource)
   }
 
@@ -675,6 +717,7 @@ object Pipeline {
     // (and partially recomputing) the whole chained plan — measured
     // 8.1 s / 28.7 cpu-s with persist vs 5.3 s / 2.3 cpu-s checkpointed.
     val d0 = graft.PlanMode.checkpointTail(rawPool(docsIn))
+    val bench = benchmarkOf(d0)
     // Walk forward keeping the latest in-memory pool only where the
     // next stage needs computing; a completed stage's pool is
     // reconstructed lazily (id semi-join against d0) ONLY if a later
@@ -694,7 +737,7 @@ object Pipeline {
                 .select(col("doc_id"))
               d0.join(prevIds, Seq("doc_id"), "left_semi")
             }
-            graft.PlanMode.checkpointTail(stageStep(stage, input, d0))
+            graft.PlanMode.checkpointTail(stageStep(stage, input, bench))
           }
           slim(pool).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
             .parquet(dir)
@@ -713,14 +756,24 @@ object Pipeline {
     * checkpoints under `ckptDir`, then computes the SAME attrition
     * table as pipelineRun from the durable slim pools (shared tail —
     * hash-identical by construction). Kill it at any point and call it
-    * again with the same directory: completed stages are skipped.
+    * again with the same directory: completed stages are skipped. A
+    * resumed run never computed the stages it reads back, so their
+    * rows come from one groupBy(stage) over the union of the slim
+    * pools; one null row per stage keeps an empty pool's row at zero.
     */
   def pipelineRunCheckpointed(docsIn: DataFrame, ckptDir: String): DataFrame = {
     materializeStages(docsIn, ckptDir, StageNames.length - 1)
     val spark = docsIn.sparkSession
-    val pools = StageNames.map(st =>
-      st -> spark.read.parquet(stageDir(ckptDir, st)))
-    globalAttritionTail(pools)
+    val pools = StageNames.map(st => spark.read.parquet(stageDir(ckptDir, st))
+      .select(lit(st).as("stage"), col("doc_id"), col("n_toks")))
+    val rows = pools.reduce(_.unionByName(_))
+      .unionByName(spark.createDataFrame(StageNames.map(Tuple1(_))).toDF("stage")
+        .select(col("stage"), lit(null).cast("bigint").as("doc_id"),
+                lit(null).cast("bigint").as("n_toks")))
+      .groupBy(col("stage"))
+      .agg(count(col("doc_id")).as("n_docs"),
+           coalesce(sum(col("n_toks")), lit(0L)).as("n_tokens"))
+    attritionTail(rows, pools.last)
   }
 
   /** Registry face of the restartable run: a fresh checkpoint dir per

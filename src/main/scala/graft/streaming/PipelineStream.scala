@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ext.{Corpus, Pipeline, TextOps}
+import graft.ext.{Corpus, Pipeline}
 import graft.ops.Ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -15,6 +15,15 @@ import org.apache.spark.sql.types._
   * history into exactly the attrition table the batch operator emits.
   * This is how a 100 TB corpus is actually curated: continuously, as
   * crawl slices land, not as one monolithic job.
+  *
+  * One chain with the batch operator: each micro-batch runs
+  * `Pipeline.stageStep`'s rules, materializes and counts every stage
+  * pool with `Pipeline.observedPool` (the count is observed on the
+  * pool's checkpoint, so accounting adds no job; the checkpoint honours
+  * `spark.graft.checkpoint.dir`), and `attritionView` ends in
+  * `Pipeline.attritionTail`. The stream's own code is its three ledger
+  * probes — exact hash, star key and the caps offset inside the cap
+  * filter.
   *
   * State, like every ledger on this plane, lives in PERSISTED bucketed
   * tables probed per micro-batch — never in streaming operator state
@@ -102,7 +111,8 @@ object PipelineStream {
   /** One micro-batch of curation. `batch` is documents-shaped (doc_id,
     * text, lang, source, n_chars); `bench` is the static benchmark
     * frame (same shape) the decontamination stage screens against.
-    * Returns the number of documents admitted.
+    * Returns the number of documents admitted (observed on the final
+    * pool's checkpoint).
     *
     * `batchId` keys the batch's attrition rows. Callers with a
     * delivery-tracking source (runOnce: the checkpointed foreachBatch
@@ -135,26 +145,23 @@ object PipelineStream {
                                         attritionSchema)
       .filter(col("batch_id") === batchId).isEmpty
 
-    val d0 = batch
-      .withColumn("n_toks", size(Ops.tokens(col("text"))).cast("bigint"))
-      .localCheckpoint(true) // one stable snapshot across all stages
-    // 1: benchmark quarantine (same membership rule as the batch op)
-    val pool1 = d0.filter(col("doc_id") % 50 =!= 0)
-    // 2: quality gate (shared funnel rules)
-    val pool2 = pool1.filter(TextOps.funnelStage === "5_pass")
+    // Every stage pool is materialized once and counted on its own
+    // checkpoint (Pipeline.observedPool), with Pipeline's stage rules
+    // wherever the rule is the same on both planes. The stream adds its
+    // three ledger probes: the exact hash, the star key, the caps offset.
+    def step(stage: String, prev: Pipeline.Counted): Pipeline.Counted =
+      Pipeline.observedPool(Pipeline.stageStep(stage, prev.pool, bench, globalHotGrams))
+    val s0 = Pipeline.observedPool(Pipeline.rawPool(batch))
+    val s1 = step("1_quarantine", s0)
+    val s2 = step("2_quality", s1)
     // 3: exact dedup — collapse in-batch copies to min doc_id, then
     // drop hashes already admitted (bucket-pruned ledger probe). The
     // fingerprint is the BATCH operator's (md5 of whitespace-normalized
     // text, q_fingerprint's rule) — not CorpusStream's raw sha-256 —
     // so whitespace-variant copies resolve identically on both planes.
-    val hashed = pool2.withColumn("text_hash",
-      md5(Ops.normalizeText(col("text"))))
-    val collapsed = hashed
-      .withColumn("min_id",
-        min(col("doc_id")).over(Window.partitionBy(col("text_hash"))))
-      .filter(col("doc_id") === col("min_id")).drop("min_id")
-      .withColumn("bucket", substring(col("text_hash"), 1, 2))
-      .localCheckpoint(true) // stable: bucket list + probe + later stages
+    val collapsed = graft.PlanMode.checkpointTail(
+      Pipeline.exactCollapse(s2.pool).withColumnRenamed("fpr", "text_hash")
+        .withColumn("bucket", substring(col("text_hash"), 1, 2)))
     val hashBuckets = collapsed.select(col("bucket")).distinct()
       .collect().map(_.getString(0)).toSeq // ≤ 256 by construction
     val docsProbe = CorpusStream.bucketPaths(spark, docsDir(rootDir),
@@ -162,18 +169,15 @@ object PipelineStream {
       case Seq() => emptyOf(spark, docsLedgerSchema)
       case paths => spark.read.schema(docsLedgerSchema).parquet(paths: _*)
     }
-    val pool3 = collapsed.join(docsProbe.select(col("text_hash")),
-                               Seq("text_hash"), "left_anti")
-    // 4: near dedup — in-batch keep-component-min (the batch operator's
-    // exact rule via shared clusterLabelsOf), then drop docs sharing
-    // any star key with an already-admitted doc (bucket-pruned probe)
-    val inBatchKept = pool3.join(
-      Corpus.clusterLabelsOf(pool3).filter(col("label") === col("doc_id"))
-        .select(col("doc_id")), Seq("doc_id"))
-    val batchKeys = Corpus.starKeyed(inBatchKept)
+    val s3 = Pipeline.observedPool(
+      collapsed.join(docsProbe.select(col("text_hash")), Seq("text_hash"), "left_anti"))
+    // 4: near dedup — in-batch keep-component-min, then drop docs
+    // sharing any star key with an already-admitted doc (bucket-pruned
+    // probe)
+    val inBatchKept = Pipeline.stageStep("4_near_dedup", s3.pool, bench)
+    val batchKeys = graft.PlanMode.checkpointTail(Corpus.starKeyed(inBatchKept)
       .select(col("doc_id"), col("key"),
-        format_string("%02x", pmod(xxhash64(col("key")), lit(256L))).as("bucket"))
-      .localCheckpoint(true)
+        format_string("%02x", pmod(xxhash64(col("key")), lit(256L))).as("bucket")))
     val keyBuckets = batchKeys.select(col("bucket")).distinct()
       .collect().map(_.getString(0)).toSeq
     val keysProbe = CorpusStream.bucketPaths(spark, keysDir(rootDir),
@@ -184,72 +188,47 @@ object PipelineStream {
     val hitIds = batchKeys
       .join(keysProbe.select(col("key")), Seq("key"), "left_semi")
       .select(col("doc_id")).distinct()
-    val pool4 = inBatchKept.join(hitIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
-    // 5: decontamination — any shared df-capped word-n-gram with the
-    // benchmark (per-batch df cap: the streaming approximation of the
-    // batch operator's corpus-wide cap; a deployment would broadcast a
-    // precomputed global hot-gram list instead)
-    val survGrams = pool4.select(col("doc_id"),
-      explode(Ops.shingles(Ops.tokens(col("text")), Corpus.ContamN))
-        .as("gram"))
-    val benchGrams = bench.select(
-        explode(Ops.shingles(Ops.tokens(col("text")), Corpus.ContamN))
-          .as("gram")).distinct()
-    val contaminated = survGrams
-      .join(benchGrams, Seq("gram"), "left_semi")
-      .join(globalHotGrams.getOrElse(Corpus.hotGrams(survGrams)),
-            Seq("gram"), "left_anti")
-      .select(col("doc_id")).distinct()
-    val pool5 = pool4.join(contaminated, Seq("doc_id"), "left_anti")
+    val s4 = Pipeline.observedPool(inBatchKept.join(hitIds, Seq("doc_id"), "left_anti"))
+    // 5: decontamination — per-batch df cap unless `globalHotGrams`
+    val s5 = step("5_decontam", s4)
     // 6: source caps — greedy admission against the ledgered per-source
-    // totals (bounded probe: the admitted ledger's per-source sums are
-    // O(sources) rows). Within the batch the order is the batch
-    // operator's (h, doc_id); the ledger offset makes it
-    // arrival-order-greedy across batches.
+    // totals (bounded probe: O(sources) rows). Within the batch the
+    // order is the batch operator's (h, doc_id); the ledger offset,
+    // which sits inside the cap filter, makes it arrival-order-greedy
+    // across batches, so this rule is the stream's own.
     val ledgerCum = readOrEmpty(spark, capsDir(rootDir), capsSchema)
       .groupBy(col("source")).agg(sum(col("adm_toks")).as("led_toks"))
     val wcap = Window.partitionBy(col("source"))
       .orderBy(col("h").asc, col("doc_id").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val pool6 = pool5
+    val s6 = Pipeline.observedPool(s5.pool
       .withColumn("h",
         Ops.md5Bits60(concat(col("doc_id").cast("string"), lit(":cap"))))
       .withColumn("cum", sum(col("n_toks")).over(wcap))
       .join(broadcast(ledgerCum), Seq("source"), "left")
       .filter(col("cum") + coalesce(col("led_toks"), lit(0L))
-                <= Pipeline.CapTokens)
-      .localCheckpoint(true) // snapshot BEFORE appending to probed dirs
+                <= Pipeline.CapTokens))
+    val pool6 = s6.pool // snapshot BEFORE appending to probed dirs
 
-    val admitted = pool6.count()
     // Attrition accounting: one row per stage (drops + the batch's
     // stage-0 intake), appended BEFORE the state ledgers so a crash
     // between the two over-counts drops rather than under-counting
     // state (re-ingest then reconciles: replayed docs re-drop). A
     // retried delivery (alreadyAccounted) skips this block entirely.
+    val counts = Seq(s0, s1, s2, s3, s4, s5, s6)
     if (!alreadyAccounted) {
-      def cnt(df: DataFrame): (Long, Long) = {
-        val r = df.agg(count(lit(1)), coalesce(sum(col("n_toks")), lit(0L)))
-          .head()
-        (r.getLong(0), r.getLong(1))
-      }
-      val s0 = cnt(d0); val s1 = cnt(pool1); val s2 = cnt(pool2)
-      val s3 = cnt(pool3); val s4 = cnt(pool4); val s5 = cnt(pool5)
-      val s6 = cnt(pool6)
-      val stages = Seq(
-        ("0_raw", s0, s0), ("1_quarantine", s0, s1), ("2_quality", s1, s2),
-        ("3_exact_dedup", s2, s3), ("4_near_dedup", s3, s4),
-        ("5_decontam", s4, s5), ("6_source_caps", s5, s6))
       import spark.implicits._
-      val attrRows = stages.map { case (st, in, out) =>
-        (batchId, st, in._1 - out._1, in._2 - out._2,
-         if (st == "0_raw") s0._1 else 0L, if (st == "0_raw") s0._2 else 0L)
-      }.toDF(attritionSchema.fieldNames: _*)
+      val attrRows = Pipeline.StageNames.zip(counts.zip(s0 +: counts))
+        .map { case (st, (out, in)) =>
+          val raw = st == "0_raw"
+          (batchId, st, in.docs - out.docs, in.tokens - out.tokens,
+           if (raw) s0.docs else 0L, if (raw) s0.tokens else 0L)
+        }.toDF(attritionSchema.fieldNames: _*)
         .withColumn("bucket", lit("00"))
       CorpusStream.stagedAppend(spark, attrRows, attrDir(rootDir))
     }
 
-    if (admitted > 0) {
+    if (s6.docs > 0) {
       CorpusStream.stagedAppend(spark,
         pool6.select(col("text_hash"), col("doc_id"), col("source"),
                      col("n_toks"),
@@ -266,7 +245,8 @@ object PipelineStream {
           .withColumn("bucket", lit("00")),
         capsDir(rootDir))
     }
-    admitted
+    (Seq(collapsed, batchKeys) ++ counts.map(_.pool)).foreach(graft.PlanMode.release)
+    s6.docs
   }
 
   /** Drive curation over a static documents dir to completion
@@ -311,8 +291,9 @@ object PipelineStream {
                  trigger: org.apache.spark.sql.streaming.Trigger =
                    org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val benchStable = bench.localCheckpoint(true) // one snapshot, all batches
-    val hotStable = globalHotGrams.map(_.localCheckpoint(true))
+    // one snapshot, all batches
+    val benchStable = graft.PlanMode.checkpointTail(bench)
+    val hotStable = globalHotGrams.map(graft.PlanMode.checkpointTail)
     // maxFilesPerTrigger is THE ingest micro-batch sizing knob (one
     // crawl slice per batch vs all available at once) — surfaced for
     // deployments and StreamBench; None keeps the source default
@@ -377,55 +358,30 @@ object PipelineStream {
     admitted
   }
 
-  /** Fold the attrition ledger (plus a pack pass over the admitted
-    * ledger) into exactly the batch operator's attrition table:
-    * (stage, n_docs, n_tokens, docs_dropped, tokens_dropped, n_seqs).
+  /** Fold the attrition ledger into per-stage (stage, n_docs,
+    * n_tokens) rows — the intake total less the drops up to each stage —
+    * and hand them, with the admitted ledger as the pack pool, to the
+    * batch operator's attrition tail (Pipeline.attritionTail): exactly
+    * the batch table (stage, n_docs, n_tokens, docs_dropped,
+    * tokens_dropped, n_seqs).
     */
   def attritionView(spark: SparkSession, rootDir: String): DataFrame = {
-    val attr = readOrEmpty(spark, attrDir(rootDir), attritionSchema)
-    val byStage = attr.groupBy(col("stage"))
+    // Bounded: 7 stage rows; the totals and running subtractions are
+    // windows over a fixed-size frame (the PLANS.md bounded-final rule).
+    val all = Window.orderBy(col("stage"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val upTo = Window.orderBy(col("stage"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val rows = readOrEmpty(spark, attrDir(rootDir), attritionSchema)
+      .groupBy(col("stage"))
       .agg(sum(col("docs_dropped")).as("d_drop"),
            sum(col("toks_dropped")).as("t_drop"),
            sum(col("docs_in")).as("d_in"),
            sum(col("toks_in")).as("t_in"))
-    // Bounded: 7 stage rows; the running subtraction is a window over
-    // a fixed-size frame (the PLANS.md bounded-final rule).
-    val w = Window.orderBy(col("stage"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val totIn = attr.agg(coalesce(sum(col("docs_in")), lit(0L)),
-                         coalesce(sum(col("toks_in")), lit(0L))).head()
-    val stages = byStage
-      .withColumn("n_docs", lit(totIn.getLong(0)) -
-        sum(col("d_drop")).over(w))
-      .withColumn("n_tokens", lit(totIn.getLong(1)) -
-        sum(col("t_drop")).over(w))
-      .select(col("stage"), col("n_docs"), col("n_tokens"),
-              col("d_drop").as("docs_dropped"),
-              col("t_drop").as("tokens_dropped"))
-    val admittedDocs = readOrEmpty(spark, docsDir(rootDir), docsLedgerSchema)
-    val wpack = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val nSeqs = admittedDocs
-      .select(col("doc_id"),
-              (Ops.md5Bits60(col("doc_id").cast("string"))
-                 % Corpus.NumShards).as("shard"),
-              col("n_toks"))
-      .withColumn("cum_before",
-        coalesce(sum(col("n_toks")).over(wpack), lit(0L)))
-      .select(col("shard"),
-              expr(s"cum_before DIV ${Corpus.SeqLen}").as("seq_id"))
-      .distinct()
-      .agg(count(lit(1)).as("n_seqs"))
-    val packRow = stages.filter(col("stage") === "6_source_caps")
-      .withColumn("stage", lit("7_pack"))
-      .withColumn("docs_dropped", lit(0L))
-      .withColumn("tokens_dropped", lit(0L))
-    stages.unionByName(packRow)
-      .crossJoin(nSeqs)
-      .select(col("stage"), col("n_docs"), col("n_tokens"),
-              col("docs_dropped"), col("tokens_dropped"),
-              when(col("stage") === "7_pack", col("n_seqs"))
-                .otherwise(lit(0L)).as("n_seqs"))
-      .orderBy(col("stage"))
+      .select(col("stage"),
+              (sum(col("d_in")).over(all) - sum(col("d_drop")).over(upTo)).as("n_docs"),
+              (sum(col("t_in")).over(all) - sum(col("t_drop")).over(upTo)).as("n_tokens"))
+    Pipeline.attritionTail(rows,
+      readOrEmpty(spark, docsDir(rootDir), docsLedgerSchema))
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ext.{Corpus, Similarity}
+import graft.streaming.PipelineStream
 import org.apache.spark.SparkTestHooks
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SQLExecution
@@ -21,6 +22,8 @@ import scala.collection.mutable
   *    aggregation job between one round's checkpoint and the next.
   *  - every Lloyd step of the codebook trainers is one job (the seed
   *    collect is the other).
+  *  - the curation run's stage counts ride on the stage-pool
+  *    checkpoints, in the batch report and in the stream alike.
   */
 class JobCountSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -138,6 +141,35 @@ class JobCountSpec extends AnyFunSuite {
     val (_, fired) = record(SparkEntry.queries("q_cc_profile")(spark, TestSpark.Sf))
     assert(fired.jobs.length <= 4, s"construction jobs: ${fired.jobs.length}")
     PlanMode.sweep(spark)
+  }
+
+  // The stage rows are observed on the stage-pool checkpoints, so
+  // consuming the report runs only the pack count and the 8-row lag
+  // window. The report this one replaced unioned 8 one-row stage
+  // aggregates and fired 11 jobs here.
+  test("q_pipeline_run fires at most 4 jobs while its frame is consumed") {
+    Tables.documents(spark, TestSpark.Sf).schema
+    val df = SparkEntry.queries("q_pipeline_run")(spark, TestSpark.Sf)
+    val (_, fired) = record(df.collect())
+    assert(fired.jobs.length <= 4, s"consume jobs: ${fired.jobs.length}")
+    PlanMode.sweep(spark)
+  }
+
+  // One micro-batch counts its 7 stages on the checkpoints it runs
+  // anyway. The ingest this one replaced fired 58 jobs here, 23 of them
+  // for its per-stage count aggregates and the admitted count.
+  test("a whole-corpus ingestBatch fires at most 43 jobs, none a head or a count") {
+    val docs = Tables.documents(spark, TestSpark.Sf)
+    docs.schema
+    val bench = docs.filter(docs("doc_id") % 50 === 0)
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs_ingest")
+      .toString + "/pipeline"
+    val (admitted, fired) = record(PipelineStream.ingestBatch(docs, bench, root))
+    assert(admitted > 0)
+    assert(fired.jobs.length <= 43, s"ingest jobs: ${fired.jobs.length}")
+    val counting = fired.executions.values
+      .filter(d => d.startsWith("head at") || d.startsWith("count at"))
+    assert(counting.isEmpty, s"counting actions: $counting")
   }
 
   test("trainCodebook fires exactly 1 + KmIters jobs") {

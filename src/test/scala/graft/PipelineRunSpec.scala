@@ -149,6 +149,21 @@ class PipelineRunSpec extends AnyFunSuite {
     assert(again == oneShot)
   }
 
+  test("checkpointed run: a stage whose pool is empty keeps its zero row") {
+    // Both docs fail the quality gate, so stages 2..6 read back empty
+    // slim pools; their rows must still read 0, as the in-memory
+    // chain's observed counts do.
+    val df = Seq(doc(1L, "misc", "x y z"), doc(3L, "misc", "p q"))
+      .toDF("doc_id", "source", "lang", "n_chars", "text")
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_pipeckpt_empty").toString + "/run"
+    val oneShot = Pipeline.pipelineRun(df)
+      .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
+    assert(oneShot.map(_._2) == Seq(2L, 2L, 0L, 0L, 0L, 0L, 0L, 0L))
+    assert(Pipeline.pipelineRunCheckpointed(df, dir)
+      .as[(String, Long, Long, Long, Long, Long)].collect().toSeq == oneShot)
+  }
+
   test("checkpointed run: a TORN stage write (partial dir, no _SUCCESS) is discarded and recomputed") {
     // Real failures don't politely stop between stages — a task set can
     // die mid-parquet-write, leaving a populated stage dir WITHOUT the

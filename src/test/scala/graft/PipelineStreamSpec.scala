@@ -8,7 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The streaming curation surface's contracts:
   *  - single-batch BATCH PARITY: ingesting the whole corpus as one
   *    micro-batch into empty ledgers folds to exactly the batch
-  *    q_pipeline_run attrition table (shared stage code end to end);
+  *    q_pipeline_run attrition table. The planes share the stage rules
+  *    except the stream's ledger probes, count every stage the same way
+  *    (observed on the pool checkpoints) and end in the same attrition
+  *    tail; parity also holds on the reliable checkpoint route
+  *    (`spark.graft.checkpoint.dir`);
   *  - idempotent replay: re-ingesting admits nothing, leaves admitted
   *    state and the packed-sequence count unchanged, and accounts the
   *    replayed docs as exact-dup drops;
@@ -24,18 +28,22 @@ class PipelineStreamSpec extends AnyFunSuite {
     java.nio.file.Files.createTempDirectory(s"graft_pipe_$tag").toString +
       "/pipeline"
 
-  test("single-batch ingest == batch q_pipeline_run attrition table") {
-    val root = freshRoot("parity")
-    val docs = Tables.documents(spark, sf)
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-    val admitted = PipelineStream.ingestBatch(docs, bench, root)
-    assert(admitted > 0)
-    val got = PipelineStream.attritionView(spark, root)
-      .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
-    val want = Pipeline.pipelineRun(docs)
-      .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
-    assert(got == want, "streamed fold must equal the batch operator")
-  }
+  for ((reliable, suffix) <- Seq(false -> "", true -> " (reliable checkpoint dir)"))
+    test("single-batch ingest == batch q_pipeline_run attrition table" + suffix) {
+      def run[A](body: => A): A =
+        if (reliable) TestSpark.withReliableCheckpointDir(body) else body
+      val root = freshRoot("parity")
+      val docs = Tables.documents(spark, sf)
+      val bench = docs.filter(col("doc_id") % 50 === 0)
+      val admitted = run(PipelineStream.ingestBatch(docs, bench, root))
+      assert(admitted > 0)
+      val got = PipelineStream.attritionView(spark, root)
+        .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
+      val want = run(Pipeline.pipelineRun(docs)
+        .as[(String, Long, Long, Long, Long, Long)].collect().toSeq)
+      assert(got == want, "streamed fold must equal the batch operator")
+      assert(admitted == want.last._2)
+    }
 
   test("replay admits nothing and is accounted as exact-dup drops") {
     val root = freshRoot("replay")
