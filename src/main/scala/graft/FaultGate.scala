@@ -35,7 +35,7 @@ import scala.jdk.CollectionConverters._
   *   E. `stream_loss` — the streaming curation surface
   *      (PipelineStream) under TOTAL executor loss mid-stream. The
   *      query is expected to die (its static bench frame is a
-  *      localCheckpoint, and a kill can land mid-stagedAppend leaving
+  *      localCheckpoint, and a kill can land mid-Ledger.commit leaving
   *      a PARTIAL batch in a ledger); the deployment contract under
   *      test is the recovery path: restart from the carried streaming
   *      checkpoint, redelivered batch ids never double-account,
@@ -285,22 +285,13 @@ object FaultGate {
     val sbench = sdocs.filter(col("doc_id") % 50 === 0)
     def ledgerRows(root: String, sub: String,
                    schema: org.apache.spark.sql.types.StructType,
-                   cols: Seq[String]): Seq[String] = {
-      val dir = s"$root/$sub"
-      if (!new java.io.File(dir).exists()) Seq.empty
-      else spark.read
-        .schema(schema.add(org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.StringType)))
-        .option("basePath", dir).parquet(dir)
+                   cols: Seq[String]): Seq[String] =
+      streaming.Ledger.read(spark, s"$root/$sub", schema)
         .select(cols.map(col): _*).collect().map(_.toString).toSeq.sorted
-    }
-    def intakeOf(root: String): Long = spark.read
-      .schema(streaming.PipelineStream.attritionSchema
-        .add(org.apache.spark.sql.types.StructField("bucket",
-          org.apache.spark.sql.types.StringType)))
-      .option("basePath", s"$root/attrition").parquet(s"$root/attrition")
-      .filter(col("stage") === "0_raw")
-      .agg(coalesce(sum(col("docs_in")), lit(0L))).head().getLong(0)
+    def intakeOf(root: String): Long =
+      streaming.Ledger.read(spark, s"$root/attrition", streaming.PipelineStream.attritionSchema)
+        .filter(col("stage") === "0_raw")
+        .agg(coalesce(sum(col("docs_in")), lit(0L))).head().getLong(0)
 
     // No-fault baseline on a pristine root: the admitted-corpus truth.
     val baseRoot = s"$sroot/base"

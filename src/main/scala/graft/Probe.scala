@@ -25,8 +25,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * driver collects fired while the frame is built, then the final
   * collect. Each execution's plan is the AQE-final one it ran.
   *
-  * `audit` prints one row per registry query — the number of executions
-  * and, summed over them, shuffle exchanges, single-partition exchanges,
+  * `audit` prints one row per registry query — the number of executions,
+  * the number of Spark jobs (RDD-API actions such as the codebook
+  * trainers' Lloyd steps included, which are no SQL execution) and,
+  * summed over the executions, shuffle exchanges, single-partition exchanges,
   * broadcasts, operators fused into whole-stage codegen and the columns
   * each parquet scan reads — the table in docs/PLANS.md. It exits 1 if
   * any row is an ERROR. `plan` prints `explain("formatted")` of each
@@ -65,13 +67,19 @@ object Probe {
 
   private def usage(): Nothing = { System.err.println(Usage); sys.exit(2) }
 
-  /** Build query `name`'s frame, `collect()` it and return every SQL
-    * execution that ran on the way (action name, QueryExecution), in
-    * order, as one QueryExecutionListener on the session saw them.
-    * Sweeps the session's storage after.
+  /** What one query ran: every SQL execution (action name,
+    * QueryExecution) in order, and the number of Spark jobs.
+    */
+  private[graft] final case class Recorded(execs: Seq[(String, QueryExecution)], jobs: Int)
+
+  /** Build query `name`'s frame, `collect()` it and record what ran on
+    * the way: every SQL execution, as one QueryExecutionListener on the
+    * session saw them, and every job, as a [[Harness.Metrics]] listener
+    * on the context saw them (a job run through the RDD API is no SQL
+    * execution). Sweeps the session's storage after.
     */
   private[graft] def executions(spark: SparkSession, name: String,
-                                sfDir: String): Seq[(String, QueryExecution)] = {
+                                sfDir: String): Recorded = {
     val sc = spark.sparkContext
     BusShim.drain(sc) // no earlier query's executions reach the recorder
     val seen = mutable.ArrayBuffer[(String, QueryExecution)]()
@@ -81,33 +89,35 @@ object Probe {
       def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
     }
     spark.listenerManager.register(recorder)
+    val metrics = Harness.metrics(spark)
     try {
       SparkEntry.queries(name)(spark, sfDir).collect()
-      BusShim.drain(sc)
-      seen.synchronized(seen.toVector)
+      val jobs = metrics.snapshot().jobSpans.size // drains the bus
+      Recorded(seen.synchronized(seen.toVector), jobs)
     } finally {
       spark.listenerManager.unregister(recorder)
+      sc.removeSparkListener(metrics)
       PlanMode.sweep(spark)
     }
   }
 
   /** One audit row: a query's plan shape summed over its executions. */
-  final case class AuditRow(query: String, actions: Seq[String], shuffles: Int,
-                            singles: Int, broadcasts: Int, codegen: Int,
-                            scans: Seq[Int]) {
+  final case class AuditRow(query: String, actions: Seq[String], jobs: Int,
+                            shuffles: Int, singles: Int, broadcasts: Int,
+                            codegen: Int, scans: Seq[Int]) {
     def line: String =
-      s"| $query | ${actions.size} | $shuffles | $singles | $broadcasts | $codegen | " +
+      s"| $query | ${actions.size} | $jobs | $shuffles | $singles | $broadcasts | $codegen | " +
         s"${scans.length} (${scans.mkString("/")}) |"
   }
 
   /** Run query `name` and sum the plan shape of every execution it ran. */
   def auditRow(spark: SparkSession, name: String, sfDir: String): AuditRow = {
-    val execs = executions(spark, name, sfDir)
+    val Recorded(execs, jobs) = executions(spark, name, sfDir)
     // AQE's toString appends an "== Initial Plan ==" section that would
     // double-count every node — audit the final plans only.
     val lines = execs.flatMap(
       _._2.executedPlan.toString.split("== Initial Plan ==").head.linesIterator)
-    AuditRow(name, execs.map(_._1),
+    AuditRow(name, execs.map(_._1), jobs,
       shuffles = lines.count(l => l.contains("Exchange hashpartitioning") ||
                                   l.contains("Exchange rangepartitioning")),
       // The corpus-cardinality anti-pattern detector: an Exchange
@@ -144,8 +154,8 @@ object Probe {
     * any query failed (its row reads ERROR).
     */
   def audit(spark: SparkSession, sfDir: String): Boolean = {
-    println("| query | executions | shuffles | 1-part exch | broadcasts | codegen ops | scans (pruned cols) |")
-    println("|---|---|---|---|---|---|---|")
+    println("| query | executions | jobs | shuffles | 1-part exch | broadcasts | codegen ops | scans (pruned cols) |")
+    println("|---|---|---|---|---|---|---|---|")
     SparkEntry.queries.keys.toSeq.sorted.map { name =>
       try { println(auditRow(spark, name, sfDir).line); true }
       catch {
@@ -164,7 +174,7 @@ object Probe {
            dump: Option[String]): Seq[(String, Seq[String])] = {
     dump.foreach(d => Files.createDirectories(Paths.get(d)))
     for (q <- names) yield {
-      val execs = executions(spark, q, sfDir)
+      val execs = executions(spark, q, sfDir).execs
       val text = execs.zipWithIndex.map { case ((action, qe), i) =>
         s"===== execution ${i + 1}/${execs.size}: $action =====\n" +
           qe.explainString(FormattedMode)

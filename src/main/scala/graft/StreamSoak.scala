@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import graft.streaming.PipelineStream
+import graft.streaming.{Ledger, PipelineStream}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -194,11 +194,7 @@ object StreamSoak {
       // doc exactly once, across batches + reconcile + restart.
       val attr = PipelineStream.attritionView(spark, root).collect()
       val firstStage = attr.map(_.getString(0)).min
-      val intakeDocs = spark.read
-        .schema(PipelineStream.attritionSchema
-          .add(org.apache.spark.sql.types.StructField("bucket",
-            org.apache.spark.sql.types.StringType)))
-        .option("basePath", s"$root/attrition").parquet(s"$root/attrition")
+      val intakeDocs = Ledger.read(spark, s"$root/attrition", PipelineStream.attritionSchema)
         .filter(col("stage") === firstStage)
         .agg(coalesce(sum(col("docs_in")), lit(0L))).head().getLong(0)
       val conserved = intakeDocs == delivered

@@ -33,7 +33,7 @@ import org.apache.spark.sql.types._
   * Reads fold latest-wins by the caller-supplied strictly-increasing
   * `seq` over both tiers; compaction is the same fold materialized.
   * Same single-writer / rename-atomicity caveats as the streaming
-  * ledgers (CorpusStream.scala commit note); `seq` collisions are the
+  * ledgers (graft.streaming.Ledger); `seq` collisions are the
   * caller's contract (a real deployment derives seq from its WAL/batch
   * id — here Verify/spec drive it explicitly).
   */

@@ -22,11 +22,9 @@ import org.apache.spark.sql.types._
   * therefore EXACT and arrival-order-independent — no ingest-order
   * canonicalization caveat, because nothing here is order-sensitive.
   *
-  * Layout and commit discipline are CorpusStream's wholesale: 256
-  * hash-partitioned buckets (here the low 8 bits of the 60-bit sig —
-  * md5 bits, uniform by construction), a small batch probes only the
-  * bucket directories its own sigs fall in, appends go through the
-  * staging-then-rename commit, same single-writer contract.
+  * The ledger is a [[Ledger]] bucketed on the low 8 bits of the 60-bit
+  * sig (md5 bits, uniform by construction): a small batch probes only
+  * the bucket directories its own sigs fall in.
   */
 object ChunkStream {
 
@@ -34,11 +32,6 @@ object ChunkStream {
     StructField("chunk_sig", LongType),
     StructField("doc_id", LongType),
     StructField("cnt", LongType)))
-
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      chunkLedgerSchema)
 
   /** One micro-batch: chunk → collapse to (sig, doc, cnt) → drop pairs
     * already in the MATCHING ledger buckets → staged-append the rest.
@@ -48,41 +41,18 @@ object ChunkStream {
     * driver collect (≤ 256 two-hex-char strings by construction).
     */
   private[graft] def ingestBatch(batch: DataFrame, ledgerDir: String): Long = {
-    val spark = batch.sparkSession
     val pairs = graft.ext.Corpus.chunkRows(batch)
       .groupBy(col("chunk_sig"), col("doc_id"))
       .agg(count(lit(1)).cast("long").as("cnt"))
-      .withColumn("bucket",
-        format_string("%02x", pmod(col("chunk_sig"), lit(256L))))
-      .localCheckpoint(true) // one stable snapshot: bucket list + probe + write
-    val batchBuckets = pairs.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq // ≤ 256 rows by construction
-    val probe = CorpusStream.bucketPaths(spark, ledgerDir, batchBuckets) match {
-      case Seq() => emptyLedger(spark)
-      case paths => spark.read.schema(chunkLedgerSchema).parquet(paths: _*)
-    }
-    val fresh = pairs.join(
-      probe.select(col("chunk_sig"), col("doc_id")),
-      Seq("chunk_sig", "doc_id"), "left_anti")
-      .localCheckpoint(true) // snapshot BEFORE appending to the dirs it read
-    val n = fresh.count()
-    if (n > 0) CorpusStream.stagedAppend(spark, fresh, ledgerDir)
-    n
+      .withColumn("bucket", Ledger.keyBucket(col("chunk_sig")))
+    Ledger.admit(pairs, ledgerDir, chunkLedgerSchema, Seq("chunk_sig", "doc_id"))
   }
 
   /** Full incidence-ledger view (all buckets); empty/missing dir →
-    * empty frame, same contract as CorpusStream.historyOrEmpty.
+    * empty frame.
     */
-  def ledger(spark: SparkSession, ledgerDir: String): DataFrame = {
-    if (CorpusStream.fs(spark, ledgerDir)
-          .exists(new org.apache.hadoop.fs.Path(ledgerDir)))
-      spark.read
-        .schema(chunkLedgerSchema.add(StructField("bucket", StringType)))
-        .option("basePath", ledgerDir)
-        .parquet(ledgerDir)
-        .select(col("chunk_sig"), col("doc_id"), col("cnt"))
-    else emptyLedger(spark)
-  }
+  def ledger(spark: SparkSession, ledgerDir: String): DataFrame =
+    Ledger.read(spark, ledgerDir, chunkLedgerSchema)
 
   /** Per-document shared-chunk stats folded from the ledger — EXACTLY
     * ext.Corpus.chunkDedup's output over every document ingested so
@@ -111,11 +81,7 @@ object ChunkStream {
     */
   def runOnce(spark: SparkSession, srcDir: String, ledgerDir: String,
               name: String = "graft_chunk_ingest"): DataFrame = {
-    val q = spark.readStream
-      .schema(CorpusStream.docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-      .parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir).writeStream
       .queryName(name)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -123,7 +89,7 @@ object ChunkStream {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     ledger(spark, ledgerDir)
   }
 }

@@ -25,13 +25,10 @@ import org.apache.spark.sql.types._
   * total_bytes exceed the target; here the emitted plan IS the result.
   *
   * Ledger durability (round-10 fix of the non-idempotent runOnce):
-  * each micro-batch's partial manifest commits under a DETERMINISTIC
-  * batch-id token via the CorpusStream staging discipline — write to
-  * `<ledger>.staging/batch-<id>`, delete any prior part-files of the
-  * same token from the ledger (a retried batch first erases its own
-  * partial commit), then rename the staged parts in (atomic per file
-  * on HDFS/local FS; CorpusStream.scala's object-store caveat applies
-  * verbatim). The stream also keeps a real checkpoint at
+  * each micro-batch's partial manifest is a flat [[Ledger.commit]] under
+  * its DETERMINISTIC batch-id token, so a retried batch first erases its
+  * own partial commit (the staged commit and its object-store caveat
+  * are the Ledger's). The stream also keeps a real checkpoint at
   * `<ledger>.checkpoint`, so re-running runOnce over the same source
   * and ledger is a no-op (AvailableNow finds no new files) instead of
   * replaying — and therefore never double-counts: additive state plus
@@ -61,71 +58,32 @@ object CompactionStream {
     * Explicit schema so a missing/empty ledger reads as empty.
     */
   private[graft] def foldedManifest(spark: SparkSession,
-                                    ledgerDir: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(ledgerDir)
-    val f = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val raw =
-      if (f.exists(path)) spark.read.schema(manifestSchema).parquet(ledgerDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], manifestSchema)
-    raw.groupBy(col("source"), col("file_idx"))
+                                    ledgerDir: String): DataFrame =
+    Ledger.read(spark, ledgerDir, manifestSchema)
+      .groupBy(col("source"), col("file_idx"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("bytes")).as("bytes"))
-  }
 
   /** Current compaction plan as of the ledger's contents. */
   def plan(spark: SparkSession, ledgerDir: String): DataFrame =
     Layout.binManifest(foldedManifest(spark, ledgerDir))
 
-  /** Commit one batch's partial manifest under its batch-id token:
-    * stage, erase any prior commit of the SAME token (retry
-    * idempotency), rename in. Flat part-files inside ledgerDir, so the
-    * fold's plain parquet read is unchanged.
-    */
-  private[graft] def commitPartial(spark: SparkSession, partial: DataFrame,
-                                   ledgerDir: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val token = f"batch-$batchId%08d"
-    val stageDir = s"$ledgerDir.staging/$token"
-    val f = new Path(ledgerDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    partial.write.mode("overwrite").parquet(stageDir)
-    val ledger = new Path(ledgerDir)
-    f.mkdirs(ledger)
-    f.listStatus(ledger)
-      .filter(_.getPath.getName.startsWith(token))
-      .foreach(st => f.delete(st.getPath, false))
-    f.listStatus(new Path(stageDir))
-      .filter(_.getPath.getName.startsWith("part-"))
-      .foreach { file =>
-        val target = new Path(ledger, s"$token-${file.getPath.getName}")
-        require(f.rename(file.getPath, target),
-          s"manifest commit rename failed: ${file.getPath} -> $target")
-      }
-    f.delete(new Path(stageDir), true)
-  }
-
   /** Drive the monitor over a static documents dir (AvailableNow) and
     * return the post-drain plan. Idempotent: the checkpoint at
     * `<ledger>.checkpoint` makes a re-run over the same source a no-op,
-    * and commitPartial makes a retried batch overwrite itself.
+    * and the batch-id commit makes a retried batch overwrite itself.
     */
   def runOnce(spark: SparkSession, srcDir: String, ledgerDir: String,
               name: String = "graft_compaction_monitor"): DataFrame = {
-    val q = spark.readStream
-      .schema(CorpusStream.docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir, Some(1)).writeStream
       .queryName(name)
       .outputMode("update")
       .option("checkpointLocation", s"$ledgerDir.checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitPartial(spark, partialManifest(batch), ledgerDir, batchId); ()
+        Ledger.commit(partialManifest(batch), ledgerDir, Some(batchId))
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     plan(spark, ledgerDir)
   }
 }

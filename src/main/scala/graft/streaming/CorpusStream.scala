@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,24 +24,9 @@ import org.apache.spark.sql.types._
   * not the global minimum. (Global-min canonicalization over an
   * unbounded stream would mean rewriting history per batch.)
   *
-  * LEDGER LAYOUT — bucketed by hash prefix: the ledger is Hive-
-  * partitioned on `bucket` = the first two hex chars of the content
-  * hash (256 uniform buckets; SHA-256 prefixes are uniform by
-  * construction). A micro-batch probe therefore opens ONLY the bucket
-  * directories its own hashes fall in — a small batch touching b
-  * buckets reads b/256ths of the ledger's files no matter how large
-  * the corpus history grows, instead of rescanning every hash ever
-  * seen (the r4 shape). Appends go through the same partitioning, so
-  * batch and stream keep sharing one layout.
-  *
-  * SINGLE WRITER — the ledger's check-then-append is not atomic: a
-  * second concurrent writer appending between this batch's anti-join
-  * probe and its Append could re-admit a duplicate hash. The ingest
-  * contract is therefore one writer at a time (exactly what a
-  * streaming query with a checkpoint is: one driver owns the sink);
-  * the daily batch plane must run fenced from the stream, e.g. while
-  * the stream is stopped. Readers are unaffected: Hive-partitioned
-  * parquet appends are directory-add only.
+  * The ledger's layout, single-writer contract and staged commit are
+  * [[Ledger]]'s: hash-prefix buckets, so a batch probes only the bucket
+  * directories its own hashes fall in.
   *
   * The key operational property is IDEMPOTENT re-ingest: replaying the
   * same files adds zero rows, because every content hash already sits
@@ -78,40 +63,6 @@ object CorpusStream {
     docs.filter(nToks >= MinToks && nToks <= MaxToks)
   }
 
-  private[streaming] def fs(spark: SparkSession, dir: String) =
-    org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ledgerSchema)
-
-  /** The bucket directories under `historyDir` that exist AND are asked
-    * for — the per-batch probe reads exactly these paths. Exposed for
-    * the spec that pins the pruning contract (a b-bucket batch probes
-    * ≤ b of the ledger's 256 partitions).
-    */
-  private[graft] def bucketPaths(spark: SparkSession, historyDir: String,
-                                 buckets: Seq[String]): Seq[String] = {
-    val f = fs(spark, historyDir)
-    buckets.sorted.map(b => s"$historyDir/bucket=$b")
-      .filter(p => f.exists(new org.apache.hadoop.fs.Path(p)))
-  }
-
-  /** Full-ledger view (all buckets), for callers that want the history
-    * as a table — NOT the per-batch probe path. Explicit schema: an
-    * empty, missing, or partially-written dir yields an empty frame.
-    */
-  private def historyOrEmpty(spark: SparkSession, historyDir: String): DataFrame = {
-    if (fs(spark, historyDir).exists(new org.apache.hadoop.fs.Path(historyDir)))
-      spark.read.schema(ledgerSchema.add(StructField("bucket", StringType)))
-        .option("basePath", historyDir)
-        .parquet(historyDir)
-        .select(col("text_hash"), col("canonical_id"),
-                col("lang"), col("source"))
-    else emptyLedger(spark)
-  }
-
   /** One micro-batch of ingest: gate → hash → collapse in-batch dups to
     * the min doc_id → drop hashes already in the MATCHING ledger buckets
     * → append survivors through the bucket partitioning. The batch's
@@ -120,80 +71,14 @@ object CorpusStream {
     * delegates here.
     */
   private[graft] def ingestBatch(batch: DataFrame, historyDir: String): Long = {
-    val spark = batch.sparkSession
-    val hashed = qualityGate(batch)
-      .select(sha2(col("text"), 256).as("text_hash"), col("doc_id"),
-              col("lang"), col("source"))
-    val collapsed = hashed
-      .groupBy(col("text_hash"))
+    val collapsed = qualityGate(batch)
+      .groupBy(sha2(col("text"), 256).as("text_hash"))
       .agg(min_by(struct(col("doc_id"), col("lang"), col("source")),
                   col("doc_id")).as("c"))
       .select(col("text_hash"), col("c.doc_id").as("canonical_id"),
-              col("c.lang").as("lang"), col("c.source").as("source"))
-      .withColumn("bucket", substring(col("text_hash"), 1, 2))
-      .localCheckpoint(true) // one stable snapshot: bucket list + probe + write
-    val batchBuckets = collapsed.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq // ≤ 256 rows by construction
-    val probe = bucketPaths(spark, historyDir, batchBuckets) match {
-      case Seq() => emptyLedger(spark)
-      case paths => spark.read.schema(ledgerSchema).parquet(paths: _*)
-    }
-    val fresh = collapsed.join(
-      probe.select(col("text_hash")), Seq("text_hash"), "left_anti")
-      .localCheckpoint(true) // snapshot BEFORE appending to the dirs it read
-    val n = fresh.count()
-    if (n > 0) stagedAppend(spark, fresh, historyDir)
-    n
-  }
-
-  /** Append through a STAGING area so the ledger only ever gains
-    * complete files: the batch writes to `<historyDir>.staging/<token>`
-    * first, then each finished part-file is renamed into its bucket
-    * directory (rename is atomic per file on HDFS and local FS — a
-    * reader never observes a torn parquet), and no `_SUCCESS` /
-    * `_temporary` artifacts ever land inside historyDir itself. A crash
-    * mid-write leaves only an inert staging directory outside the
-    * ledger; a crash mid-rename leaves some complete files committed
-    * and the rest in staging — the idempotent re-ingest replays the
-    * batch and the anti-join drops whatever already made it in.
-    *
-    * OBJECT-STORE CAVEAT: the commit step is only as atomic as the
-    * filesystem's rename. HDFS and local FS rename atomically within a
-    * volume; S3A and most object stores implement "rename" as
-    * copy+delete, so a reader there CAN observe a partially-copied file
-    * and this sink should instead commit via an object-store committer
-    * or a table format with a metadata log. Staging lives at
-    * `<historyDir>.staging` precisely so both sides share one
-    * scheme/authority — enforced below, since a cross-filesystem
-    * "rename" would silently fail or copy. The single-writer contract
-    * (see class doc) is a convention, not a runtime lock; the staged
-    * layout keeps a violated convention from tearing files, not from
-    * re-admitting a duplicate hash.
-    */
-  private[graft] def stagedAppend(spark: SparkSession, fresh: DataFrame,
-                                  historyDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val token = java.util.UUID.randomUUID().toString
-    val stageDir = s"$historyDir.staging/$token"
-    // Same-filesystem guard: rename-based commit requires staging and
-    // ledger on one scheme/authority (always true for the sibling-path
-    // layout unless a mount boundary splits them).
-    require(fs(spark, stageDir).getUri == fs(spark, historyDir).getUri,
-      s"staging ($stageDir) and ledger ($historyDir) must share a filesystem")
-    fresh.write.partitionBy("bucket").mode(SaveMode.Overwrite).parquet(stageDir)
-    val f = fs(spark, historyDir)
-    f.listStatus(new Path(stageDir)).filter(_.isDirectory).foreach { bdir =>
-      val dst = new Path(s"$historyDir/${bdir.getPath.getName}")
-      f.mkdirs(dst)
-      f.listStatus(bdir.getPath)
-        .filter(_.getPath.getName.startsWith("part-"))
-        .foreach { file =>
-          val target = new Path(dst, s"$token-${file.getPath.getName}")
-          require(f.rename(file.getPath, target),
-            s"ledger commit rename failed: ${file.getPath} -> $target")
-        }
-    }
-    f.delete(new Path(stageDir), true)
+              col("c.lang").as("lang"), col("c.source").as("source"),
+              Ledger.hexBucket(col("text_hash")).as("bucket"))
+    Ledger.admit(collapsed, historyDir, ledgerSchema, Seq("text_hash"))
   }
 
   /** Drive the ingest over a static documents dir to completion
@@ -203,13 +88,7 @@ object CorpusStream {
   def runOnce(spark: SparkSession, srcDir: String, historyDir: String,
               name: String = "graft_corpus_ingest",
               maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader0 = spark.readStream
-      .schema(docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-    val reader = maxFilesPerTrigger
-      .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n.toString))
-    val q = reader.parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir, maxFilesPerTrigger).writeStream
       .queryName(name)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -217,10 +96,10 @@ object CorpusStream {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    // historyOrEmpty, not a bare read: if every document failed the
-    // quality gate (or no files matched), no batch ever wrote and the
-    // dir does not exist — an empty ledger, not an error.
-    historyOrEmpty(spark, historyDir)
+      .awaitTermination()
+    // If every document failed the quality gate (or no files matched),
+    // no batch ever wrote and the dir does not exist: an empty ledger,
+    // not an error.
+    Ledger.read(spark, historyDir, ledgerSchema)
   }
 }

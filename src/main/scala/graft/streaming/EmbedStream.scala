@@ -74,19 +74,13 @@ object EmbedStream {
     out.toSeq
   }
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Admitted rows for the given blocks only (the probe path). */
   private[graft] def ledgerBlocks(spark: SparkSession, ledgerDir: String,
                                   labels: Seq[Int]): DataFrame = {
-    val f = fs(spark, ledgerDir)
+    val f = Ledger.fs(spark, ledgerDir)
     val paths = labels.sorted.map(l => s"$ledgerDir/label=$l")
       .filter(p => f.exists(new org.apache.hadoop.fs.Path(p)))
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ledgerSchema)
+    if (paths.isEmpty) Ledger.empty(spark, ledgerSchema)
     else
       // basePath keeps Spark's own partition discovery in charge of the
       // `label` column (typed, codegen-friendly) instead of re-parsing
@@ -128,10 +122,9 @@ object EmbedStream {
 
   /** The admitted (canonical) set as a table. */
   def ledger(spark: SparkSession, ledgerDir: String): DataFrame = {
-    val f = fs(spark, ledgerDir)
+    val f = Ledger.fs(spark, ledgerDir)
     if (!f.exists(new org.apache.hadoop.fs.Path(ledgerDir)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ledgerSchema)
+      Ledger.empty(spark, ledgerSchema)
     else
       spark.read.schema(ledgerSchema)
         .option("basePath", ledgerDir).parquet(ledgerDir)

@@ -21,51 +21,27 @@ import org.apache.spark.sql.functions._
   * CorpusStream's anti-join probe): KV writes stay blind appends, the
   * HBase-LSM property the batch module documents.
   *
-  * Durability: each micro-batch commits under its DETERMINISTIC
-  * batch-id token via the CompactionStream staging discipline — stage,
-  * erase any prior commit of the same token (a retried batch replaces
-  * itself), rename into L0 — and the stream keeps a real
+  * Durability: each micro-batch is a flat [[Ledger.commit]] into L0
+  * under its DETERMINISTIC batch-id token (a retried batch first erases
+  * its own prior commit), and the stream keeps a real
   * checkpoint at `<ledger>.checkpoint`, so re-running runOnce over the
   * same source is a no-op. KvSpec pins: streamed view == batch-put
   * view, re-run unchanged, retried commit unchanged.
   */
 object KvStream {
 
-  /** Commit one micro-batch of op records under its batch-id token:
-    * map-only staged write, same-token erase, rename into the L0 tier.
-    * L0 gains the batch's files under `<token>-part-*` names — the
-    * memstore-flush discipline of KvTable.append, idempotent per token
-    * on top (a retried batch replaces its own prior flush).
+  /** Commit one micro-batch of op records under its batch-id token into
+    * the L0 tier: L0 gains the batch's files under `<token>-part-*`
+    * names — the memstore-flush discipline of KvTable.append, idempotent
+    * per token on top (a retried batch replaces its own prior flush).
     */
   private[graft] def commitOps(spark: SparkSession, ops: DataFrame,
-                               dir: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val token = f"batch-$batchId%08d"
-    val stageDir = s"$dir.staging/$token"
-    val f = new Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    ops.select(col("key").cast("string").as("key"),
-               col("value").cast("string").as("value"),
-               col("seq").cast("bigint").as("seq"),
-               col("tombstone").cast("boolean").as("tombstone"))
-      .write.mode("overwrite").parquet(stageDir)
-    // Erase any prior commit of this token (retry idempotency), then
-    // rename the staged part-files into the live L0 tier.
-    val stage = new Path(stageDir)
-    val l0 = new Path(s"$dir/l0")
-    f.mkdirs(l0)
-    f.listStatus(l0)
-      .filter(_.getPath.getName.startsWith(token))
-      .foreach(st => f.delete(st.getPath, false))
-    f.listStatus(stage)
-      .filter(_.getPath.getName.startsWith("part-"))
-      .foreach { file =>
-        val target = new Path(l0, s"$token-${file.getPath.getName}")
-        require(f.rename(file.getPath, target),
-          s"kv ledger commit rename failed: ${file.getPath} -> $target")
-      }
-    f.delete(stage, true)
-  }
+                               dir: String, batchId: Long): Unit =
+    Ledger.commit(ops.select(col("key").cast("string").as("key"),
+                             col("value").cast("string").as("value"),
+                             col("seq").cast("bigint").as("seq"),
+                             col("tombstone").cast("boolean").as("tombstone")),
+                  dir, Some(batchId), subdir = "l0")
 
   /** Drive op-record parquet files (key, value, seq, tombstone) from a
     * static dir through the ledger (AvailableNow) and return the
@@ -74,7 +50,7 @@ object KvStream {
     */
   def runOnce(spark: SparkSession, srcDir: String, ledgerDir: String,
               name: String = "graft_kv_ingest"): DataFrame = {
-    val q = spark.readStream
+    spark.readStream
       .schema(KvTable.opSchema)
       .option("pathGlobFilter", "ops*.parquet")
       .option("maxFilesPerTrigger", 1)
@@ -84,11 +60,11 @@ object KvStream {
       .outputMode("update")
       .option("checkpointLocation", s"$ledgerDir.checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitOps(spark, batch, ledgerDir, batchId); ()
+        commitOps(spark, batch, ledgerDir, batchId)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     KvTable.latestView(spark, ledgerDir)
   }
 }

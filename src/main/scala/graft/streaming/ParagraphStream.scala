@@ -13,15 +13,12 @@ import org.apache.spark.sql.types._
   * earlier batch (the durable ledger), or earlier in THIS batch (the
   * in-batch min-(doc_id, seg) collapse).
   *
-  * The ledger reuses CorpusStream's layout and commit discipline
-  * wholesale: Hive-partitioned on the first two hex chars of the
-  * segment hash (256 uniform buckets — a small batch probes only the
-  * bucket directories its own hashes fall in, never the full history),
-  * appended through the same staging-then-rename commit, same
-  * single-writer contract and object-store caveat. Only the row
-  * granularity differs: (seg_hash, doc_id, seg, segtext) — one row per
-  * FIRST-SEEN segment occurrence, which is exactly the survivor set the
-  * batch operator keeps.
+  * The ledger is a [[Ledger]] bucketed on the first two hex chars of
+  * the segment hash (a small batch probes only the bucket directories
+  * its own hashes fall in, never the full history). Only the row
+  * granularity differs from CorpusStream's: (seg_hash, doc_id, seg,
+  * segtext) — one row per FIRST-SEEN segment occurrence, which is
+  * exactly the survivor set the batch operator keeps.
   *
   * Batch parity (pinned by spec): when micro-batches arrive in
   * ascending doc_id order, first-seen-wins coincides with the batch
@@ -48,10 +45,6 @@ object ParagraphStream {
     graft.ext.Corpus.segments(docs)
       .select(col("doc_id"), col("seg"), col("segtext"))
 
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], segLedgerSchema)
-
   /** One micro-batch: segment → hash → collapse in-batch repeats to the
     * min (doc_id, seg) occurrence → drop hashes already in the MATCHING
     * ledger buckets → staged-append survivors. Returns the number of
@@ -59,7 +52,6 @@ object ParagraphStream {
     * collect (≤ 256 two-hex-char strings by construction).
     */
   private[graft] def ingestBatch(batch: DataFrame, ledgerDir: String): Long = {
-    val spark = batch.sparkSession
     val collapsed = segments(batch)
       .withColumn("seg_hash", sha2(col("segtext"), 256))
       .groupBy(col("seg_hash"))
@@ -69,34 +61,15 @@ object ParagraphStream {
            min(col("segtext")).as("segtext"))
       .select(col("seg_hash"), col("wn.doc_id").as("doc_id"),
               col("wn.seg").as("seg"), col("segtext"),
-              substring(col("seg_hash"), 1, 2).as("bucket"))
-      .localCheckpoint(true) // one stable snapshot: bucket list + probe + write
-    val batchBuckets = collapsed.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq // ≤ 256 rows by construction
-    val probe = CorpusStream.bucketPaths(spark, ledgerDir, batchBuckets) match {
-      case Seq() => emptyLedger(spark)
-      case paths => spark.read.schema(segLedgerSchema).parquet(paths: _*)
-    }
-    val fresh = collapsed.join(
-      probe.select(col("seg_hash")), Seq("seg_hash"), "left_anti")
-      .localCheckpoint(true) // snapshot BEFORE appending to the dirs it read
-    val n = fresh.count()
-    if (n > 0) CorpusStream.stagedAppend(spark, fresh, ledgerDir)
-    n
+              Ledger.hexBucket(col("seg_hash")).as("bucket"))
+    Ledger.admit(collapsed, ledgerDir, segLedgerSchema, Seq("seg_hash"))
   }
 
   /** Full segment-ledger view (all buckets); empty/missing dir → empty
-    * frame, same contract as CorpusStream.historyOrEmpty.
+    * frame.
     */
-  def ledger(spark: SparkSession, ledgerDir: String): DataFrame = {
-    if (CorpusStream.fs(spark, ledgerDir)
-          .exists(new org.apache.hadoop.fs.Path(ledgerDir)))
-      spark.read.schema(segLedgerSchema.add(StructField("bucket", StringType)))
-        .option("basePath", ledgerDir)
-        .parquet(ledgerDir)
-        .select(col("seg_hash"), col("doc_id"), col("seg"), col("segtext"))
-    else emptyLedger(spark)
-  }
+  def ledger(spark: SparkSession, ledgerDir: String): DataFrame =
+    Ledger.read(spark, ledgerDir, segLedgerSchema)
 
   /** Per-document kept stats reconstructed from the ledger — the shape
     * of ext.Corpus.paragraphDedup's output for every doc that kept ≥ 1
@@ -118,11 +91,7 @@ object ParagraphStream {
     */
   def runOnce(spark: SparkSession, srcDir: String, ledgerDir: String,
               name: String = "graft_paragraph_ingest"): DataFrame = {
-    val q = spark.readStream
-      .schema(CorpusStream.docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-      .parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir).writeStream
       .queryName(name)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -130,7 +99,7 @@ object ParagraphStream {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     ledger(spark, ledgerDir)
   }
 }

@@ -59,8 +59,8 @@ import org.apache.spark.sql.types._
   * rows recording the drop — admitted state and the packed-sequence
   * count are unchanged (pinned by spec).
   *
-  * Single-writer contract and staged-rename commit are inherited from
-  * CorpusStream (shared stagedAppend).
+  * Every ledger here is a [[Ledger]]: its layout, probe, single-writer
+  * contract and staged commit.
   */
 object PipelineStream {
 
@@ -95,19 +95,6 @@ object PipelineStream {
   private def attrDir(root: String) = s"$root/attrition"
   private def capsDir(root: String) = s"$root/caps"
 
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private def readOrEmpty(spark: SparkSession, dir: String,
-                          schema: StructType): DataFrame =
-    if (CorpusStream.fs(spark, dir)
-          .exists(new org.apache.hadoop.fs.Path(dir)))
-      spark.read.schema(schema.add(StructField("bucket", StringType)))
-        .option("basePath", dir).parquet(dir)
-        .select(schema.fieldNames.map(col): _*)
-    else emptyOf(spark, schema)
-
   /** One micro-batch of curation. `batch` is documents-shaped (doc_id,
     * text, lang, source, n_chars); `bench` is the static benchmark
     * frame (same shape) the decontamination stage screens against.
@@ -141,8 +128,7 @@ object PipelineStream {
     // Retry guard: attrition rows keyed by this id already ledgered
     // means this delivery was already accounted — run the state-side
     // ingest (idempotent) but never re-append accounting.
-    val alreadyAccounted = !readOrEmpty(spark, attrDir(rootDir),
-                                        attritionSchema)
+    val alreadyAccounted = !Ledger.read(spark, attrDir(rootDir), attritionSchema)
       .filter(col("batch_id") === batchId).isEmpty
 
     // Every stage pool is materialized once and counted on its own
@@ -161,14 +147,8 @@ object PipelineStream {
     // so whitespace-variant copies resolve identically on both planes.
     val collapsed = graft.PlanMode.checkpointTail(
       Pipeline.exactCollapse(s2.pool).withColumnRenamed("fpr", "text_hash")
-        .withColumn("bucket", substring(col("text_hash"), 1, 2)))
-    val hashBuckets = collapsed.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq // ≤ 256 by construction
-    val docsProbe = CorpusStream.bucketPaths(spark, docsDir(rootDir),
-                                             hashBuckets) match {
-      case Seq() => emptyOf(spark, docsLedgerSchema)
-      case paths => spark.read.schema(docsLedgerSchema).parquet(paths: _*)
-    }
+        .withColumn("bucket", Ledger.hexBucket(col("text_hash"))))
+    val docsProbe = Ledger.probe(collapsed, docsDir(rootDir), docsLedgerSchema)
     val s3 = Pipeline.observedPool(
       collapsed.join(docsProbe.select(col("text_hash")), Seq("text_hash"), "left_anti"))
     // 4: near dedup — in-batch keep-component-min, then drop docs
@@ -176,15 +156,8 @@ object PipelineStream {
     // probe)
     val inBatchKept = Pipeline.stageStep("4_near_dedup", s3.pool, bench)
     val batchKeys = graft.PlanMode.checkpointTail(Corpus.starKeyed(inBatchKept)
-      .select(col("doc_id"), col("key"),
-        format_string("%02x", pmod(xxhash64(col("key")), lit(256L))).as("bucket")))
-    val keyBuckets = batchKeys.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val keysProbe = CorpusStream.bucketPaths(spark, keysDir(rootDir),
-                                             keyBuckets) match {
-      case Seq() => emptyOf(spark, keysLedgerSchema)
-      case paths => spark.read.schema(keysLedgerSchema).parquet(paths: _*)
-    }
+      .select(col("doc_id"), col("key"), Ledger.keyBucket(xxhash64(col("key"))).as("bucket")))
+    val keysProbe = Ledger.probe(batchKeys, keysDir(rootDir), keysLedgerSchema)
     val hitIds = batchKeys
       .join(keysProbe.select(col("key")), Seq("key"), "left_semi")
       .select(col("doc_id")).distinct()
@@ -196,7 +169,7 @@ object PipelineStream {
     // order is the batch operator's (h, doc_id); the ledger offset,
     // which sits inside the cap filter, makes it arrival-order-greedy
     // across batches, so this rule is the stream's own.
-    val ledgerCum = readOrEmpty(spark, capsDir(rootDir), capsSchema)
+    val ledgerCum = Ledger.read(spark, capsDir(rootDir), capsSchema)
       .groupBy(col("source")).agg(sum(col("adm_toks")).as("led_toks"))
     val wcap = Window.partitionBy(col("source"))
       .orderBy(col("h").asc, col("doc_id").asc)
@@ -225,25 +198,20 @@ object PipelineStream {
            if (raw) s0.docs else 0L, if (raw) s0.tokens else 0L)
         }.toDF(attritionSchema.fieldNames: _*)
         .withColumn("bucket", lit("00"))
-      CorpusStream.stagedAppend(spark, attrRows, attrDir(rootDir))
+      Ledger.commit(attrRows, attrDir(rootDir))
     }
 
     if (s6.docs > 0) {
-      CorpusStream.stagedAppend(spark,
-        pool6.select(col("text_hash"), col("doc_id"), col("source"),
-                     col("n_toks"),
-                     substring(col("text_hash"), 1, 2).as("bucket")),
-        docsDir(rootDir))
-      CorpusStream.stagedAppend(spark,
-        Corpus.starKeyed(pool6).select(col("key"),
-          format_string("%02x", pmod(xxhash64(col("key")), lit(256L)))
-            .as("bucket")),
-        keysDir(rootDir))
-      CorpusStream.stagedAppend(spark,
-        pool6.groupBy(col("source"))
-          .agg(sum(col("n_toks")).as("adm_toks"))
-          .withColumn("bucket", lit("00")),
-        capsDir(rootDir))
+      Ledger.commit(pool6.select(col("text_hash"), col("doc_id"), col("source"),
+                                 col("n_toks"), Ledger.hexBucket(col("text_hash")).as("bucket")),
+                    docsDir(rootDir))
+      Ledger.commit(Corpus.starKeyed(pool6).select(col("key"),
+                      Ledger.keyBucket(xxhash64(col("key"))).as("bucket")),
+                    keysDir(rootDir))
+      Ledger.commit(pool6.groupBy(col("source"))
+                      .agg(sum(col("n_toks")).as("adm_toks"))
+                      .withColumn("bucket", lit("00")),
+                    capsDir(rootDir))
     }
     (Seq(collapsed, batchKeys) ++ counts.map(_.pool)).foreach(graft.PlanMode.release)
     s6.docs
@@ -298,13 +266,7 @@ object PipelineStream {
     // crawl slice per batch vs all available at once) — surfaced for
     // deployments and StreamBench; None keeps the source default
     // (AvailableNow drains everything in one batch).
-    val reader0 = spark.readStream
-      .schema(CorpusStream.docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-    val reader = maxFilesPerTrigger
-      .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir, maxFilesPerTrigger).writeStream
       .queryName(name)
       .outputMode("update")
       .option("checkpointLocation", s"$rootDir/_checkpoint")
@@ -339,7 +301,7 @@ object PipelineStream {
   def reconcile(docs: DataFrame, bench: DataFrame, rootDir: String): Long = {
     import org.apache.hadoop.fs.Path
     val spark = docs.sparkSession
-    val f = CorpusStream.fs(spark, rootDir)
+    val f = Ledger.fs(spark, rootDir)
     val staged = s"$rootDir.reconcile-staging"
     f.delete(new Path(staged), true)
     val admitted = ingestBatch(docs, bench, staged, batchId = "reconciled")
@@ -372,7 +334,7 @@ object PipelineStream {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     val upTo = Window.orderBy(col("stage"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val rows = readOrEmpty(spark, attrDir(rootDir), attritionSchema)
+    val rows = Ledger.read(spark, attrDir(rootDir), attritionSchema)
       .groupBy(col("stage"))
       .agg(sum(col("docs_dropped")).as("d_drop"),
            sum(col("toks_dropped")).as("t_drop"),
@@ -382,6 +344,6 @@ object PipelineStream {
               (sum(col("d_in")).over(all) - sum(col("d_drop")).over(upTo)).as("n_docs"),
               (sum(col("t_in")).over(all) - sum(col("t_drop")).over(upTo)).as("n_tokens"))
     Pipeline.attritionTail(rows,
-      readOrEmpty(spark, docsDir(rootDir), docsLedgerSchema))
+      Ledger.read(spark, docsDir(rootDir), docsLedgerSchema))
   }
 }

@@ -21,11 +21,10 @@ import org.apache.spark.sql.types._
   * batch output over every document ingested so far for ANY arrival
   * order or batching.
   *
-  * Layout and commit discipline are CorpusStream's wholesale: 256
-  * hash-partitioned buckets (low 8 bits of h; ShuffleShards divides 256,
-  * so a shard is a fixed 16-bucket slice and shard-scoped reads prune),
-  * probe-only-matching-buckets ingest dedup on doc_id, staged-rename
-  * appends, single-writer contract.
+  * The ledger is a [[Ledger]] bucketed on the low 8 bits of h
+  * (ShuffleShards divides 256, so a shard is a fixed 16-bucket slice and
+  * shard-scoped reads prune); ingest dedups on doc_id through the
+  * bucket-pruned admit.
   */
 object ShuffleStream {
 
@@ -34,11 +33,6 @@ object ShuffleStream {
     StructField("n_toks", LongType),
     StructField("h", LongType)))
 
-  private def emptyLedger(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      shuffleLedgerSchema)
-
   /** One micro-batch: key → drop doc_ids already in the MATCHING ledger
     * buckets → staged-append the rest. Returns newly admitted docs.
     * Replaying a ledgered document admits nothing (anti-join on
@@ -46,7 +40,6 @@ object ShuffleStream {
     * driver collect (≤ 256 two-hex-char strings by construction).
     */
   private[graft] def ingestBatch(batch: DataFrame, ledgerDir: String): Long = {
-    val spark = batch.sparkSession
     // Collapse in-batch duplicate doc_ids BEFORE the ledger probe
     // (CorpusStream.ingestBatch's discipline): the anti-join only
     // dedupes against history, so without this a doc_id repeated
@@ -61,35 +54,15 @@ object ShuffleStream {
     val keyed = graft.ext.Corpus.shuffleKeyed(batch)
       .groupBy(col("doc_id"))
       .agg(min(col("n_toks")).as("n_toks"), min(col("h")).as("h"))
-      .withColumn("bucket", format_string("%02x", pmod(col("h"), lit(256L))))
-      .localCheckpoint(true) // one stable snapshot: bucket list + probe + write
-    val batchBuckets = keyed.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq // ≤ 256 rows by construction
-    val probe = CorpusStream.bucketPaths(spark, ledgerDir, batchBuckets) match {
-      case Seq() => emptyLedger(spark)
-      case paths => spark.read.schema(shuffleLedgerSchema).parquet(paths: _*)
-    }
-    val fresh = keyed.join(probe.select(col("doc_id")), Seq("doc_id"),
-                           "left_anti")
-      .localCheckpoint(true) // snapshot BEFORE appending to the dirs it read
-    val n = fresh.count()
-    if (n > 0) CorpusStream.stagedAppend(spark, fresh, ledgerDir)
-    n
+      .withColumn("bucket", Ledger.keyBucket(col("h")))
+    Ledger.admit(keyed, ledgerDir, shuffleLedgerSchema, Seq("doc_id"))
   }
 
   /** Full permutation ledger (all buckets); empty/missing dir → empty
-    * frame, same contract as CorpusStream.historyOrEmpty.
+    * frame.
     */
-  def ledger(spark: SparkSession, ledgerDir: String): DataFrame = {
-    if (CorpusStream.fs(spark, ledgerDir)
-          .exists(new org.apache.hadoop.fs.Path(ledgerDir)))
-      spark.read
-        .schema(shuffleLedgerSchema.add(StructField("bucket", StringType)))
-        .option("basePath", ledgerDir)
-        .parquet(ledgerDir)
-        .select(col("doc_id"), col("n_toks"), col("h"))
-    else emptyLedger(spark)
-  }
+  def ledger(spark: SparkSession, ledgerDir: String): DataFrame =
+    Ledger.read(spark, ledgerDir, shuffleLedgerSchema)
 
   /** Per-shard shuffle view folded from the ledger — EXACTLY
     * ext.Corpus.globalShuffle's output over every document ingested so
@@ -104,11 +77,7 @@ object ShuffleStream {
     */
   def runOnce(spark: SparkSession, srcDir: String, ledgerDir: String,
               name: String = "graft_shuffle_ingest"): DataFrame = {
-    val q = spark.readStream
-      .schema(CorpusStream.docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-      .parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir).writeStream
       .queryName(name)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -116,7 +85,7 @@ object ShuffleStream {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+      .awaitTermination()
     shuffleView(spark, ledgerDir)
   }
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.PlanMode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -17,10 +18,9 @@ import org.apache.spark.sql.types._
   * THIS batch; tokens covered by a duplicate occurrence are dropped and
   * the batch's documents are rebuilt exactly like the batch operator
   * (native DropCoveredSpans two-pointer pass). First-seen gram digests
-  * are then appended to the ledger through CorpusStream's bucketed
-  * staged-rename commit — the ledger stores ONLY the 8-byte digest per
-  * gram (membership is all later batches need), Hive-partitioned on
-  * the digest's low byte so a batch probes only its own buckets.
+  * are then appended to a [[Ledger]] — it stores ONLY the 8-byte digest
+  * per gram (membership is all later batches need), bucketed on the
+  * digest's low byte so a batch probes only its own buckets.
   *
   * Batch parity (pinned by spec): micro-batches in ascending doc_id
   * order reproduce ext.Dedup.dedupSubstring's per-document output
@@ -41,11 +41,11 @@ object SubstringStream {
     * the batch operator's exact schema — and appends this batch's
     * first-seen gram digests to the ledger. Stats and the fresh-gram
     * set are snapshotted BEFORE the append (they read the directories
-    * the append writes). Bucket list = bounded driver collect (≤ 256).
+    * the append writes); the caller releases the stats snapshot once it
+    * has consumed it.
     */
   private[graft] def ingestBatch(batch: DataFrame,
                                  ledgerDir: String): DataFrame = {
-    val spark = batch.sparkSession
     // The batch feeds TWO actions (the occurrence snapshot and
     // rebuildStats' scan); un-persisted, each action re-read the
     // micro-batch's source files — a 2× corpus-read amplification
@@ -59,26 +59,17 @@ object SubstringStream {
 
   private def ingestPersisted(batch: DataFrame,
                               ledgerDir: String): DataFrame = {
-    val spark = batch.sparkSession
     val toks = batch.select(col("doc_id"),
                             graft.ops.Ops.tokens(col("text")).as("t"))
     // Gram construction is LITERALLY the batch operator's
     // (Dedup.gramOccurrences) — stream/batch digest agreement is
     // structural, not a copy kept in sync.
-    val occ = graft.ext.Dedup.gramOccurrences(toks)
+    val occ = PlanMode.checkpointTail(graft.ext.Dedup.gramOccurrences(toks)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("gh")).orderBy(col("doc_id"), col("s"))))
-      .withColumn("bucket", format_string("%02x", pmod(col("gh"), lit(256))))
-      .localCheckpoint(true) // one stable snapshot: buckets + probe + append
-    val batchBuckets = occ.select(col("bucket")).distinct()
-      .collect().map(_.getString(0)).toSeq // ≤ 256 rows by construction
-    val probe = CorpusStream.bucketPaths(spark, ledgerDir, batchBuckets) match {
-      case Seq() => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], ledgerSchema)
-      case paths => spark.read.schema(ledgerSchema).parquet(paths: _*)
-    }
-    val marked = occ.join(probe.withColumn("in_hist", lit(1)), Seq("gh"),
-                          "left")
+      .withColumn("bucket", Ledger.keyBucket(col("gh"))))
+    val marked = occ.join(Ledger.probe(occ, ledgerDir, ledgerSchema)
+                            .withColumn("in_hist", lit(1)), Seq("gh"), "left")
     // Duplicate occurrence: seen in an earlier batch, or earlier in this
     // one. Covered-token removal + rebuild = the batch operator's OWN
     // code path (Dedup.rebuildStats).
@@ -86,14 +77,16 @@ object SubstringStream {
       .filter(col("in_hist") === 1 || col("rn") > 1)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("s"))).as("ss"))
-    val stats = graft.ext.Dedup.rebuildStats(toks, removed)
-      .localCheckpoint(true) // snapshot BEFORE appending to probed dirs
+    // snapshot BEFORE appending to probed dirs
+    val stats = PlanMode.checkpointTail(graft.ext.Dedup.rebuildStats(toks, removed))
     // rn == 1 is already one row per distinct gram; first-seen = also
     // absent from history.
-    val fresh = marked.filter(col("rn") === 1 && col("in_hist").isNull)
-      .select(col("gh"), col("bucket"))
-      .localCheckpoint(true)
-    if (fresh.count() > 0) CorpusStream.stagedAppend(spark, fresh, ledgerDir)
+    val (fresh, n) = PlanMode.checkpointObserved(
+      marked.filter(col("rn") === 1 && col("in_hist").isNull)
+        .select(col("gh"), col("bucket")),
+      Seq(count(lit(1))))
+    if (n.getLong(0) > 0) Ledger.commit(fresh, ledgerDir)
+    Seq(occ, fresh).foreach(PlanMode.release)
     stats
   }
 
@@ -115,7 +108,7 @@ object SubstringStream {
     val token = java.util.UUID.randomUUID().toString
     val stageDir = s"$outDir.staging/$token"
     stats.write.mode("overwrite").parquet(stageDir)
-    val f = CorpusStream.fs(spark, outDir)
+    val f = Ledger.fs(spark, outDir)
     f.mkdirs(new Path(outDir))
     require(f.rename(new Path(stageDir), new Path(s"$outDir/batch-$token")),
       s"stats commit rename failed: $stageDir")
@@ -140,28 +133,20 @@ object SubstringStream {
               outDir: String,
               name: String = "graft_substring_ingest",
               maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val reader0 = spark.readStream
-      .schema(CorpusStream.docsSchema)
-      .option("pathGlobFilter", "documents*.parquet")
-    val reader = maxFilesPerTrigger
-      .fold(reader0)(n => reader0.option("maxFilesPerTrigger", n.toString))
-    val q = reader.parquet(srcDir)
-      .writeStream
+    Ledger.documents(spark, srcDir, maxFilesPerTrigger).writeStream
       .queryName(name)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        stagedStatsWrite(batch.sparkSession,
-                         ingestBatch(batch, ledgerDir), outDir); ()
+        val stats = ingestBatch(batch, ledgerDir)
+        stagedStatsWrite(spark, stats, outDir)
+        PlanMode.release(stats)
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    if (CorpusStream.fs(spark, outDir)
-          .exists(new org.apache.hadoop.fs.Path(outDir)))
+      .awaitTermination()
+    if (Ledger.fs(spark, outDir).exists(new org.apache.hadoop.fs.Path(outDir)))
       spark.read.schema(statsSchema)
         .option("recursiveFileLookup", "true").parquet(outDir)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], statsSchema)
+    else Ledger.empty(spark, statsSchema)
   }
 }

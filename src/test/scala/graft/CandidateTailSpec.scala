@@ -27,7 +27,7 @@ class CandidateTailSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark = TestSpark.spark
 
   private def plans(q: String): Seq[(String, SparkPlan)] =
-    Probe.executions(spark, q, TestSpark.Sf).map {
+    Probe.executions(spark, q, TestSpark.Sf).execs.map {
       case (action, qe: QueryExecution) => action -> qe.executedPlan
     }
 

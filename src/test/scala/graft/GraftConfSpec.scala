@@ -148,8 +148,12 @@ class GraftConfSpec extends AnyFunSuite {
       val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")
         .filter(col("id") > 1)
       val local = PlanMode.checkpointTail(df).orderBy("id").collect().toSeq
-      val reliable = withConf("spark.graft.checkpoint.dir", root) {
-        PlanMode.checkpointTail(df).orderBy("id").collect().toSeq
+      // PlanMode pins the context's checkpoint dir on first use; restore
+      // it, or later reliable-mode specs write under this deleted root.
+      val reliable = org.apache.spark.SparkTestHooks.restoringCheckpointDir(spark.sparkContext) {
+        withConf("spark.graft.checkpoint.dir", root) {
+          PlanMode.checkpointTail(df).orderBy("id").collect().toSeq
+        }
       }
       assert(reliable == local,
              "reliable checkpoint must return the same rows as localCheckpoint")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ext.{Corpus, Similarity}
-import graft.streaming.PipelineStream
+import graft.streaming.{CorpusStream, PipelineStream}
 import org.apache.spark.SparkTestHooks
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.SQLExecution
@@ -169,6 +169,22 @@ class JobCountSpec extends AnyFunSuite {
     assert(fired.jobs.length <= 43, s"ingest jobs: ${fired.jobs.length}")
     val counting = fired.executions.values
       .filter(d => d.startsWith("head at") || d.startsWith("count at"))
+    assert(counting.isEmpty, s"counting actions: $counting")
+  }
+
+  // The admit observes its admitted count on the survivors' checkpoint:
+  // two checkpoints, the bucket collect (2 jobs each) and the write. The
+  // ingest this one replaced also ran a count() over the survivors, an
+  // execution of 2 jobs (its map stage and its final aggregate): 9 here.
+  test("a CorpusStream ingestBatch into an empty ledger fires 7 jobs, none a count") {
+    val docs = Tables.documents(spark, TestSpark.Sf)
+    docs.schema
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs_corpus")
+      .toString + "/history"
+    val (admitted, fired) = record(CorpusStream.ingestBatch(docs, dir))
+    assert(admitted > 0)
+    assert(fired.jobs.length == 7, s"ingest jobs: ${fired.jobs.length}")
+    val counting = fired.executions.values.filter(_.startsWith("count at"))
     assert(counting.isEmpty, s"counting actions: $counting")
   }
 

@@ -162,7 +162,7 @@ class PipelineSpec extends AnyFunSuite {
     // The pruning contract: a 1-doc batch's probe path set is AT MOST
     // its one bucket dir, regardless of how many buckets the ledger has.
     val dupText = ("w0 " * 12).trim
-    val paths = CorpusStream.bucketPaths(spark, dir, Seq(sha256Bucket(dupText)))
+    val paths = graft.streaming.Ledger.bucketPaths(spark, dir, Seq(sha256Bucket(dupText)))
     assert(paths.size <= 1 &&
            paths.forall(_.endsWith(s"bucket=${sha256Bucket(dupText)}")))
     assert(paths.size < allBuckets.size)
@@ -260,14 +260,14 @@ class PipelineSpec extends AnyFunSuite {
     // Simulate foreachBatch retrying batch 0 after a successful commit:
     // the second commit carries the same batch-id token and must erase
     // its own prior part-files before renaming in.
-    CompactionStream.commitPartial(spark, partial, ledger, 0L)
-    CompactionStream.commitPartial(spark, partial, ledger, 0L)
+    graft.streaming.Ledger.commit(partial, ledger, Some(0L))
+    graft.streaming.Ledger.commit(partial, ledger, Some(0L))
     val folded = CompactionStream.foldedManifest(spark, ledger)
       .as[(String, Long, Long, Long)].collect().toList
     assert(folded === List(("s", 0L, 5L, 500L)),
            s"retried commit double-counted: $folded")
     // A DIFFERENT batch id is additive, as before.
-    CompactionStream.commitPartial(spark, partial, ledger, 1L)
+    graft.streaming.Ledger.commit(partial, ledger, Some(1L))
     val folded2 = CompactionStream.foldedManifest(spark, ledger)
       .as[(String, Long, Long, Long)].collect().toList
     assert(folded2 === List(("s", 0L, 10L, 1000L)))

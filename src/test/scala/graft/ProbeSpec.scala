@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The dev CLI reads the executions a query actually runs: audit rows
   * and plan dumps cover the checkpoints fired while q_dedup_keep_best's
   * frame is built (its component labels and its members table), not only
-  * its final collect. Profile is smoke-tested on the
+  * its final collect, and audit rows count the jobs run through the RDD
+  * API too. Profile is smoke-tested on the
   * MaxTemperature-shaped registry query.
   */
 class ProbeSpec extends AnyFunSuite {
@@ -29,6 +30,13 @@ class ProbeSpec extends AnyFunSuite {
     val first = Probe.auditRow(spark, Checkpointing, TestSpark.Sf)
     val second = Probe.auditRow(spark, Checkpointing, TestSpark.Sf)
     assert(first == second)
+  }
+
+  // Lloyd steps run through the RDD API: no SQL execution, but a job
+  // each (the trainCodebook pin in JobCountSpec).
+  test("Probe audit counts q_ann_ivf's RDD-API Lloyd-step jobs") {
+    val row = Probe.auditRow(spark, "q_ann_ivf", TestSpark.Sf)
+    assert(row.jobs >= 1 + graft.ext.Similarity.KmIters, row)
   }
 
   test("Probe plan --dump writes one formatted plan per recorded execution") {
